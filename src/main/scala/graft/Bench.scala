@@ -1,12 +1,19 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** SPARK_GRAFT_CPUS as a positive integer, checked before it reaches
+    * local[...] or the JSON record ("*" would start a session and then
+    * write invalid JSON). */
+  def cpusOf(raw: String): Int =
+    raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = cpusOf(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.maxPlanStringLength", "16384")
       .config("spark.sql.session.timeZone", "UTC")
@@ -277,7 +284,10 @@ object Bench {
     // the stdout contract so all gates are diffable across rounds.
     // Additions only: stdout is unchanged.
     locally {
-      val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json")
+      // named by the run's shape, so an 8-core control run does not
+      // overwrite the 32-core record
+      val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
+        s"bench_full-c$cpus-sf$sfNum.json")
       val smapAll = steals.toSeq.sortBy(_._1)
         .map { case (n, v) => s"\"" + n + "\":" + r3(v) }
         .mkString("{", ",", "}")

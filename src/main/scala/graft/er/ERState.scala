@@ -2,28 +2,35 @@ package graft.er
 
 import java.util.SplittableRandom
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.Rng
 import graft.er.model._
+import graft.operators.LoopCheckpoint
 
 /** The distributed sampler state and its Markov transition.
   *
-  * State = Dataset[EntityCluster] keyed by partitionId (+ small driver
-  * state: θ, iteration, seed, last summary). One `step()` is exactly one
-  * shuffle (the groupByKey feeding the sweep — the reference shuffles
-  * twice per sweep, GibbsUpdates.scala:144+150) and one action (the
-  * summary aggregation, which replaces the reference's per-iteration
-  * accumulator pass and is deterministic under task retry).
+  * State = a persisted RDD[EntityCluster] (+ small driver state: θ,
+  * iteration, seed, last summary). One `step()` is one Spark job of two
+  * stages: the clusters are keyed by `partitionId` and shuffled with an
+  * identity partitioner (logical partition p → Spark partition p), each
+  * partition runs its Gibbs sweep and is persisted, and the summary fold
+  * reads the persisted partitions in the same job. The reference shuffles
+  * twice per sweep (GibbsUpdates.scala:144+150). The lineage grows by one
+  * shuffle per step, not by a nested query plan, so step k costs what
+  * step 1 does; `checkpointed()` cuts it. `clusters` is a Dataset view of
+  * the same RDD for readers (linkage samples, saveState).
   */
 final class ERState private (
     val spark: SparkSession,
     val index: Broadcast[ModelIndex],
     val partitioner: EntityPartitioner,
-    val clusters: Dataset[EntityCluster],
+    val clusterRdd: RDD[EntityCluster],
     val theta: DistortionProbs,
     val iteration: Long,
     val baseSeed: Long,
@@ -31,6 +38,9 @@ final class ERState private (
     val summary: SummaryVars) {
 
   import spark.implicits._
+
+  /** The state as a Dataset (lazy; reads the persisted RDD). */
+  lazy val clusters: Dataset[EntityCluster] = spark.createDataset(clusterRdd)
 
   def numPartitions: Int = partitioner.numPartitions
 
@@ -52,15 +62,13 @@ final class ERState private (
   }
 
   /** One Markov transition block: θ draw → `innerSweeps` per-partition
-    * Gibbs sweeps inside a single flatMapGroups (one shuffle on the new
-    * partition keys) → summary aggregation (one action). innerSweeps=1 is
-    * the reference cadence; larger blocks amortize shuffle + scheduling
-    * cost k-fold at the price of k-sweep-stale entity placement and θ
-    * (see GibbsKernel.sweepMany). */
-  /** `retainClusters` keeps THIS state's cluster cache alive after the
+    * Gibbs sweeps after one shuffle on the partition keys → summary fold,
+    * all in one job. innerSweeps=1 is the reference cadence; larger
+    * blocks amortize shuffle + scheduling cost k-fold at the price of
+    * k-sweep-stale entity placement and θ (see GibbsKernel.sweepMany).
+    * `retainClusters` keeps THIS state's cache alive after the
     * transition (the sampler retains just-sampled states so linkage
-    * samples stay lazy projections over cache instead of needing an
-    * eager checkpoint job each; see Sampler.run). */
+    * samples stay lazy projections over cache; see Sampler.run). */
   def step(innerSweeps: Int = 1, retainClusters: Boolean = false): ERState = {
     require(innerSweeps >= 1)
     val it = iteration + innerSweeps
@@ -77,39 +85,47 @@ final class ERState private (
     val chaosFail =
       spark.conf.get(graft.core.Chaos.FailSweepKey, "false").toBoolean
 
-    val next = clusters
-      .groupByKey(_.partitionId)
-      .flatMapGroups { (pid: Int, rows: Iterator[EntityCluster]) =>
+    // HashPartitioner sends Int key p in [0, n) to Spark partition p (an
+    // Int hashes to itself), so a sweep task's partition index is the
+    // logical partition its RNG streams key on
+    val next = clusterRdd
+      .keyBy(_.partitionId)
+      .partitionBy(new HashPartitioner(part.numPartitions))
+      .mapPartitionsWithIndex { (pid, rows) =>
         if (chaosFail) graft.core.Chaos.failFirstAttempt(s"sweep pid=$pid")
         val rngs = sweepIters.map(j =>
           new SplittableRandom(Rng.seedFor(seed, j, pid.toLong)))
-        GibbsKernel.sweepMany(rows.toArray, idxB.value, part, newTheta, rngs, kind)
+        GibbsKernel.sweepMany(rows.map(_._2).toArray, idxB.value, part,
+          newTheta, rngs, kind)
       }
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(ERState.Level)
 
-    val newSummary = ERState.summarize(next, index, newTheta)
-    if (!retainClusters) clusters.unpersist(blocking = false)
+    val newSummary = ERState.materialize(next)(ERState.summarize(next, index, newTheta))
+    if (!retainClusters) clusterRdd.unpersist(blocking = false)
 
     new ERState(spark, index, partitioner, next, newTheta, it, baseSeed,
       samplerKind, newSummary)
   }
 
-  /** Truncate the iterative plan's lineage (reference: periodic RDD
-    * checkpoint every 20 sweeps, Sampler.scala:56). Honors the
+  /** Truncate the chain's lineage (reference: periodic RDD checkpoint
+    * every 20 sweeps, Sampler.scala:56) with one job over an identity
+    * map of the cached state, so no sweep is recomputed. Honors the
     * session's `spark.graft.iterative.checkpoint` policy: `local`
-    * (default) is the fast executor-block truncation; `reliable`
-    * writes the state to the checkpoint dir so a days-long chain on a
+    * (default) keeps the cut in executor blocks; `reliable` also writes
+    * it to the checkpoint dir (a second job) so a days-long chain on a
     * real cluster survives executor loss — the reference's
     * PeriodicRDDCheckpointer posture. The sampler's `checkpointEvery`
     * supplies the cadence, so this is a plain one-shot cut. */
   def checkpointed(): ERState = {
-    val cp =
-      if (graft.operators.LoopCheckpoint.reliableMode(spark)) {
-        graft.operators.LoopCheckpoint.ensureCheckpointDir(spark)
-        clusters.checkpoint(eager = true)
-      } else clusters.localCheckpoint(eager = true)
-    clusters.unpersist(blocking = false)
-    new ERState(spark, index, partitioner, cp, theta, iteration, baseSeed,
+    val cut = clusterRdd.mapPartitions(identity, preservesPartitioning = true)
+      .persist(ERState.Level)
+    if (LoopCheckpoint.reliableMode(spark)) {
+      LoopCheckpoint.ensureCheckpointDir(spark)
+      cut.checkpoint()
+    } else cut.localCheckpoint()
+    ERState.materialize(cut)(cut.count())
+    clusterRdd.unpersist(blocking = false)
+    new ERState(spark, index, partitioner, cut, theta, iteration, baseSeed,
       samplerKind, summary)
   }
 
@@ -132,6 +148,22 @@ final class ERState private (
 
 object ERState {
 
+  /** Serialized: Spark sizes a deserialized block by walking its object
+    * graph (SizeEstimator), which cost more executor CPU per sweep than
+    * (de)serializing the clusters does (OPTIMIZATION_r14.md). */
+  private val Level = StorageLevel.MEMORY_AND_DISK_SER
+
+  /** Run the job that fills the persisted `rdd`. If it fails, the cache
+    * is dropped before the failure propagates, so a failed transition
+    * leaves nothing persisted behind. */
+  private def materialize[A](rdd: RDD[_])(job: => A): A =
+    try job
+    catch {
+      case e: Throwable =>
+        rdd.unpersist(blocking = false)
+        throw e
+    }
+
   /** Reconstruct a state from persisted pieces (IO.loadState — S4 resume).
     * The chain continues exactly where it stopped: same seed discipline,
     * same θ, same iteration counter. */
@@ -147,7 +179,7 @@ object ERState {
       summary: SummaryVars): ERState = {
     val idxB = spark.sparkContext.broadcast(index)
     new ERState(spark, idxB, partitioner,
-      clusters.persist(StorageLevel.MEMORY_AND_DISK), theta, iteration,
+      clusters.rdd.persist(Level), theta, iteration,
       baseSeed, samplerKind, summary)
   }
 
@@ -166,8 +198,6 @@ object ERState {
       partitioner: ModelIndex => EntityPartitioner,
       seed: Long,
       samplerKind: GibbsKernel.SamplerKind = GibbsKernel.Gibbs): ERState = {
-    import spark.implicits._
-
     val withFile = fileIdCol match {
       case Some(f) => records.withColumn("__file", col(f).cast("string"))
       case None => records.withColumn("__file", org.apache.spark.sql.functions.lit("0"))
@@ -183,7 +213,7 @@ object ERState {
         attrNames.map(n => col(n).cast("string").as(n)).toList): _*)
 
     val nAttrs = specs.length
-    val init = projected.map { row =>
+    val init = projected.rdd.map { row =>
       val id = row.getString(0)
       val fileId = row.getString(1)
       val vals = new Array[Int](nAttrs)
@@ -206,26 +236,28 @@ object ERState {
       }
       val rec = StateRecord(id, fileId, vals, dist)
       EntityCluster(part.partitionOf(entityVals), entityVals, Array(rec))
-    }.repartition(math.max(part.numPartitions, spark.sparkContext.defaultParallelism),
-        col("partitionId"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    }.persist(Level)
 
+    // the singletons stay in the input's layout: the first step's
+    // shuffle is what places them on their logical partitions
     val theta = idx.priorTheta
-    val summary = summarize(init, idxB, theta)
+    val summary = materialize(init)(summarize(init, idxB, theta))
     new ERState(spark, idxB, part, init, theta, 0L, seed, samplerKind,
       summary)
   }
 
   /** Single-pass summary over the state: observed-entity/isolate counts,
     * joint log-likelihood, per-(attribute, file) distortion counts, and the
-    * per-record distortion histogram (reference A12 — the accumulator pass
-    * replaced by a typed Aggregator: exactly-once under task retry, one
-    * Dataset aggregation, empty state handled by `zero`). */
+    * per-record distortion histogram (reference A12). One job: each task
+    * folds its partition, and the driver merges the partials in partition
+    * order, so the result (the floating-point sum included) is a fixed
+    * function of the state's layout and exact under task retry. */
   def summarize(
-      ds: Dataset[EntityCluster],
+      rdd: RDD[EntityCluster],
       index: Broadcast[ModelIndex],
-      theta: DistortionProbs): SummaryVars = {
-    val agg = new SummaryAggregator(index, theta)
-    ds.select(agg.toColumn).head()
-  }
+      theta: DistortionProbs): SummaryVars =
+    rdd.sparkContext
+      .runJob(rdd, (cs: Iterator[EntityCluster]) =>
+        SummaryAggregator.fold(cs, index.value, theta))
+      .foldLeft(SummaryAggregator.zero)(SummaryAggregator.merge)
 }

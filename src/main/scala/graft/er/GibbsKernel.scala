@@ -12,9 +12,10 @@ import graft.er.model._
   *
   * The whole sweep is a pure function of (rng seed, partition contents,
   * broadcast model), so it is deterministic under task retry and
-  * repartitioning. It runs inside `flatMapGroups` on the state Dataset;
-  * partition contents are materialized in heap exactly as the reference
-  * does — the entity-space partitioner bounds the per-partition size.
+  * repartitioning. It runs once per logical partition inside the state
+  * RDD's shuffle (ERState.step); partition contents are materialized in
+  * heap exactly as the reference does — the entity-space partitioner
+  * bounds the per-partition size.
   *
   * Model recap: entity values y ~ φ (empirical); distortion indicators
   * z ~ Bernoulli(θ_{attr,file}); record value x = y if z=0, else
@@ -95,7 +96,7 @@ object GibbsKernel {
   case object PCG2 extends SamplerKind
 
   /** One full sweep. Returns the partition's clusters re-keyed by the
-    * partitioner (the caller's groupByKey supplies the shuffle). */
+    * partitioner (the caller's shuffle moves them). */
   def sweep(
       clusters: Array[EntityCluster],
       index: ModelIndex,

@@ -6,12 +6,13 @@ import graft.er.model._
   * entity, as a pure function of the entity's attribute values (reference
   * extension point: partitioning/PartitionFunction.scala:24-43).
   *
-  * In the Dataset world this is just a column value (`partitionId`): the
-  * per-sweep groupByKey shuffles on it, so no custom Spark Partitioner
-  * class is needed. Fitting happens once, driver-side, from the dictionary
-  * statistics already collected in the ModelIndex.
+  * Each cluster carries its entity's partition as `partitionId`; the
+  * per-sweep shuffle sends logical partition p to Spark partition p
+  * (ERState.step). Fitting happens once, driver-side, from the dictionary
+  * statistics already collected in the ModelIndex. `partitionOf` runs on
+  * executors and must be a pure function of the values.
   */
-sealed trait EntityPartitioner extends Serializable {
+trait EntityPartitioner extends Serializable {
   def numPartitions: Int
   def partitionOf(entityValues: Array[Int]): Int
 }

@@ -1,5 +1,6 @@
 package graft.er
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SaveMode}
 
 import graft.er.model._
@@ -54,7 +55,7 @@ object Sampler {
     // keeps them (its samples stay lazy projections over cache, exactly
     // the footprint eager checkpoints had — the caller's cleanup
     // releases everything)
-    var retained = Vector.empty[Dataset[graft.er.model.EntityCluster]]
+    var retained = Vector.empty[RDD[EntityCluster]]
     // durable checkpoint files superseded by a newer cut but possibly
     // still referenced by a retained lazy sample: deleted at the flush
     // that materializes those samples (in-memory chains keep them — the
@@ -76,7 +77,7 @@ object Sampler {
     // after sampling must NOT unpersist them — the next step reads them,
     // and an evicted live state would recompute every sweep since the
     // last checkpoint cut
-    def flush(current: Dataset[graft.er.model.EntityCluster]): Unit = {
+    def flush(current: RDD[EntityCluster]): Unit = {
       if (buffered.nonEmpty) {
         val batch = buffered.reduce(_ unionAll _)
         chainPath match {
@@ -94,55 +95,65 @@ object Sampler {
       }
     }
 
-    var sweep = 0
-    var lastCheckpoint = 0
-    var justSampled = false
-    while (sweep < numSweeps) {
-      val k = math.min(sweepsPerJob, numSweeps - sweep)
-      // a just-sampled state's cluster cache must outlive the step that
-      // supersedes it — its linkage sample reads it lazily
-      state = state.step(k, retainClusters = justSampled)
-      justSampled = false
-      sweep += k
-      if (sweep - lastCheckpoint >= checkpointEvery) {
-        state = state.checkpointed()
-        lastCheckpoint = sweep
-        // supersede ONLY cuts this sampler itself materialized — never
-        // harvest lineage leaves, which could be a CALLER's checkpoint
-        // (e.g. a checkpointed input dataset) that we must not delete.
-        // Deletion waits for durable-chain mode and for any retained
-        // lazy samples to be flushed.
-        if (chainPath.isDefined) {
+    try {
+      var sweep = 0
+      var lastCheckpoint = 0
+      var justSampled = false
+      while (sweep < numSweeps) {
+        val k = math.min(sweepsPerJob, numSweeps - sweep)
+        // a just-sampled state's cluster cache must outlive the step that
+        // supersedes it — its linkage sample reads it lazily
+        state = state.step(k, retainClusters = justSampled)
+        justSampled = false
+        sweep += k
+        if (sweep - lastCheckpoint >= checkpointEvery) {
+          state = state.checkpointed()
+          lastCheckpoint = sweep
+          // supersede ONLY cuts this sampler itself materialized — never
+          // harvest lineage leaves, which could be a CALLER's checkpoint
+          // (e.g. a checkpointed input dataset) that we must not delete.
+          // Deletion waits for durable-chain mode and for any retained
+          // lazy samples to be flushed.
           supersededCheckpoints ++= lastOwnCutFile
-          lastOwnCutFile =
-            graft.operators.LoopCheckpoint.reliableFileOf(state.clusters)
-          if (retained.isEmpty) dropSuperseded()
+          lastOwnCutFile = state.clusterRdd.getCheckpointFile
+          if (chainPath.isDefined && retained.isEmpty) dropSuperseded()
+        }
+        if (sweep > burnIn && (sweep - burnIn) % thin == 0) {
+          // The sample stays LAZY over this state's persisted clusters (no
+          // per-sample checkpoint job); the state is retained until the
+          // sample is materialized (parquet flush) or handed to the caller
+          // (in-memory chain).
+          buffered :+= state.linkageSample()
+          retained :+= state.clusterRdd
+          justSampled = true
+          if (buffered.size >= writeBufferSize) flush(state.clusterRdd)
+          val s = state.summary
+          diags :+= Diagnostics(state.iteration, System.currentTimeMillis() - t0,
+            s.numObservedEntities, s.numIsolates, s.logLikelihood,
+            s.aggDistortions, s.recDistortions)
         }
       }
-      if (sweep > burnIn && (sweep - burnIn) % thin == 0) {
-        // The sample stays LAZY over this state's persisted clusters (no
-        // per-sample checkpoint job); the state is retained until the
-        // sample is materialized (parquet flush) or handed to the caller
-        // (in-memory chain).
-        buffered :+= state.linkageSample()
-        retained :+= state.clusters
-        justSampled = true
-        if (buffered.size >= writeBufferSize) flush(state.clusters)
-        val s = state.summary
-        diags :+= Diagnostics(state.iteration, System.currentTimeMillis() - t0,
-          s.numObservedEntities, s.numIsolates, s.logLikelihood,
-          s.aggDistortions, s.recDistortions)
-      }
+      flush(state.clusterRdd)
+    } catch {
+      case e: Throwable =>
+        // a failed run hands nothing back: release every cache it holds
+        // (the live state's too — the first step would have released the
+        // caller's initial state) and every durable cut it wrote
+        try {
+          (retained :+ state.clusterRdd).foreach(_.unpersist(blocking = false))
+          supersededCheckpoints ++= lastOwnCutFile
+          dropSuperseded()
+        } catch { case c: Throwable => e.addSuppressed(c) }
+        throw e
     }
-    flush(state.clusters)
     // the final flush may find an empty buffer (the last sample already
     // flushed) — superseded cuts and non-final retained caches must
     // still be released in durable-chain mode, where everything sampled
     // is on disk by now
     if (chainPath.isDefined) {
-      retained.filter(_ ne state.clusters)
+      retained.filter(_ ne state.clusterRdd)
         .foreach(_.unpersist(blocking = false))
-      retained = retained.filter(_ eq state.clusters)
+      retained = retained.filter(_ eq state.clusterRdd)
       dropSuperseded()
     }
 

@@ -1,95 +1,70 @@
 package graft.er
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import scala.collection.mutable
 
 import graft.er.model._
 
-/** Typed Aggregator computing the per-sweep SummaryVars in one Dataset
-  * aggregation — the custom-aggregator surface of SURVEY §2.10 (replacing
-  * the reference's AccumulatorV2 map-accumulators, which double-count
-  * under task retry; an Aggregator is exactly-once by construction and
-  * handles the empty state without a special case).
-  *
-  * The buffer mirrors SummaryVars but keeps maps in encoder-friendly
-  * string-keyed form ("attrId|fileId" / attrCount keys).
+/** The per-sweep SummaryVars as a plain fold: `fold` runs once per
+  * partition on the executor, and the driver `merge`s the partials in
+  * partition order (ERState.summarize). This replaces the reference's
+  * AccumulatorV2 map-accumulators, which double-count under task retry:
+  * a retried task recomputes its partition's partial, and the empty
+  * state folds to `zero`.
   */
-final class SummaryAggregator(
-    index: Broadcast[ModelIndex],
-    theta: DistortionProbs)
-  extends Aggregator[EntityCluster, SummaryAggregator.Buf, SummaryVars] {
+private[er] object SummaryAggregator {
 
-  import SummaryAggregator.Buf
+  val zero: SummaryVars = SummaryVars(0L, 0L, 0.0, Map.empty, Map.empty)
 
-  override def zero: Buf = Buf(0L, 0L, 0.0, Map.empty, Map.empty)
-
-  override def reduce(b: Buf, c: EntityCluster): Buf = {
-    val idx = index.value
+  def fold(
+      clusters: Iterator[EntityCluster],
+      idx: ModelIndex,
+      theta: DistortionProbs): SummaryVars = {
     val nA = idx.numAttributes
-    var logLik = b.logLikelihood
-    var aggDist = b.aggDistortions
-    var recDist = b.recDistortions
+    var observed = 0L
+    var isolates = 0L
+    var logLik = 0.0
+    val aggDist = mutable.HashMap.empty[(Int, String), Long]
+    val recDist = mutable.HashMap.empty[Int, Long]
 
-    var a = 0
-    while (a < nA) {
-      logLik += math.log(idx.attributes(a).probs(c.entityValues(a)))
-      a += 1
-    }
-    c.records.foreach { r =>
-      var nDist = 0
-      a = 0
+    clusters.foreach { c =>
+      var a = 0
       while (a < nA) {
-        val x = r.values(a)
-        if (x != MissingValue) {
-          val th = theta(a, r.fileId)
-          if (r.distorted(a)) {
-            nDist += 1
-            val k = s"$a|${r.fileId}"
-            aggDist = aggDist.updated(k, aggDist.getOrElse(k, 0L) + 1)
-            logLik += math.log(th) +
-              math.log(idx.attributes(a).distortionProb(x, c.entityValues(a)))
-          } else {
-            logLik += math.log(1.0 - th)
-          }
-        }
+        logLik += math.log(idx.attributes(a).probs(c.entityValues(a)))
         a += 1
       }
-      recDist = recDist.updated(nDist, recDist.getOrElse(nDist, 0L) + 1)
+      c.records.foreach { r =>
+        var nDist = 0
+        a = 0
+        while (a < nA) {
+          val x = r.values(a)
+          if (x != MissingValue) {
+            val th = theta(a, r.fileId)
+            if (r.distorted(a)) {
+              nDist += 1
+              val k = (a, r.fileId)
+              aggDist(k) = aggDist.getOrElse(k, 0L) + 1
+              logLik += math.log(th) +
+                math.log(idx.attributes(a).distortionProb(x, c.entityValues(a)))
+            } else {
+              logLik += math.log(1.0 - th)
+            }
+          }
+          a += 1
+        }
+        recDist(nDist) = recDist.getOrElse(nDist, 0L) + 1
+      }
+      if (c.records.nonEmpty) observed += 1 else isolates += 1
     }
-    Buf(
-      b.numObservedEntities + (if (c.records.nonEmpty) 1 else 0),
-      b.numIsolates + (if (c.records.isEmpty) 1 else 0),
-      logLik, aggDist, recDist)
+    SummaryVars(observed, isolates, logLik, aggDist.toMap, recDist.toMap)
   }
 
-  override def merge(x: Buf, y: Buf): Buf = Buf(
+  def merge(x: SummaryVars, y: SummaryVars): SummaryVars = SummaryVars(
     x.numObservedEntities + y.numObservedEntities,
     x.numIsolates + y.numIsolates,
     x.logLikelihood + y.logLikelihood,
     mergeCounts(x.aggDistortions, y.aggDistortions),
     mergeCounts(x.recDistortions, y.recDistortions))
 
-  override def finish(b: Buf): SummaryVars = SummaryVars(
-    b.numObservedEntities, b.numIsolates, b.logLikelihood,
-    b.aggDistortions.map { case (k, v) =>
-      val Array(attr, file) = k.split("\\|", 2)
-      (attr.toInt, file) -> v
-    },
-    b.recDistortions)
-
-  override def bufferEncoder: Encoder[Buf] = Encoders.product[Buf]
-  override def outputEncoder: Encoder[SummaryVars] = Encoders.kryo[SummaryVars]
-
   private def mergeCounts[K](a: Map[K, Long], b: Map[K, Long]): Map[K, Long] =
     b.foldLeft(a) { case (acc, (k, v)) => acc.updated(k, acc.getOrElse(k, 0L) + v) }
-}
-
-object SummaryAggregator {
-  final case class Buf(
-      numObservedEntities: Long,
-      numIsolates: Long,
-      logLikelihood: Double,
-      aggDistortions: Map[String, Long],
-      recDistortions: Map[Int, Long])
 }

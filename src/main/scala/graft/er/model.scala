@@ -7,7 +7,7 @@ import graft.core.SimilarityFn
   * (/root/reference/src/main/scala/com/github/cleanzr/dblink/package.scala:28-138).
   *
   * Values are dictionary-encoded to dense ints per attribute; -1 denotes a
-  * missing value. The full sampler state is a Dataset[EntityCluster]
+  * missing value. The full sampler state is an RDD[EntityCluster]
   * keyed by partitionId.
   */
 object model {
