@@ -217,6 +217,46 @@ object Analysis {
         aggregate(transform(col("linkageStructure"), c => size(c)),
           lit(0), (acc, x) => acc + x).as("numRecords"))
 
+  /** A5 + A6 + the sample count in one aggregation over the chain, collected
+    * to the driver (it has one row per iteration, partition and cluster
+    * size, so it stays small). */
+  def chainSizeCounts(chain: Dataset[LinkageSample]): ChainSizeCounts =
+    ChainSizeCounts(chain.toDF()
+      .select(col("iteration"), col("partitionId"),
+        // a chain row without clusters yields one null size, so its
+        // iteration and partition still show
+        explode_outer(transform(col("linkageStructure"), c => size(c)))
+          .as("clustSize"))
+      .groupBy(col("iteration"), col("partitionId"), col("clustSize"))
+      .agg(count(lit(1)).as("n"))
+      .collect().toSeq.map(r => ChainSizeCount(r.getLong(0), r.getInt(1),
+        if (r.isNullAt(2)) None else Some(r.getInt(2)), r.getLong(3))))
+
+  /** `n` clusters of `clustSize` records in one partition of one sample;
+    * `clustSize` is None (and `n` 1) for a sample row without clusters. */
+  final case class ChainSizeCount(iteration: Long, partitionId: Int,
+      clustSize: Option[Int], n: Long)
+
+  /** The collected [[chainSizeCounts]]: the same rows as
+    * [[clusterSizeDistribution]] and [[partitionSizes]], and the number of
+    * samples in the chain. */
+  final case class ChainSizeCounts(rows: Seq[ChainSizeCount]) {
+    /** Distinct iterations: `countDistinct(iteration)` over the chain. */
+    def numSamples: Long = rows.map(_.iteration).distinct.size.toLong
+
+    /** (iteration, clustSize, clusters) — [[clusterSizeDistribution]]. */
+    def clusterSizeDistribution: Seq[(Long, Int, Long)] =
+      rows.flatMap(r => r.clustSize.map(s => (r.iteration, s, r.n)))
+        .groupMapReduce(r => (r._1, r._2))(_._3)(_ + _)
+        .toSeq.map { case ((it, s), n) => (it, s, n) }
+
+    /** (iteration, partitionId, records) — [[partitionSizes]]. */
+    def partitionSizes: Seq[(Long, Int, Long)] =
+      rows.groupMapReduce(r => (r.iteration, r.partitionId))(
+        r => r.clustSize.fold(0L)(_ * r.n))(_ + _)
+        .toSeq.map { case ((it, p), n) => (it, p, n) }
+  }
+
   // --- baselines (reference analysis/baselines.scala) --------------------
 
   /** A13: exact-match clustering — group records agreeing on every given

@@ -240,8 +240,9 @@ object ERProject {
       case other => throw new IllegalArgumentException(s"unknown partitioner: $other")
     }
 
-  /** Execute the configured steps. Returns the SMPC clusters when the
-    * summarize step ran. */
+  /** Execute the configured steps. Returns the shared most probable
+    * clusters, as a lazy uncached plan, when the summarize or the evaluate
+    * step ran. */
   def run(spark: SparkSession, conf: Conf): Option[DataFrame] = {
     val out = conf.outputPath
     val specs = specsOf(conf)
@@ -263,46 +264,67 @@ object ERProject {
       IO.saveState(result.state, stateDir)
     }
 
+    val summarizing = conf.steps.contains("summarize")
+    val evaluating = conf.steps.contains("evaluate")
     val smpc: Option[DataFrame] =
-      if (conf.steps.contains("summarize") || conf.steps.contains("evaluate")) {
+      if (summarizing || evaluating) {
         val chain = IO.readChain(spark, s"$out/linkage-chain.parquet")
-        val clusters = Analysis.sharedMostProbableClusters(chain)
-        if (conf.steps.contains("summarize")) {
-          IO.writeClustersCsv(clusters.select(col("records")), "records",
-            s"$out/shared-most-probable-clusters.csv")
-          IO.writeClusterSizeDistributionCsv(chain,
-            s"$out/cluster-size-distribution.csv")
-          IO.writePartitionSizesCsv(chain, s"$out/partition-sizes.csv")
-        }
+        val counts = Analysis.chainSizeCounts(chain)
+        val clusters =
+          Analysis.sharedMostProbableClusters(chain, counts.numSamples.toDouble)
+        // the clusters CSV and the evaluation read one cached copy
+        clusters.persist()
+        try {
+          if (summarizing) summarize(clusters, counts, out)
+          if (evaluating) conf.entityIdColumn.foreach(
+            evaluate(clusters, records, conf.idColumn, _, out))
+        } finally clusters.unpersist()
         Some(clusters)
       } else None
-
-    if (conf.steps.contains("evaluate")) {
-      conf.entityIdColumn.foreach { entCol =>
-        val truth = records.select(
-          col(conf.idColumn).cast("string").as("recordId"),
-          col(entCol).cast("string").as("clusterId"))
-        val pred = Analysis.membershipFromClusters(
-          smpc.get.select(col("records")), "records")
-        val pw = Analysis.pairwiseMetrics(pred, truth, "recordId", "clusterId").head()
-        val ari = Analysis.adjustedRandIndex(pred, truth, "recordId", "clusterId")
-          .head().getDouble(0)
-        val text =
-          f"""Pairwise metrics
-             |  precision: ${pw.getDouble(0)}%.6f
-             |  recall:    ${pw.getDouble(1)}%.6f
-             |  f1:        ${pw.getDouble(2)}%.6f
-             |Cluster metrics
-             |  adjusted-rand-index: $ari%.6f
-             |""".stripMargin
-        Files.createDirectories(Paths.get(out))
-        Files.writeString(Paths.get(s"$out/evaluation-results.txt"), text)
-      }
-    }
 
     if (conf.steps.contains("copy-files")) copyFilesStep(spark, conf)
 
     smpc
+  }
+
+  /** The summarize step: the shared most probable clusters `smpc` as
+    * `shared-most-probable-clusters.csv`, and the chain's size counts as
+    * the `cluster-size-distribution.csv` and `partition-sizes.csv` pivots. */
+  def summarize(smpc: DataFrame, counts: Analysis.ChainSizeCounts,
+      out: String): Unit = {
+    IO.writeClustersCsv(smpc.select(col("records")), "records",
+      s"$out/shared-most-probable-clusters.csv")
+    IO.writeClusterSizeDistributionCsv(counts, s"$out/cluster-size-distribution.csv")
+    IO.writePartitionSizesCsv(counts, s"$out/partition-sizes.csv")
+  }
+
+  /** The evaluate step: pairwise precision, recall and F1 and the adjusted
+    * Rand index of the shared most probable clusters `smpc` against the
+    * ground-truth `entityIdColumn` of `records`, in one
+    * [[Analysis.clusteringMetrics]] query, written to
+    * `evaluation-results.txt`. Only labelled records count: a record whose
+    * entity id is null (the `nullValue` sentinel) is left out of both
+    * sides, and a predicted cluster keeps its other members. */
+  def evaluate(smpc: DataFrame, records: DataFrame, idColumn: String,
+      entityIdColumn: String, out: String): Unit = {
+    val truth = records
+      .select(col(idColumn).cast("string").as("recordId"),
+        col(entityIdColumn).cast("string").as("clusterId"))
+      .filter(col("clusterId").isNotNull)
+    val pred = Analysis.membershipFromClusters(smpc.select(col("records")), "records")
+      .join(truth.select(col("recordId")), Seq("recordId"), "left_semi")
+    val m = Analysis.clusteringMetrics(pred, truth, "recordId", "clusterId").head()
+    require(!m.isNullAt(3), s"evaluate: no record has an entity id in $entityIdColumn")
+    val text =
+      f"""Pairwise metrics
+         |  precision: ${m.getDouble(0)}%.6f
+         |  recall:    ${m.getDouble(1)}%.6f
+         |  f1:        ${m.getDouble(2)}%.6f
+         |Cluster metrics
+         |  adjusted-rand-index: ${m.getDouble(3)}%.6f
+         |""".stripMargin
+    Files.createDirectories(Paths.get(out))
+    Files.writeString(Paths.get(s"$out/evaluation-results.txt"), text)
   }
 
   /** The copy-files step: copy each named output (plain file or parquet

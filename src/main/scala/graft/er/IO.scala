@@ -37,12 +37,13 @@ object IO {
       .mode("overwrite")
       .csv(path)
 
-  /** S3: read a persisted linkage chain. */
+  /** S3: read a persisted linkage chain. The schema is the sample's, so
+    * opening the chain runs no job to infer it from the Parquet footers. */
   def readChain(spark: SparkSession, path: String): Dataset[LinkageSample] = {
     implicit val enc = Encoders.product[LinkageSample]
     // partitionBy writes partitionId as a directory column (possibly at the
     // end) — reorder through select
-    spark.read.parquet(path)
+    spark.read.schema(enc.schema).parquet(path)
       .select(col("iteration"), col("partitionId").cast("int").as("partitionId"),
         col("linkageStructure"))
       .as[LinkageSample]
@@ -73,29 +74,31 @@ object IO {
       Sampler.diagnosticsCsv(diags, numAttributes, files))
   }
 
-  /** S11: wide CSV pivots of the chain summaries (small outputs, collected
-    * driver-side exactly like the reference's collect+sort). */
-  def writeClusterSizeDistributionCsv(chain: Dataset[LinkageSample], path: String): Unit = {
-    val rows = Analysis.clusterSizeDistribution(chain)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    val sizes = rows.map(_._2).distinct.sorted
-    val header = ("iteration" +: sizes.map(_.toString)).mkString(",")
-    val byIter = rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (it, rs) =>
-      val m = rs.map(r => r._2 -> r._3).toMap
-      (it.toString +: sizes.map(s => m.getOrElse(s, 0L).toString)).mkString(",")
-    }
-    Files.createDirectories(Paths.get(path).getParent)
-    Files.writeString(Paths.get(path), (header +: byIter).mkString("\n"))
-  }
+  /** S11: wide CSV pivots of the chain summaries (small outputs, pivoted
+    * driver-side exactly like the reference's collect+sort). The chain
+    * forms run one aggregation each; a caller writing both pivots passes
+    * one [[Analysis.chainSizeCounts]] to the counts forms instead. */
+  def writeClusterSizeDistributionCsv(chain: Dataset[LinkageSample], path: String): Unit =
+    writeClusterSizeDistributionCsv(Analysis.chainSizeCounts(chain), path)
 
-  def writePartitionSizesCsv(chain: Dataset[LinkageSample], path: String): Unit = {
-    val rows = Analysis.partitionSizes(chain)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
-    val parts = rows.map(_._2).distinct.sorted
-    val header = ("iteration" +: parts.map(p => s"partition-$p")).mkString(",")
-    val byIter = rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (it, rs) =>
+  def writeClusterSizeDistributionCsv(counts: Analysis.ChainSizeCounts, path: String): Unit =
+    writePivotCsv(counts.clusterSizeDistribution, _.toString, path)
+
+  def writePartitionSizesCsv(chain: Dataset[LinkageSample], path: String): Unit =
+    writePartitionSizesCsv(Analysis.chainSizeCounts(chain), path)
+
+  def writePartitionSizesCsv(counts: Analysis.ChainSizeCounts, path: String): Unit =
+    writePivotCsv(counts.partitionSizes, p => s"partition-$p", path)
+
+  /** One line per iteration in order, one column per key in order, 0 where
+    * an iteration has no cell for a key. */
+  private def writePivotCsv(cells: Seq[(Long, Int, Long)], label: Int => String,
+      path: String): Unit = {
+    val keys = cells.map(_._2).distinct.sorted
+    val header = ("iteration" +: keys.map(label)).mkString(",")
+    val byIter = cells.groupBy(_._1).toSeq.sortBy(_._1).map { case (it, rs) =>
       val m = rs.map(r => r._2 -> r._3).toMap
-      (it.toString +: parts.map(p => m.getOrElse(p, 0).toString)).mkString(",")
+      (it.toString +: keys.map(k => m.getOrElse(k, 0L).toString)).mkString(",")
     }
     Files.createDirectories(Paths.get(path).getParent)
     Files.writeString(Paths.get(path), (header +: byIter).mkString("\n"))

@@ -102,6 +102,23 @@ class AnalysisSpec extends AnyFunSuite {
     assert(sizes == Set((1L, 0, 3), (1L, 1, 1), (2L, 0, 3)))
   }
 
+  test("chainSizeCounts: both summaries and the sample count from one pass") {
+    val chain = spark.createDataset(Seq(
+      LinkageSample(1L, 0, Seq(Seq("a", "b"), Seq("c"))),
+      LinkageSample(1L, 1, Seq(Seq("d"))),
+      LinkageSample(2L, 0, Seq(Seq("a"), Seq("b"), Seq("c"))),
+      // a sample row without clusters, alone in its iteration
+      LinkageSample(3L, 1, Seq.empty)))
+    val counts = Analysis.chainSizeCounts(chain)
+    assert(counts.numSamples == 3L)
+    assert(counts.clusterSizeDistribution.toSet ==
+      Analysis.clusterSizeDistribution(chain).as[(Long, Int, Long)].collect().toSet)
+    assert(counts.partitionSizes.toSet ==
+      Analysis.partitionSizes(chain).as[(Long, Int, Int)].collect()
+        .map { case (it, p, n) => (it, p, n.toLong) }.toSet)
+    assert(counts.partitionSizes.contains((3L, 1, 0L)))
+  }
+
   test("exact and near match baselines") {
     val df = Seq(
       ("r1", "ANNA", "SMITH"), ("r2", "ANNA", "SMITH"),
