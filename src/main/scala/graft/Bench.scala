@@ -1,33 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
-  /** SPARK_GRAFT_CPUS as a positive integer, checked before it reaches
-    * local[...] or the JSON record ("*" would start a session and then
-    * write invalid JSON). */
-  def cpusOf(raw: String): Int =
-    raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'"))
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = cpusOf(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.maxPlanStringLength", "16384")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the default 100-entry whole-stage-codegen class cache (a STATIC
-      // conf) thrashes under a 131-query suite: by the time the late
-      // heavy queries run, their JIT-warmed generated classes have been
-      // LRU-evicted and they re-pay compile+JIT on the clock (observed:
-      // q_semantic_dedup 3.5 s with a short query list, 16 s in the full
-      // suite at 0% steal). One compiled class is a few hundred KB of
-      // metaspace — thousands are affordable on any driver
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GateRunner.cpusOf(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GateRunner.session(cpus)
     // absorb session/executor warm-up so the first timed query isn't
     // charged for JVM + codegen + parquet-reader bring-up
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -132,9 +108,7 @@ object Bench {
         // release EVERYTHING it pinned — SQL cache AND raw RDD blocks —
         // and compact the heap before the timed loop, otherwise the
         // expanded old-gen taxes every allocation-heavy gate after
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(true))
+        GateRunner.isolate(spark)
         System.gc()
       }
       // same story for the other driver-paced graph loops: run each on
@@ -212,26 +186,9 @@ object Bench {
         val (st1, tot1) = stealSample()
         val stealPct =
           if (tot1 > tot0) 100.0 * (st1 - st0) / (tot1 - tot0) else 0.0
-        // release caches a query persisted (shingle/sketch/state tables) so
-        // later queries aren't timed under accumulated memory pressure —
-        // including raw RDD blocks (localCheckpoint lineage truncations in
-        // the graph/CC loops), which catalog.clearCache does NOT touch and
-        // which otherwise pile up across 261 gates (measured: +2.9 s on
-        // q_image_ahash alone after one big checkpointing build)
-        spark.catalog.clearCache()
-        // this cleanup runs AFTER dt is recorded, so the release + heap
-        // compaction is off every gate's clock
-        val pinned = spark.sparkContext.getPersistentRDDs.values
-        if (pinned.nonEmpty) {
-          pinned.foreach(_.unpersist(true))
-          System.gc()
-        }
-        // a gate query may install session-wide optimizer state (e.g.
-        // q_join_range_rule's BandedRangeJoinRule + band conf) — reset it so
-        // every later query's plan is independent of execution order
-        spark.experimental.extraOptimizations = Nil
-        try spark.conf.unset(graft.plans.BandedRangeJoinRule.ConfKey)
-        catch { case _: Throwable => () }
+        // per-gate isolation runs AFTER dt is recorded, so the release +
+        // heap compaction is off every gate's clock
+        GateRunner.isolate(spark)
         (dt, stealPct, ok)
       }
       val okAll = rep.forall(_._3)

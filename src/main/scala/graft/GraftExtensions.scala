@@ -93,7 +93,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         graft.functions.StripAccents(exprs.head)
       }))
     // planner tier: interval-containment joins become banded equi-joins
-    // (inert until spark.graft.rangeJoin.bandMicros is set > 0)
+    // (inert until BandedRangeJoinRule.ConfKey is set > 0)
     ext.injectOptimizerRule(_ => graft.plans.BandedRangeJoinRule)
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,19 +8,8 @@ object Verify {
     // optional extra args: run only the named queries (local iteration;
     // the driver always passes exactly sfDir + outDir)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.maxPlanStringLength", "16384")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 131 queries thrash the default 100-entry codegen class cache
-      // (static conf) — see Bench.scala for the measurement
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GateRunner.session(
+      GateRunner.cpusOf(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -31,13 +19,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      spark.catalog.clearCache()
-      // a gate query may install session-wide optimizer state (e.g.
-      // q_join_range_rule's BandedRangeJoinRule + band conf) — reset it so
-      // later queries' plans don't depend on execution order
-      spark.experimental.extraOptimizations = Nil
-      try spark.conf.unset("spark.graft.rangeJoin.bandMicros")
-      catch { case e: Throwable => () }
+      GateRunner.isolate(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -75,51 +75,20 @@ object ConnectedComponents {
         .select(col("id"), col("comp").as("prev"),
           least(col("comp"), coalesce(col("nbMin"), col("comp"))).as("comp"))
     }
-    // Single-action generations (local mode, the KCore pattern): the
-    // fixpoint probe rides a long accumulator inside the internal RDD's
-    // localCheckpoint+count job (each task bumps it for rows whose prev
-    // != comp while copying the row) — one job per generation instead
-    // of a cut plus a separate changed-count scan. Reliable mode keeps
-    // the Truncator path (durable-cut cadence and lifecycle are the
-    // point there).
-    val spark = edges.sparkSession
-    val singleAction = !LoopCheckpoint.reliableMode(spark)
     var it = 0
     var changed = 1L
     while (changed > 0 && it < maxIter) {
-      // TWO propagation rounds per checkpoint + fixpoint probe: the
-      // rounds chain lazily (both aggregation shuffles run in the one
-      // checkpoint job), halving the per-iteration driver round-trips
-      // and checkpoint materializations — the loop's floor cost at
-      // near-dup graph sizes is job latency, not executor work. The
-      // fixpoint test compares round 2 against round 1: a round that
-      // changes nothing proves convergence regardless of round 1.
-      val gen = propagate(propagate(labels))
-      val longIds =
-        gen.schema("comp").dataType == org.apache.spark.sql.types.LongType &&
-        gen.schema("prev").dataType == org.apache.spark.sql.types.LongType
-      if (singleAction && longIds) {
-        // accumulator fixpoint probe is retry-safe here: a retried task
-        // can only over-count rows that genuinely changed (prev == comp
-        // rows add 0 on every attempt), so `changed == 0` is exact
-        val acc = spark.sparkContext.longAccumulator("ccChanged")
-        val base = gen.queryExecution.toRdd
-        val iPrev = gen.schema.fieldIndex("prev")
-        val iComp = gen.schema.fieldIndex("comp")
-        val rdd = base.map { r =>
-          if (r.getLong(iPrev) != r.getLong(iComp)) acc.add(1L)
-          r.copy()
-        }
-        rdd.localCheckpoint()
-        rdd.count()
-        changed = acc.value
-        labels = org.apache.spark.sql.GraftExpressionBridge.ofInternalRows(
-          spark, rdd, gen.schema)
-      } else {
-        val next = cp(gen)
-        changed = next.filter(col("comp") =!= col("prev")).count()
-        labels = next
-      }
+      // TWO propagation rounds per generation: the rounds chain lazily
+      // (both aggregation shuffles run in the one materializing job),
+      // halving the per-iteration driver round-trips and cuts — the
+      // loop's floor cost at near-dup graph sizes is job latency, not
+      // executor work. The fixpoint test compares round 2 against round
+      // 1: a round that changes nothing proves convergence regardless of
+      // round 1. The changed count comes from the same job as the cut.
+      val (next, _, nChanged) = cp.materialize(propagate(propagate(labels)),
+        Some(col("comp") =!= col("prev")))
+      labels = next
+      changed = nChanged
       it += 1
     }
     require(changed == 0,

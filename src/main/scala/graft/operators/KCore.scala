@@ -47,32 +47,14 @@ object KCore {
       .groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= k)
-    // Single-action rounds (local mode): materialize the peel as an
-    // internal RDD whose count() both localCheckpoints the generation
-    // AND returns the loop condition — one job per round instead of
-    // checkpoint-materialize + count. Rows are copied (unsafe-row reuse)
-    // before caching. Reliable mode keeps the Truncator path: its
-    // durable-cut cadence and file lifecycle are the point there, and
-    // the extra count job is noise next to the checkpoint write.
-    // (r12 A/B in BASELINE.md; the earlier negative result stands too:
-    // two-peels-per-checkpoint batching measured SLOWER — the inner
-    // peel feeds BOTH restriction joins of the outer one, so
-    // unmaterialized it computes twice. ConnectedComponents can batch
-    // because its propagation reads the label frame once per round.)
-    val singleAction = !LoopCheckpoint.reliableMode(edges.sparkSession)
+    // One job per round (Truncator.materialize): the cut's row count IS
+    // the loop condition. (r12 A/B in BASELINE.md; the earlier negative
+    // result stands too: two-peels-per-checkpoint batching measured
+    // SLOWER — the inner peel feeds BOTH restriction joins of the outer
+    // one, so unmaterialized it computes twice. ConnectedComponents can
+    // batch because its propagation reads the label frame once per round.)
     while (!converged && it < maxIter) {
-      val peeled = peel(alive)
-      val (next, nextCount) =
-        if (singleAction) {
-          val rdd = peeled.queryExecution.toRdd.map(_.copy())
-          rdd.localCheckpoint()
-          val n = rdd.count()
-          (org.apache.spark.sql.GraftExpressionBridge.ofInternalRows(
-            edges.sparkSession, rdd, peeled.schema), n)
-        } else {
-          val cut = cp(peeled)
-          (cut, cut.count())
-        }
+      val (next, nextCount, _) = cp.materialize(peel(alive))
       converged = nextCount == aliveCount
       alive = next
       aliveCount = nextCount

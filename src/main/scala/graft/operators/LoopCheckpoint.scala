@@ -2,7 +2,9 @@ package graft.operators
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.{coalesce, count, count_if, lit}
 import org.apache.spark.storage.StorageLevel
 
 /** Lineage truncation policy for driver-paced iterative loops
@@ -117,7 +119,9 @@ object LoopCheckpoint {
     * loop-INVARIANT frame (edge lists, degree-annotated fanouts — read
     * every iteration, never superseded). Instantiate ONE per loop
     * invocation (it counts generations, tracks persists to release, and
-    * deletes the superseded durable cut at each new one). */
+    * deletes the superseded durable cut at each new one). A loop that
+    * reads each generation's row count or changed-row count cuts it with
+    * [[Truncator.materialize]] instead, one job per generation. */
   def forLoop(spark: SparkSession): Truncator = {
     val reliable = reliableMode(spark)
     val every =
@@ -177,6 +181,58 @@ object LoopCheckpoint {
         pending += p
         p
       }
+    }
+
+    /** Cut a GENERATION whose size the loop reads: returns the cut frame,
+      * its row count and the number of rows where `changed` holds (0 when
+      * no `changed` is given) — the single-action loop step of KCore,
+      * ConnectedComponents and ShortestPaths.hopDistances.
+      *
+      * Local mode runs ONE job: the generation becomes an internal RDD
+      * whose localCheckpoint + count both cuts lineage and returns the
+      * row count, and a long accumulator counts the flagged rows in the
+      * same pass (rows are copied before caching: unsafe rows are
+      * reused). The changed count is exact at 0 — a row that did not
+      * change adds nothing on any attempt — but a retried task can
+      * re-add its changed rows, so under task retry it may over-count.
+      * Reliable mode is [[apply]], then one aggregation over the cut for
+      * both counts: the durable-cut cadence and file lifecycle are the
+      * point there, and the extra job is noise next to the checkpoint
+      * write. */
+    def materialize(df: DataFrame, changed: Option[Column] = None)
+        : (DataFrame, Long, Long) =
+      if (reliable) {
+        val cut = apply(df)
+        val counts = cut.agg(count(lit(1)), count_if(changed.getOrElse(lit(false))))
+          .head()
+        (cut, counts.getLong(0), counts.getLong(1))
+      } else changed match {
+        // no flag column and no accumulator when the loop reads only the
+        // row count: the generation's plan is the caller's plan, unchanged
+        case None =>
+          val (cut, rows) = cutLocal(df)(_.copy())
+          (cut, rows, 0L)
+        case Some(c) =>
+          val flag = "__loop_changed"
+          val flagged = df.withColumn(flag, coalesce(c, lit(false)))
+          val iFlag = flagged.schema.fieldIndex(flag)
+          val acc = spark.sparkContext.longAccumulator("loopChanged")
+          val (cut, rows) = cutLocal(flagged) { r =>
+            if (r.getBoolean(iFlag)) acc.add(1L)
+            r.copy()
+          }
+          (cut.drop(flag), rows, acc.value)
+      }
+
+    /** Local-mode cut: `copy` maps each internal row to the row kept (a
+      * copy, since unsafe rows are reused); localCheckpoint + count is the
+      * one job. */
+    private def cutLocal(df: DataFrame)(copy: InternalRow => InternalRow)
+        : (DataFrame, Long) = {
+      val rdd = df.queryExecution.toRdd.map(copy)
+      rdd.localCheckpoint()
+      val rows = rdd.count()
+      (GraftExpressionBridge.ofInternalRows(spark, rdd, df.schema), rows)
     }
 
     /** Seal the loop's RESULT: in local mode a no-op (nothing is ever

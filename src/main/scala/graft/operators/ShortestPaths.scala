@@ -34,28 +34,11 @@ object ShortestPaths {
     val e = cp.pin(edges.select(col("src"), col("dst"))
       .repartition(shufflePartitions, col("src")))
 
-    // Single-action rounds (local mode, the KCore pattern): materialize
-    // each generation as an internal RDD whose count() both truncates
-    // lineage AND decides the early exit — the frontier at round k is
-    // empty iff the union added no rows, i.e. the running count did not
-    // grow. One job per round instead of checkpoint-materialize + a
-    // separate emptiness probe. Reliable mode keeps the Truncator path
-    // (durable-cut cadence and file lifecycle are the point there).
-    val singleAction = !LoopCheckpoint.reliableMode(spark)
-    def materialize(df: DataFrame): (DataFrame, Long) =
-      if (singleAction) {
-        val rdd = df.queryExecution.toRdd.map(_.copy())
-        rdd.localCheckpoint()
-        val n = rdd.count()
-        (org.apache.spark.sql.GraftExpressionBridge.ofInternalRows(
-          spark, rdd, df.schema), n)
-      } else {
-        val cut = cp(df)
-        (cut, cut.count())
-      }
-
-    var (dist, distCount) = materialize(seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0)))
+    // one job per round (Truncator.materialize): the frontier at round k
+    // is empty iff the union added no rows, i.e. the running count did
+    // not grow — no separate emptiness probe
+    var (dist, distCount, _) = cp.materialize(seeds.select(col("node"))
+      .distinct().withColumn("dist", lit(0)))
 
     var k = 1
     var frontierEmpty = false
@@ -66,7 +49,7 @@ object ShortestPaths {
         .select(col("dst").as("node")).distinct()
         .join(dist.select(col("node")), Seq("node"), "left_anti")
         .withColumn("dist", lit(k))
-      val (next, nextCount) = materialize(dist.unionByName(reached))
+      val (next, nextCount, _) = cp.materialize(dist.unionByName(reached))
       frontierEmpty = nextCount == distCount
       dist = next
       distCount = nextCount

@@ -604,14 +604,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Embedding-cosine near-duplicate pairs — the fifth dedup modality:
-    * semantic near-dups that share no surface text. Delegates to the
-    * hyperplane-LSH ANN path (VectorOps), thresholded on cosine. */
-  def embeddingNearDuplicatePairs(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      minCosine: Double = 0.95, bits: Int = 8, probes: Int = 6): DataFrame =
-    VectorOps.lshNeighborPairs(corpus, idCol, vecCol, bits, minCosine, probes)
-
   /** Train/test contamination detection: (trainId, testId) pairs whose
     * word-shingle overlap reaches `minOverlap` — the standard eval-set
     * leakage check before training. One shuffle on the shingle key.
@@ -621,14 +613,10 @@ object Dedup {
     * dropped (they carry no discriminative signal and would fan out
     * quadratically). The df prune and the per-shingle posting list come
     * out of ONE aggregation over the exploded train side, so the train
-    * corpus is scanned and shuffled exactly once — no cache needed
-    * (`persistLevel` is retained for signature compatibility and
-    * ignored). */
+    * corpus is scanned and shuffled exactly once — no cache needed. */
   def contaminationPairs(train: DataFrame, test: DataFrame,
       idCol: String, textCol: String, shingleSize: Int = 3,
-      minOverlap: Int = 5, maxShingleDf: Int = 1000,
-      persistLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      minOverlap: Int = 5, maxShingleDf: Int = 1000): DataFrame = {
     // shingles travel as xxhash64 longs: every downstream shuffle, sort
     // and equality runs on 8-byte keys instead of strings. Overlap
     // counts are identical absent a 64-bit collision (~1e-8 across a
@@ -642,7 +630,6 @@ object Dedup {
     // (~8 KB at the default), so the explode after the test join fans
     // out at most df x test-occurrences rows — the same rows the
     // equi-join produced.
-    val _ = persistLevel // retained in the signature; no stage needs a cache
     val tr = shingleTable(train, idCol, textCol, shingleSize)
       .select(col("docId").as("trainId"),
         explode(transform(col("sh"), s => xxhash64(s))).as("s"))

@@ -32,9 +32,6 @@ object Sampling {
       .otherwise("test")
   }
 
-  /** Keep a deterministic ~pct% sample. */
-  def sampleHash(id: Column, pct: Int): Column = hashBucket(id, 100) < pct
-
   /** DSIR-style hashed-n-gram importance log-weights ("Data Selection
     * for Language Models via Importance Resampling", Xie et al. 2023):
     * score every document by how target-like its token distribution is,

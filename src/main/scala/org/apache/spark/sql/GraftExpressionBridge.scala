@@ -10,12 +10,12 @@ object GraftExpressionBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** DataFrame over an already-computed RDD[InternalRow] with a known
-    * schema — the reverse of `queryExecution.toRdd`. Lets a driver-paced
-    * loop materialize a generation and read its count from the SAME
-    * action (rdd.localCheckpoint() + rdd.count()) instead of paying a
-    * separate count job per round, then keep planning against the
-    * result relationally. Rows must be safe to retain (copy unsafe rows
-    * before caching). */
+    * schema — the reverse of `queryExecution.toRdd`. Its one caller is
+    * `graft.operators.LoopCheckpoint.Truncator.materialize`, which cuts a
+    * loop generation and reads its counts from the SAME action
+    * (rdd.localCheckpoint() + rdd.count()), then keeps planning against
+    * the result relationally. Rows must be safe to retain (copy unsafe
+    * rows before caching). */
   def ofInternalRows(
       spark: SparkSession,
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],

@@ -14,19 +14,10 @@ package graft
 object QueryProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
     val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.maxPlanStringLength", "16384")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GateRunner.session(
+      GateRunner.cpusOf(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
     if (sys.env.get("SPARK_GRAFT_RELIABLE").contains("1")) {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-profile-ckpt").toString

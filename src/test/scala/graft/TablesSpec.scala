@@ -68,4 +68,17 @@ class TablesSpec extends AnyFunSuite {
     val li = Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
     assert(li.schema("l_shipdate").dataType == TimestampType)
   }
+
+  test("invalidate: the next load re-lists a regenerated table directory") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables").toString
+    def write(n: Int, files: Int): Unit = (1 to n).toDF("r_regionkey")
+      .repartition(files).write.mode("overwrite").parquet(s"$dir/region.parquet")
+    write(3, 1)
+    assert(Tables.load(spark, dir, "region").count() == 3)
+    // regenerated in place: new row count, new part files
+    write(5, 2)
+    Tables.invalidate(spark, dir, "region")
+    assert(Tables.load(spark, dir, "region").count() == 5)
+  }
 }

@@ -62,7 +62,9 @@ object TestSpark {
       .master("local[4, 2]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      // same extension surface as production (Verify/Bench load it too)
+      // the extension surface a deployment installs through
+      // spark.sql.extensions (GateRunner's session does not: gates call
+      // the Scala API)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       // Deep iterative plans (MCMC) otherwise render multi-GB debug strings
       // at persist() time — the string is UI-only, cap it.
@@ -70,7 +72,7 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // 131-query suites thrash the default 100-entry codegen class cache
-      // (static conf) — see Bench.scala for the measurement
+      // (static conf) — see GateRunner.session for the measurement
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .getOrCreate()
     s.sparkContext.addSparkListener(hygieneListener)

@@ -53,7 +53,7 @@ class LoopCheckpointSpec extends AnyFunSuite {
     }.toDF("a", "b")
   }
 
-  test("single-action CC: deep path converges exactly; int ids take the fallback") {
+  test("single-action CC: deep path converges exactly; Int ids alike") {
     // a 33-node path needs several doubled propagation generations —
     // the accumulator-probed single-action rounds (r12) must stop on
     // the exact fixpoint, not early, and label everything with node 0
@@ -61,8 +61,9 @@ class LoopCheckpointSpec extends AnyFunSuite {
     val got = ConnectedComponents.components(path)
       .as[(Long, Long)].collect().toMap
     assert(got.size == 33 && got.values.forall(_ == 0L))
-    // INT-typed ids route through the two-job fallback (the internal-row
-    // probe reads Long fields) — result must be identical modulo type
+    // INT-typed ids take the same single-action generations (the changed
+    // flag is a boolean column, whatever the id type) — result must be
+    // identical modulo type
     val gotInt = ConnectedComponents
       .components((0 until 32).map(i => (i, i + 1)).toDF("a", "b"))
       .as[(Int, Int)].collect().toMap
@@ -88,6 +89,19 @@ class LoopCheckpointSpec extends AnyFunSuite {
     // the chain peels away over several rounds; the rings survive
     assert(rel == base && base.map(_._1) ==
       ((0 until 12) ++ (20 until 28)).map(_.toLong).toSet)
+  }
+
+  test("hop distances: reliable == local") {
+    val dedges = edges.select($"a".as("src"), $"b".as("dst"))
+    val seeds = Seq(0L, 20L, 40L).toDF("node")
+    val base = ShortestPaths.hopDistances(dedges, seeds, maxHops = 8)
+      .as[(Long, Int)].collect().toSet
+    val rel = withReliable {
+      ShortestPaths.hopDistances(dedges, seeds, maxHops = 8)
+        .as[(Long, Int)].collect().toSet
+    }
+    // the chain is directed 40 -> 52, so 8 hops stop short of its end
+    assert(rel == base && base.contains((48L, 8)) && !base.exists(_._1 == 49L))
   }
 
   test("pagerank: reliable == local (bit-exact)") {
