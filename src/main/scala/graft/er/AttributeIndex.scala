@@ -224,12 +224,6 @@ object AttributeIndex {
     * it, the distributed length-blocked self-join takes over. */
   private val localNeighborBuildMax = 4096
 
-  /** Driver-local neighbor build for small dictionaries: same length-gap
-    * prune as the distributed join (pairs wider than
-    * `maxLengthGap(shorter)` are provably sub-threshold), same codegen
-    * similarity kernel ([[graft.functions.LevenshteinSim.sim]]), so the
-    * result is bit-identical to [[buildNeighbors]] — only the job count
-    * changes (zero). */
   /** Driver-local ALL-PAIRS neighbor build for similarities with no
     * length-blocking bound (Jaro-Winkler): every pair is evaluated with
     * the similarity's own kernel. Quadratic — callers cap the domain. */
@@ -264,50 +258,17 @@ object AttributeIndex {
     (outN, outS)
   }
 
+  /** Driver-local neighbor build for small dictionaries: same length-gap
+    * prune as the distributed join (pairs wider than
+    * `maxLengthGap(shorter)` are provably sub-threshold), same codegen
+    * similarity kernel ([[graft.functions.LevenshteinSim.sim]]), so the
+    * result is bit-identical to [[buildNeighbors]] — only the job count
+    * changes (zero). The pair loop runs on the common fork-join pool
+    * ([[LocalNeighbors]]). */
   private[er] def buildNeighborsLocal(
       values: Array[String],
-      lev: LevenshteinSimilarity): (Array[Array[Int]], Array[Array[Double]]) = {
-    import org.apache.spark.unsafe.types.UTF8String
-    val n = values.length
-    val utf8 = values.map(UTF8String.fromString)
-    val nbrs = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[(Int, Double)])
-    // lengths in CODE POINTS: the similarity kernel is code-point based,
-    // so d >= |Δlen| (the gap bound's soundness) only holds in that
-    // unit — a UTF-16 length difference can exceed the edit distance
-    // on astral characters and silently prune a real neighbor pair
-    val cpLen = values.map(v => v.codePointCount(0, v.length))
-    var i = 0
-    while (i < n) {
-      val li = cpLen(i)
-      var j = i + 1
-      while (j < n) {
-        val lj = cpLen(j)
-        val shorter = math.min(li, lj)
-        val gap = lev.maxLengthGap(shorter)
-        if (math.abs(li - lj) <= math.min(gap, 64)) {
-          val s = graft.functions.LevenshteinSim.sim(
-            utf8(i), utf8(j), lev.threshold, lev.maxSimilarity)
-          if (s > 0.0) {
-            val e = math.exp(s)
-            nbrs(i) += ((j, e))
-            nbrs(j) += ((i, e))
-          }
-        }
-        j += 1
-      }
-      i += 1
-    }
-    val outN = new Array[Array[Int]](n)
-    val outS = new Array[Array[Double]](n)
-    i = 0
-    while (i < n) {
-      val sorted = nbrs(i).sortBy(_._1).toArray
-      outN(i) = sorted.map(_._1)
-      outS(i) = sorted.map(_._2)
-      i += 1
-    }
-    (outN, outS)
-  }
+      lev: LevenshteinSimilarity): (Array[Array[Int]], Array[Array[Double]]) =
+    LocalNeighbors.levenshtein(values, lev, parallel = true)
 
   private[er] def buildNeighbors(
       spark: SparkSession,
@@ -371,6 +332,69 @@ object AttributeIndex {
     val outN = new Array[Array[Int]](n)
     val outS = new Array[Array[Double]](n)
     var i = 0
+    while (i < n) {
+      val sorted = nbrs(i).sortBy(_._1).toArray
+      outN(i) = sorted.map(_._1)
+      outS(i) = sorted.map(_._2)
+      i += 1
+    }
+    (outN, outS)
+  }
+}
+
+/** The driver-local Levenshtein neighbor build
+  * ([[AttributeIndex.buildNeighborsLocal]]). Its O(V²) pair loop runs in
+  * parallel over the first value of each pair on the common fork-join
+  * pool: each value i collects its hits j > i, and the hits are appended
+  * in i order, so the sorted lists are the sequential loop's, bit for
+  * bit. */
+private[er] object LocalNeighbors {
+
+  def levenshtein(
+      values: Array[String],
+      lev: LevenshteinSimilarity,
+      parallel: Boolean): (Array[Array[Int]], Array[Array[Double]]) = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val n = values.length
+    val utf8 = values.map(UTF8String.fromString)
+    // lengths in CODE POINTS: the similarity kernel is code-point based,
+    // so d >= |Δlen| (the gap bound's soundness) only holds in that
+    // unit — a UTF-16 length difference can exceed the edit distance
+    // on astral characters and silently prune a real neighbor pair
+    val cpLen = values.map(v => v.codePointCount(0, v.length))
+    val hits = new Array[Array[(Int, Double)]](n)
+    def pairsOf(i: Int): Unit = {
+      val li = cpLen(i)
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
+      var j = i + 1
+      while (j < n) {
+        val lj = cpLen(j)
+        val shorter = math.min(li, lj)
+        val gap = lev.maxLengthGap(shorter)
+        if (math.abs(li - lj) <= math.min(gap, 64)) {
+          val s = graft.functions.LevenshteinSim.sim(
+            utf8(i), utf8(j), lev.threshold, lev.maxSimilarity)
+          if (s > 0.0) out += ((j, math.exp(s)))
+        }
+        j += 1
+      }
+      hits(i) = out.toArray
+    }
+    if (parallel) java.util.stream.IntStream.range(0, n).parallel().forEach(i => pairsOf(i))
+    else (0 until n).foreach(pairsOf)
+
+    val nbrs = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[(Int, Double)])
+    var i = 0
+    while (i < n) {
+      hits(i).foreach { case (j, e) =>
+        nbrs(i) += ((j, e))
+        nbrs(j) += ((i, e))
+      }
+      i += 1
+    }
+    val outN = new Array[Array[Int]](n)
+    val outS = new Array[Array[Double]](n)
+    i = 0
     while (i < n) {
       val sorted = nbrs(i).sortBy(_._1).toArray
       outN(i) = sorted.map(_._1)

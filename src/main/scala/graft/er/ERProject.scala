@@ -262,6 +262,7 @@ object ERProject {
       IO.writeDiagnosticsCsv(result.diagnostics, specs.length,
         init.index.value.fileSizes.keys.toSeq.sorted, s"$out/diagnostics.csv")
       IO.saveState(result.state, stateDir)
+      result.state.release()
     }
 
     val summarizing = conf.steps.contains("summarize")

@@ -2,6 +2,8 @@ package graft.er
 
 import java.util.SplittableRandom
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
@@ -15,22 +17,31 @@ import graft.operators.LoopCheckpoint
 
 /** The distributed sampler state and its Markov transition.
   *
-  * State = a persisted RDD[EntityCluster] (+ small driver state: θ,
-  * iteration, seed, last summary). One `step()` is one Spark job of two
-  * stages: the clusters are keyed by `partitionId` and shuffled with an
-  * identity partitioner (logical partition p → Spark partition p), each
-  * partition runs its Gibbs sweep and is persisted, and the summary fold
-  * reads the persisted partitions in the same job. The reference shuffles
-  * twice per sweep (GibbsUpdates.scala:144+150). The lineage grows by one
-  * shuffle per step, not by a nested query plan, so step k costs what
-  * step 1 does; `checkpointed()` cuts it. `clusters` is a Dataset view of
-  * the same RDD for readers (linkage samples, saveState).
+  * State = a static part, broadcast once per chain (the [[ModelIndex]]
+  * and the [[RecordTable]] of every record's id, file and values), and a
+  * dynamic part: a persisted RDD holding ONE [[StateBlock]] per logical
+  * partition (Spark partition p holds exactly the entities keyed to p),
+  * plus small driver state (θ, iteration, seed, last summary). A sweep
+  * moves and serializes only primitive arrays of values, record numbers
+  * and distortion bits.
+  *
+  * One `step()` is one Spark job of two stages: each partition's block is
+  * swept and split into one block per destination partition, the pieces
+  * are shuffled with an identity partitioner (logical partition p → Spark
+  * partition p) and merged in source-partition order and persisted, and
+  * the summary fold reads the persisted blocks in the same job. The
+  * reference shuffles twice per sweep (GibbsUpdates.scala:144+150). The
+  * lineage grows by one shuffle per step, not by a nested query plan, so
+  * step k costs what step 1 does; `checkpointed()` cuts it. Record ids
+  * come back only at the edges: `linkageSample`, `currentClusters` and
+  * the `clusters` view (saveState) expand the blocks through the table.
   */
 final class ERState private (
     val spark: SparkSession,
     val index: Broadcast[ModelIndex],
+    val records: Broadcast[RecordTable],
     val partitioner: EntityPartitioner,
-    val clusterRdd: RDD[EntityCluster],
+    val clusterRdd: RDD[StateBlock],
     val theta: DistortionProbs,
     val iteration: Long,
     val baseSeed: Long,
@@ -39,8 +50,16 @@ final class ERState private (
 
   import spark.implicits._
 
-  /** The state as a Dataset (lazy; reads the persisted RDD). */
-  lazy val clusters: Dataset[EntityCluster] = spark.createDataset(clusterRdd)
+  /** The state as `EntityCluster`s, partition by partition (lazy; reads
+    * the persisted blocks). */
+  def clusterView: RDD[EntityCluster] = {
+    val table = records
+    clusterRdd.mapPartitionsWithIndex((pid, blocks) =>
+      blocks.flatMap(_.clusters(pid, table.value)))
+  }
+
+  /** The state as a Dataset (lazy; reads the persisted blocks). */
+  lazy val clusters: Dataset[EntityCluster] = spark.createDataset(clusterView)
 
   def numPartitions: Int = partitioner.numPartitions
 
@@ -62,10 +81,10 @@ final class ERState private (
   }
 
   /** One Markov transition block: θ draw → `innerSweeps` per-partition
-    * Gibbs sweeps after one shuffle on the partition keys → summary fold,
-    * all in one job. innerSweeps=1 is the reference cadence; larger
-    * blocks amortize shuffle + scheduling cost k-fold at the price of
-    * k-sweep-stale entity placement and θ (see GibbsKernel.sweepMany).
+    * Gibbs sweeps → one shuffle of the re-keyed blocks → summary fold, all
+    * in one job. innerSweeps=1 is the reference cadence; larger blocks
+    * amortize shuffle + scheduling cost k-fold at the price of k-sweep-
+    * stale entity placement and θ (see GibbsKernel.sweepBlock).
     * `retainClusters` keeps THIS state's cache alive after the
     * transition (the sampler retains just-sampled states so linkage
     * samples stay lazy projections over cache; see Sampler.run). */
@@ -76,35 +95,52 @@ final class ERState private (
     val newTheta = resampleTheta(driverRng)
 
     val idxB = index
+    val table = records
     val part = partitioner
     val kind = samplerKind
     val seed = baseSeed
     val sweepIters = (iteration + 1) to it
+    val dense = ERState.dense(table.value, newTheta)
+    val nA = idxB.value.numAttributes
     // chaos hook (retry-determinism spec): resolved on the driver,
     // inert unless the session opts in — see graft.core.Chaos
     val chaosFail =
       spark.conf.get(graft.core.Chaos.FailSweepKey, "false").toBoolean
 
-    // HashPartitioner sends Int key p in [0, n) to Spark partition p (an
-    // Int hashes to itself), so a sweep task's partition index is the
-    // logical partition its RNG streams key on
+    // Spark partition p holds logical partition p's block, so a sweep
+    // task's partition index is the logical partition its RNG streams key
+    // on; HashPartitioner sends Int key p in [0, n) back to Spark
+    // partition p (an Int hashes to itself). The pieces travel encoded
+    // (StateBlock.encode: varints, entity values against a member's
+    // record), typed AnyRef: a primitive-array value type would make Spark
+    // switch this shuffle to Kryo, loading it into the driver for no gain
     val next = clusterRdd
-      .keyBy(_.partitionId)
-      .partitionBy(new HashPartitioner(part.numPartitions))
-      .mapPartitionsWithIndex { (pid, rows) =>
+      .mapPartitionsWithIndex { (pid, blocks) =>
         if (chaosFail) graft.core.Chaos.failFirstAttempt(s"sweep pid=$pid")
         val rngs = sweepIters.map(j =>
           new SplittableRandom(Rng.seedFor(seed, j, pid.toLong)))
-        GibbsKernel.sweepMany(rows.map(_._2).toArray, idxB.value, part,
-          newTheta, rngs, kind)
+        val t = table.value
+        GibbsKernel.sweepBlock(StateBlock.concat(nA, blocks.toSeq), t,
+          idxB.value, part, dense, rngs, kind)
+          .map { case (dest, b) => (dest, StateBlock.encode(pid, b, t): AnyRef) }
       }
+      .partitionBy(new HashPartitioner(part.numPartitions))
+      .mapPartitions(
+        { pieces =>
+          val t = table.value
+          val bySource = pieces.map(p =>
+            StateBlock.decode(p._2.asInstanceOf[Array[Byte]], t)).toSeq.sortBy(_._1)
+          Iterator(StateBlock.concat(nA, bySource.map(_._2)))
+        },
+        preservesPartitioning = true)
       .persist(ERState.Level)
 
-    val newSummary = ERState.materialize(next)(ERState.summarize(next, index, newTheta))
+    val newSummary =
+      ERState.materialize(next)(ERState.summarize(next, index, records, newTheta))
     if (!retainClusters) clusterRdd.unpersist(blocking = false)
 
-    new ERState(spark, index, partitioner, next, newTheta, it, baseSeed,
-      samplerKind, newSummary)
+    new ERState(spark, index, records, partitioner, next, newTheta, it,
+      baseSeed, samplerKind, newSummary)
   }
 
   /** Truncate the chain's lineage (reference: periodic RDD checkpoint
@@ -125,33 +161,48 @@ final class ERState private (
     } else cut.localCheckpoint()
     ERState.materialize(cut)(cut.count())
     clusterRdd.unpersist(blocking = false)
-    new ERState(spark, index, partitioner, cut, theta, iteration, baseSeed,
-      samplerKind, summary)
+    new ERState(spark, index, records, partitioner, cut, theta, iteration,
+      baseSeed, samplerKind, summary)
   }
 
   /** Current linkage structure, one row per partition (reference A1,
-    * State.scala:102-112); isolates dropped (P5). */
+    * State.scala:102-112); isolates dropped (P5). Narrow: partition p's
+    * block is already logical partition p, so no shuffle and no encoder of
+    * whole clusters. */
   def linkageSample(): Dataset[LinkageSample] = {
     val it = iteration
-    clusters
-      .filter(_.records.nonEmpty)
-      .groupByKey(_.partitionId)
-      .mapGroups { (pid, rows) =>
-        LinkageSample(it, pid, rows.map(_.records.map(_.id).toSeq).toSeq)
-      }
+    val table = records
+    spark.createDataset(clusterRdd.mapPartitionsWithIndex { (pid, blocks) =>
+      val linkage = blocks.flatMap(_.linkage(table.value)).toSeq
+      if (linkage.isEmpty) Iterator.empty
+      else Iterator(LinkageSample(it, pid, linkage))
+    })
   }
 
   /** Predicted clusters (record-id sets) at the current state. */
-  def currentClusters(): Dataset[Seq[String]] =
-    clusters.filter(_.records.nonEmpty).map(_.records.map(_.id).toSeq)
+  def currentClusters(): Dataset[Seq[String]] = {
+    val table = records
+    spark.createDataset(clusterRdd.mapPartitions(_.flatMap(_.linkage(table.value))))
+  }
+
+  /** Drop this state's persisted blocks and destroy its broadcasts (the
+    * model index and the record table, shared by every state of the
+    * chain). Call it once the chain's last state has been read (saved);
+    * no state of the chain is usable afterwards. */
+  def release(): Unit = {
+    clusterRdd.unpersist(blocking = false)
+    records.destroy()
+    index.destroy()
+  }
 }
 
 object ERState {
 
-  /** Serialized: Spark sizes a deserialized block by walking its object
-    * graph (SizeEstimator), which cost more executor CPU per sweep than
-    * (de)serializing the clusters does (OPTIMIZATION_r14.md). */
-  private val Level = StorageLevel.MEMORY_AND_DISK_SER
+  /** Deserialized: a block is a handful of primitive arrays, which Spark
+    * sizes without walking an object graph, so a step neither serializes
+    * the blocks it persists nor deserializes the ones it reads (the sweep
+    * copies a block before it mutates anything). */
+  private val Level = StorageLevel.MEMORY_AND_DISK
 
   /** Run the job that fills the persisted `rdd`. If it fails, the cache
     * is dropped before the failure propagates, so a failed transition
@@ -166,7 +217,9 @@ object ERState {
 
   /** Reconstruct a state from persisted pieces (IO.loadState — S4 resume).
     * The chain continues exactly where it stopped: same seed discipline,
-    * same θ, same iteration counter. */
+    * same θ, same iteration counter. The record table is rebuilt from the
+    * clusters' records (numbered in id order, as at initialize), and each
+    * cluster goes back into its partition's block. */
   def resume(
       spark: SparkSession,
       index: ModelIndex,
@@ -177,10 +230,29 @@ object ERState {
       baseSeed: Long,
       samplerKind: GibbsKernel.SamplerKind,
       summary: SummaryVars): ERState = {
-    val idxB = spark.sparkContext.broadcast(index)
-    new ERState(spark, idxB, partitioner,
-      clusters.rdd.persist(Level), theta, iteration,
-      baseSeed, samplerKind, summary)
+    val (table, blocks) = StateBlock.fromClusters(index.numAttributes,
+      clusters.collect(), partitioner.numPartitions, _.partitionId)
+    fromBlocks(spark, spark.sparkContext.broadcast(index), table, partitioner,
+      blocks, theta, iteration, baseSeed, samplerKind, summary)
+  }
+
+  /** A state whose logical partition p is `blocks(p)`, persisted at
+    * Spark partition p (not yet materialized). */
+  private def fromBlocks(
+      spark: SparkSession,
+      index: Broadcast[ModelIndex],
+      table: RecordTable,
+      partitioner: EntityPartitioner,
+      blocks: Array[StateBlock],
+      theta: DistortionProbs,
+      iteration: Long,
+      baseSeed: Long,
+      samplerKind: GibbsKernel.SamplerKind,
+      summary: SummaryVars): ERState = {
+    val rdd = spark.sparkContext.parallelize(blocks.toSeq, blocks.length)
+      .persist(Level)
+    new ERState(spark, index, spark.sparkContext.broadcast(table), partitioner,
+      rdd, theta, iteration, baseSeed, samplerKind, summary)
   }
 
   /** Deterministic initialization (reference K13, State.scala:195-334
@@ -188,7 +260,10 @@ object ERState {
     * starts as its own singleton entity — entity values copied from the
     * record, missing attributes drawn from the empirical prior (seeded by
     * record id, so init is retry-deterministic), no distortion anywhere,
-    * θ at its prior mean. */
+    * θ at its prior mean. The records are encoded on the executors and
+    * collected into the record table; the singletons are placed on their
+    * logical partitions on the driver, so the state starts in the layout
+    * every step keeps. */
   def initialize(
       spark: SparkSession,
       records: DataFrame, // columns: id, fileId, attr columns (all strings)
@@ -212,52 +287,72 @@ object ERState {
         col("__file").as("fileId") ::
         attrNames.map(n => col(n).cast("string").as(n)).toList): _*)
 
-    val nAttrs = specs.length
-    val init = projected.rdd.map { row =>
-      val id = row.getString(0)
-      val fileId = row.getString(1)
-      val vals = new Array[Int](nAttrs)
-      val dist = new Array[Boolean](nAttrs)
-      val rng = new SplittableRandom(Rng.seedFor(seed, 0L, id.hashCode.toLong))
-      var a = 0
-      while (a < nAttrs) {
-        val raw = if (row.isNullAt(2 + a)) null else row.getString(2 + a)
-        vals(a) = idxB.value.attributes(a).idOf(raw)
-        a += 1
+    val nA = specs.length
+    // one (ids, files, values) chunk per input partition
+    val chunks = projected.rdd.mapPartitions { rows =>
+      val ids = ArrayBuffer.empty[String]
+      val files = ArrayBuffer.empty[String]
+      val vals = ArrayBuffer.empty[Int]
+      rows.foreach { row =>
+        ids += row.getString(0)
+        files += row.getString(1)
+        var a = 0
+        while (a < nA) {
+          vals += idxB.value.attributes(a).idOf(
+            if (row.isNullAt(2 + a)) null else row.getString(2 + a))
+          a += 1
+        }
       }
-      // entity values: copy record, impute missing from the empirical prior
-      val entityVals = new Array[Int](nAttrs)
-      a = 0
-      while (a < nAttrs) {
-        entityVals(a) =
-          if (vals(a) != MissingValue) vals(a)
-          else idxB.value.attributes(a).samplePowered(0, rng)
-        a += 1
-      }
-      val rec = StateRecord(id, fileId, vals, dist)
-      EntityCluster(part.partitionOf(entityVals), entityVals, Array(rec))
-    }.persist(Level)
+      Iterator((ids.toArray, files.toArray, vals.toArray))
+    }.collect()
+    val ids = chunks.flatMap(_._1)
+    val (table, _) = RecordTable.build(nA, ids, chunks.flatMap(_._2),
+      chunks.flatMap(_._3))
 
-    // the singletons stay in the input's layout: the first step's
-    // shuffle is what places them on their logical partitions
+    // entity values: copy the record, impute missing from the empirical prior
+    val blocks = Array.fill(part.numPartitions)(new StateBlock.Builder(nA))
+    val clean = new Array[Boolean](nA)
+    var r = 0
+    while (r < table.size) {
+      val rng = new SplittableRandom(Rng.seedFor(seed, 0L, table.id(r).hashCode.toLong))
+      val entityVals = Array.tabulate(nA) { a =>
+        val v = table.value(r, a)
+        if (v != MissingValue) v else idx.attributes(a).samplePowered(0, rng)
+      }
+      val b = blocks(part.partitionOf(entityVals))
+      b.entity(entityVals)
+      b.member(r, clean, 0)
+      r += 1
+    }
+
     val theta = idx.priorTheta
-    val summary = materialize(init)(summarize(init, idxB, theta))
-    new ERState(spark, idxB, part, init, theta, 0L, seed, samplerKind,
-      summary)
+    val state = fromBlocks(spark, idxB, table, part, blocks.map(_.result()),
+      theta, 0L, seed, samplerKind, SummaryAggregator.zero)
+    val summary = materialize(state.clusterRdd)(
+      summarize(state.clusterRdd, idxB, state.records, theta))
+    new ERState(spark, idxB, state.records, part, state.clusterRdd, theta, 0L,
+      seed, samplerKind, summary)
   }
+
+  /** θ in the kernel's dense layout for `table`'s files. */
+  private def dense(table: RecordTable, theta: DistortionProbs): GibbsKernel.Theta =
+    new GibbsKernel.Theta(table.denseTheta(theta), table.files.length)
 
   /** Single-pass summary over the state: observed-entity/isolate counts,
     * joint log-likelihood, per-(attribute, file) distortion counts, and the
     * per-record distortion histogram (reference A12). One job: each task
-    * folds its partition, and the driver merges the partials in partition
-    * order, so the result (the floating-point sum included) is a fixed
-    * function of the state's layout and exact under task retry. */
+    * folds its partition's block, and the driver merges the partials in
+    * partition order, so the result (the floating-point sum included) is a
+    * fixed function of the state's layout and exact under task retry. */
   def summarize(
-      rdd: RDD[EntityCluster],
+      rdd: RDD[StateBlock],
       index: Broadcast[ModelIndex],
-      theta: DistortionProbs): SummaryVars =
+      records: Broadcast[RecordTable],
+      theta: DistortionProbs): SummaryVars = {
+    val th = dense(records.value, theta)
     rdd.sparkContext
-      .runJob(rdd, (cs: Iterator[EntityCluster]) =>
-        SummaryAggregator.fold(cs, index.value, theta))
+      .runJob(rdd, (bs: Iterator[StateBlock]) =>
+        SummaryAggregator.fold(bs, records.value, index.value, th))
       .foldLeft(SummaryAggregator.zero)(SummaryAggregator.merge)
+  }
 }

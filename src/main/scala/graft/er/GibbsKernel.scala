@@ -12,10 +12,11 @@ import graft.er.model._
   *
   * The whole sweep is a pure function of (rng seed, partition contents,
   * broadcast model), so it is deterministic under task retry and
-  * repartitioning. It runs once per logical partition inside the state
-  * RDD's shuffle (ERState.step); partition contents are materialized in
-  * heap exactly as the reference does — the entity-space partitioner
-  * bounds the per-partition size.
+  * repartitioning. It runs once per logical partition, on the map side of
+  * the state's shuffle (ERState.step), over that partition's StateBlock and
+  * the broadcast RecordTable; partition contents are materialized in heap
+  * exactly as the reference does — the entity-space partitioner bounds the
+  * per-partition size. θ is read densely, by attribute and file index.
   *
   * Model recap: entity values y ~ φ (empirical); distortion indicators
   * z ~ Bernoulli(θ_{attr,file}); record value x = y if z=0, else
@@ -23,39 +24,83 @@ import graft.er.model._
   */
 object GibbsKernel {
 
-  /** Mutable in-memory view of one partition's state. */
+  /** Mutable in-memory view of one partition's state. Records are local
+    * indexes r in [0, R): their values (`values(r * A + a)`), file index
+    * (θ column) and distortion flags (`distorted(r * A + a)`) are copied
+    * out of the record table and the block once per sweep task. */
   final class PartitionState(
+      val numAttributes: Int,
       val entities: ArrayBuffer[Array[Int]],    // entity idx -> values
-      val records: Array[StateRecord],          // flat records (stable order)
+      val recordNumbers: Array[Int],            // record idx -> record number
+      val values: Array[Int],                   // record idx * A + attr
+      val files: Array[Int],                    // record idx -> file index
+      val distorted: Array[Boolean],            // record idx * A + attr
       val assign: Array[Int],                   // record idx -> entity idx
       val links: ArrayBuffer[ArrayBuffer[Int]]) // entity idx -> record idxs
+  {
+    def numRecords: Int = assign.length
+  }
 
   object PartitionState {
 
-    /** Deterministic load order: clusters sorted by smallest member record
-      * id (isolates last, by value signature) — the shuffle's iterator
-      * order is not stable, the sweep must be. */
-    def fromClusters(clusters: Array[EntityCluster]): PartitionState = {
-      val sorted = clusters.sortBy { c =>
-        if (c.records.nonEmpty) (0, c.records.map(_.id).min, "")
-        else (1, "", java.util.Arrays.toString(c.entityValues))
-      }
-      val entities = ArrayBuffer.empty[Array[Int]]
-      val recs = ArrayBuffer.empty[StateRecord]
-      val assign = ArrayBuffer.empty[Int]
-      val links = ArrayBuffer.empty[ArrayBuffer[Int]]
-      sorted.foreach { c =>
-        val e = entities.length
-        entities += c.entityValues.clone()
-        links += ArrayBuffer.empty[Int]
-        c.records.foreach { r =>
-          links(e) += recs.length
-          recs += r
-          assign += e
+    /** Deterministic load order: entities sorted by smallest member record
+      * number (= smallest member id), isolates last by value signature —
+      * the order blocks arrive in is not stable, the sweep must be. */
+    def fromBlock(block: StateBlock, table: RecordTable): PartitionState = {
+      val nA = block.numAttributes
+      val nE = block.numEntities
+      val linked = (0 until nE).filter(block.size(_) > 0).toArray
+      val minMember = new Array[Int](nE)
+      linked.foreach { e =>
+        var m = block.memberOffsets(e)
+        var least = Int.MaxValue
+        while (m < block.memberOffsets(e + 1)) {
+          least = math.min(least, block.members(m))
+          m += 1
         }
+        minMember(e) = least
       }
-      new PartitionState(entities, recs.toArray, assign.toArray, links)
+      val order = linked.sortBy(minMember(_)) ++
+        (0 until nE).filter(block.size(_) == 0)
+          .sortBy(e => java.util.Arrays.toString(block.entity(e)))
+
+      val nR = block.members.length
+      val entities = new ArrayBuffer[Array[Int]](nE)
+      val links = new ArrayBuffer[ArrayBuffer[Int]](nE)
+      val numbers = new Array[Int](nR)
+      val values = new Array[Int](nR * nA)
+      val files = new Array[Int](nR)
+      val distorted = new Array[Boolean](nR * nA)
+      val assign = new Array[Int](nR)
+      var r = 0
+      order.foreach { e =>
+        val ent = entities.length
+        entities += block.entity(e)
+        val ls = new ArrayBuffer[Int](block.size(e))
+        var m = block.memberOffsets(e)
+        while (m < block.memberOffsets(e + 1)) {
+          val num = block.members(m)
+          numbers(r) = num
+          System.arraycopy(table.values, num * nA, values, r * nA, nA)
+          files(r) = table.fileIndex(num)
+          var a = 0
+          while (a < nA) { distorted(r * nA + a) = block.distorted(m, a); a += 1 }
+          assign(r) = ent
+          ls += r
+          r += 1
+          m += 1
+        }
+        links += ls
+      }
+      new PartitionState(nA, entities, numbers, values, files, distorted, assign,
+        links)
     }
+  }
+
+  /** θ as the kernel reads it: `apply(a, f)` for attribute a and file
+    * index f, from the dense array of [[RecordTable.denseTheta]]. */
+  final class Theta(val probs: Array[Double], val numFiles: Int) extends Serializable {
+    @inline def apply(a: Int, f: Int): Double = probs(a * numFiles + f)
   }
 
   /** Inverted index (attrId, valueId) -> entity idxs, used to prune the
@@ -95,8 +140,7 @@ object GibbsKernel {
   case object PCG1 extends SamplerKind
   case object PCG2 extends SamplerKind
 
-  /** One full sweep. Returns the partition's clusters re-keyed by the
-    * partitioner (the caller's shuffle moves them). */
+  /** One full sweep over clusters (see [[sweepMany]]). */
   def sweep(
       clusters: Array[EntityCluster],
       index: ModelIndex,
@@ -106,13 +150,44 @@ object GibbsKernel {
       kind: SamplerKind): Iterator[EntityCluster] =
     sweepMany(clusters, index, partitioner, theta, Seq(rng), kind)
 
-  /** Blocked sweeps: run one in-memory sweep per supplied RNG before
-    * re-keying — entities move partitions only at the block boundary, so a
+  /** Blocked sweeps over one logical partition's block: run one in-memory
+    * sweep per supplied RNG, then re-key each entity by the partitioner
+    * and return one block per destination partition, entities in their
+    * load order. Entities move partitions only at the block boundary, so a
     * block of k sweeps costs ONE shuffle and one action instead of k.
     * Partitioned ER already restricts links to partition-local entities
     * (the d-blink approximation); holding entity placement fixed within a
     * block is the same approximation class, and k=1 reproduces the
     * reference cadence exactly. */
+  def sweepBlock(
+      block: StateBlock,
+      table: RecordTable,
+      index: ModelIndex,
+      partitioner: EntityPartitioner,
+      theta: Theta,
+      rngs: Seq[SplittableRandom],
+      kind: SamplerKind): Iterator[(Int, StateBlock)] = {
+    val st = PartitionState.fromBlock(block, table)
+    sweepState(st, index, theta, rngs, kind)
+    val nA = index.numAttributes
+    val out = new Array[StateBlock.Builder](partitioner.numPartitions)
+    var e = 0
+    while (e < st.entities.length) {
+      val vals = st.entities(e)
+      val p = partitioner.partitionOf(vals)
+      if (out(p) == null) out(p) = new StateBlock.Builder(nA)
+      out(p).entity(vals)
+      st.links(e).sorted.foreach(r =>
+        out(p).member(st.recordNumbers(r), st.distorted, r * nA))
+      e += 1
+    }
+    out.indices.iterator.filter(out(_) != null).map(p => (p, out(p).result()))
+  }
+
+  /** [[sweepBlock]] on clusters, for callers that hold the state as
+    * `EntityCluster`s: the records are numbered locally (in id order, as
+    * the record table numbers them), and the result comes back as
+    * clusters re-keyed by the partitioner, in load order. */
   def sweepMany(
       clusters: Array[EntityCluster],
       index: ModelIndex,
@@ -120,32 +195,41 @@ object GibbsKernel {
       theta: DistortionProbs,
       rngs: Seq[SplittableRandom],
       kind: SamplerKind): Iterator[EntityCluster] = {
+    val nA = index.numAttributes
+    val (table, Array(block)) = StateBlock.fromClusters(nA, clusters, 1, _ => 0)
+    val st = PartitionState.fromBlock(block, table)
+    sweepState(st, index, new Theta(table.denseTheta(theta), table.files.length),
+      rngs, kind)
+    Array.tabulate(st.entities.length) { e =>
+      val vals = st.entities(e)
+      val rs = st.links(e).sorted.map { r =>
+        val num = st.recordNumbers(r)
+        StateRecord(table.id(num), table.fileId(num),
+          st.values.slice(r * nA, (r + 1) * nA),
+          st.distorted.slice(r * nA, (r + 1) * nA))
+      }.toArray
+      EntityCluster(partitioner.partitionOf(vals), vals, rs)
+    }.iterator
+  }
 
-    val st = PartitionState.fromClusters(clusters)
+  private def sweepState(
+      st: PartitionState,
+      index: ModelIndex,
+      theta: Theta,
+      rngs: Seq[SplittableRandom],
+      kind: SamplerKind): Unit =
     rngs.foreach { rng =>
       updateAssignments(st, index, theta, rng, kind)
       updateEntityValues(st, index, theta, rng, kind == PCG2)
       updateDistortions(st, index, theta, rng)
     }
 
-    // Re-key each cluster by its (possibly changed) entity values.
-    val out = ArrayBuffer.empty[EntityCluster]
-    var e = 0
-    while (e < st.entities.length) {
-      val vals = st.entities(e)
-      val recs = st.links(e).sorted.map(st.records(_)).toArray
-      out += EntityCluster(partitioner.partitionOf(vals), vals, recs)
-      e += 1
-    }
-    out.iterator
-  }
-
   // --- record → entity assignment ---------------------------------------
 
   private def updateAssignments(
       st: PartitionState,
       index: ModelIndex,
-      theta: DistortionProbs,
+      theta: Theta,
       rng: SplittableRandom,
       kind: SamplerKind): Unit = {
     val nA = index.numAttributes
@@ -157,15 +241,14 @@ object GibbsKernel {
       case _ => null
     }
     var r = 0
-    while (r < st.records.length) {
-      val rec = st.records(r)
+    while (r < st.numRecords) {
       val (cands, weights) = kind match {
-        case Gibbs => indexedAssignmentWeights(st, inv, index, rec)
-        case GibbsSequential => sequentialAssignmentWeights(st, index, rec)
+        case Gibbs => indexedAssignmentWeights(st, inv, index, r)
+        case GibbsSequential => sequentialAssignmentWeights(st, index, r)
         case PCG1 | PCG2 =>
           if (scratch != null)
-            collapsedAssignmentWeightsFast(st, index, theta, rec, scratch)
-          else collapsedAssignmentWeights(st, index, theta, rec)
+            collapsedAssignmentWeightsFast(st, index, theta, r, scratch)
+          else collapsedAssignmentWeights(st, index, theta, r)
       }
       val pick = cands(sampleCategorical(weights, rng))
       val prev = st.assign(r)
@@ -187,14 +270,15 @@ object GibbsKernel {
       st: PartitionState,
       inv: java.util.HashMap[Long, ArrayBuffer[Int]],
       index: ModelIndex,
-      rec: StateRecord): (Array[Int], Array[Double]) = {
+      r: Int): (Array[Int], Array[Double]) = {
     val nA = index.numAttributes
+    val base = r * nA
 
     var postings: List[ArrayBuffer[Int]] = Nil
     var a = 0
     while (a < nA) {
-      if (rec.values(a) != MissingValue && !rec.distorted(a)) {
-        val lst = inv.get(postingKey(a, rec.values(a)))
+      if (st.values(base + a) != MissingValue && !st.distorted(base + a)) {
+        val lst = inv.get(postingKey(a, st.values(base + a)))
         postings = (if (lst == null) ArrayBuffer.empty[Int] else lst) :: postings
       }
       a += 1
@@ -220,8 +304,8 @@ object GibbsKernel {
       var w = 1.0
       var a2 = 0
       while (a2 < nA) {
-        val x = rec.values(a2)
-        if (x != MissingValue && rec.distorted(a2)) {
+        val x = st.values(base + a2)
+        if (x != MissingValue && st.distorted(base + a2)) {
           val attr = index.attributes(a2)
           val y = vals(a2)
           w *= attr.expSim(x, y) / attr.simNorms(y)
@@ -240,8 +324,9 @@ object GibbsKernel {
   private[er] def sequentialAssignmentWeights(
       st: PartitionState,
       index: ModelIndex,
-      rec: StateRecord): (Array[Int], Array[Double]) = {
+      r: Int): (Array[Int], Array[Double]) = {
     val nA = index.numAttributes
+    val base = r * nA
     val cands = Array.tabulate(st.entities.length)(identity)
     val weights = new Array[Double](cands.length)
     var e = 0
@@ -250,10 +335,10 @@ object GibbsKernel {
       var w = 1.0
       var a = 0
       while (w > 0.0 && a < nA) {
-        val x = rec.values(a)
+        val x = st.values(base + a)
         if (x != MissingValue) {
           val y = vals(a)
-          if (!rec.distorted(a)) {
+          if (!st.distorted(base + a)) {
             if (x != y) w = 0.0
           } else {
             val attr = index.attributes(a)
@@ -277,13 +362,13 @@ object GibbsKernel {
   private[er] def collapsedAssignmentWeights(
       st: PartitionState,
       index: ModelIndex,
-      theta: DistortionProbs,
-      rec: StateRecord): (Array[Int], Array[Double]) = {
+      theta: Theta,
+      r: Int): (Array[Int], Array[Double]) = {
     val cands = Array.tabulate(st.entities.length)(identity)
     val weights = new Array[Double](cands.length)
     var e = 0
     while (e < cands.length) {
-      weights(e) = directCollapsedWeight(st.entities(e), index, theta, rec)
+      weights(e) = directCollapsedWeight(st.entities(e), index, theta, st, r)
       e += 1
     }
     (cands, weights)
@@ -291,16 +376,17 @@ object GibbsKernel {
 
   /** One entity's exact collapsed weight (the direct mixture product). */
   @inline private def directCollapsedWeight(
-      vals: Array[Int], index: ModelIndex, theta: DistortionProbs,
-      rec: StateRecord): Double = {
+      vals: Array[Int], index: ModelIndex, theta: Theta,
+      st: PartitionState, r: Int): Double = {
     val nA = index.numAttributes
+    val f = st.files(r)
     var w = 1.0
     var a = 0
     while (a < nA) {
-      val x = rec.values(a)
+      val x = st.values(r * nA + a)
       if (x != MissingValue) {
         val attr = index.attributes(a)
-        val th = theta(a, rec.fileId)
+        val th = theta(a, f)
         val y = vals(a)
         val hit = if (x == y) 1.0 - th else 0.0
         w *= hit + th * attr.distortionProb(x, y)
@@ -380,10 +466,12 @@ object GibbsKernel {
   private[er] def collapsedAssignmentWeightsFast(
       st: PartitionState,
       index: ModelIndex,
-      theta: DistortionProbs,
-      rec: StateRecord,
+      theta: Theta,
+      r: Int,
       scratch: CollapsedScratch): (Array[Int], Array[Double]) = {
     val nA = index.numAttributes
+    val base = r * nA
+    val f = st.files(r)
     val nE = st.entities.length
     val cands = scratch.candsBuf
     val weights = scratch.weightsBuf
@@ -393,10 +481,10 @@ object GibbsKernel {
     var zeroTheta = false
     var a = 0
     while (a < nA) {
-      val x = rec.values(a)
+      val x = st.values(base + a)
       if (x != MissingValue) {
         mask |= 1L << a
-        val th = theta(a, rec.fileId)
+        val th = theta(a, f)
         if (th == 0.0) zeroTheta = true
         cRec *= th * index.attributes(a).probs(x)
       }
@@ -410,7 +498,7 @@ object GibbsKernel {
       // record, reusing the scratch buffers.
       var e = 0
       while (e < nE) {
-        weights(e) = directCollapsedWeight(st.entities(e), index, theta, rec)
+        weights(e) = directCollapsedWeight(st.entities(e), index, theta, st, r)
         e += 1
       }
       return (cands, weights)
@@ -424,10 +512,10 @@ object GibbsKernel {
     while (e < nE) { weights(e) = cRec * defs(e); e += 1 }
     a = 0
     while (a < nA) {
-      val x = rec.values(a)
+      val x = st.values(base + a)
       if (x != MissingValue) {
         val attr = index.attributes(a)
-        val th = theta(a, rec.fileId)
+        val th = theta(a, f)
         val px = attr.probs(x)
         // one ratio per special value v: true term / default term
         @inline def patch(v: Int, expSim: Double, hit: Double): Unit = {
@@ -454,7 +542,7 @@ object GibbsKernel {
   // --- entity value resampling ------------------------------------------
 
   private def updateEntityValues(
-      st: PartitionState, index: ModelIndex, theta: DistortionProbs,
+      st: PartitionState, index: ModelIndex, theta: Theta,
       rng: SplittableRandom, collapsedValues: Boolean): Unit = {
     val nA = index.numAttributes
     var e = 0
@@ -492,10 +580,10 @@ object GibbsKernel {
     var distortedXs: ArrayBuffer[Int] = null
     var li = 0
     while (li < linked.length) {
-      val rec = st.records(linked(li))
-      val x = rec.values(a)
+      val i = linked(li) * st.numAttributes + a
+      val x = st.values(i)
       if (x != MissingValue) {
-        if (!rec.distorted(a)) pinned = x
+        if (!st.distorted(i)) pinned = x
         else {
           m += 1
           if (m == 1) x0 = x
@@ -581,7 +669,7 @@ object GibbsKernel {
       a: Int,
       linked: ArrayBuffer[Int],
       st: PartitionState,
-      theta: DistortionProbs,
+      theta: Theta,
       rng: SplittableRandom): Int = {
 
     var m = 0
@@ -591,10 +679,10 @@ object GibbsKernel {
     var ths: ArrayBuffer[Double] = null
     var li = 0
     while (li < linked.length) {
-      val rec = st.records(linked(li))
-      val x = rec.values(a)
+      val rec = linked(li)
+      val x = st.values(rec * st.numAttributes + a)
       if (x != MissingValue) {
-        val th = theta(a, rec.fileId)
+        val th = theta(a, st.files(rec))
         m += 1
         if (m == 1) { x0 = x; th0 = th }
         else {
@@ -680,18 +768,18 @@ object GibbsKernel {
   private def updateDistortions(
       st: PartitionState,
       index: ModelIndex,
-      theta: DistortionProbs,
+      theta: Theta,
       rng: SplittableRandom): Unit = {
     val nA = index.numAttributes
     var r = 0
-    while (r < st.records.length) {
-      val rec = st.records(r)
+    while (r < st.numRecords) {
+      val f = st.files(r)
       val entityVals = st.entities(st.assign(r))
       var a = 0
       while (a < nA) {
-        rec.distorted(a) =
-          sampleDistortion(index.attributes(a), theta(a, rec.fileId),
-            rec.values(a), entityVals(a), rng)
+        st.distorted(r * nA + a) =
+          sampleDistortion(index.attributes(a), theta(a, f),
+            st.values(r * nA + a), entityVals(a), rng)
         a += 1
       }
       r += 1

@@ -55,7 +55,7 @@ object Sampler {
     // keeps them (its samples stay lazy projections over cache, exactly
     // the footprint eager checkpoints had — the caller's cleanup
     // releases everything)
-    var retained = Vector.empty[RDD[EntityCluster]]
+    var retained = Vector.empty[RDD[StateBlock]]
     // durable checkpoint files superseded by a newer cut but possibly
     // still referenced by a retained lazy sample: deleted at the flush
     // that materializes those samples (in-memory chains keep them — the
@@ -73,11 +73,11 @@ object Sampler {
       supersededCheckpoints = Vector.empty
     }
 
-    // `current` = the live state's clusters: a flush triggered right
+    // `current` = the live state's blocks: a flush triggered right
     // after sampling must NOT unpersist them — the next step reads them,
     // and an evicted live state would recompute every sweep since the
     // last checkpoint cut
-    def flush(current: RDD[EntityCluster]): Unit = {
+    def flush(current: RDD[StateBlock]): Unit = {
       if (buffered.nonEmpty) {
         val batch = buffered.reduce(_ unionAll _)
         chainPath match {

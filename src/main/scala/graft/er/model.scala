@@ -7,8 +7,9 @@ import graft.core.SimilarityFn
   * (/root/reference/src/main/scala/com/github/cleanzr/dblink/package.scala:28-138).
   *
   * Values are dictionary-encoded to dense ints per attribute; -1 denotes a
-  * missing value. The full sampler state is an RDD[EntityCluster]
-  * keyed by partitionId.
+  * missing value. The sampler state itself is held compactly (a broadcast
+  * RecordTable plus one StateBlock per partition, StateBlocks.scala);
+  * `EntityCluster` is its expanded, record-id form at the edges.
   */
 object model {
 

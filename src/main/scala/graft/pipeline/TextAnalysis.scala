@@ -122,10 +122,13 @@ object TextAnalysis {
   def winnowedFingerprints(textCol: Column, k: Int = 4, window: Int = 5,
       hashFn: Column => Column = xxhash64(_)): Column = {
     val sh = Dedup.shingles(textCol, k)
-    val hashes = transform(sh, s => hashFn(s))
-    array_distinct(transform(
-      sequence(lit(0), greatest(size(hashes) - window, lit(0))),
-      i => array_min(slice(hashes, i + lit(1), lit(window)))))
+    // the hashes are bound once per row, as the single element of a
+    // one-element array: inlined into the window lambda, the shingling and
+    // hashing would run again for every window
+    element_at(transform(array(transform(sh, s => hashFn(s))), hashes =>
+      array_distinct(transform(
+        sequence(lit(0), greatest(size(hashes) - window, lit(0))),
+        i => array_min(slice(hashes, i + lit(1), lit(window)))))), 1)
   }
 
   /** Training-corpus text cleaning: mask URLs then emails, strip control

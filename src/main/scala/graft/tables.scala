@@ -29,34 +29,63 @@ object Tables {
   // [[invalidate]] is called or the session ends. That matches
   // Spark's own per-session FileStatusCache posture; callers that
   // mutate a table directory mid-session must invalidate first.
+  //
+  // A load lists outside any lock, so an [[invalidate]] can land while a
+  // listing is in flight. Each session's plans carry a generation that
+  // every invalidate bumps; a load caches its plan only if the generation
+  // it read before listing is still current, so a plan listed before an
+  // invalidate is never cached after it.
+  private final class SessionPlans {
+    var generation = 0L // guarded by this
+    val plans = new java.util.HashMap[(String, String), DataFrame]() // guarded by this
+  }
+
   private val planCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]())
+    new java.util.WeakHashMap[SparkSession, SessionPlans]())
+
+  private def plansOf(spark: SparkSession): SessionPlans = planCache.synchronized {
+    var p = planCache.get(spark)
+    if (p == null) {
+      p = new SessionPlans
+      planCache.put(spark, p)
+    }
+    p
+  }
+
+  /** Runs in [[load]] between listing a table and caching its plan; a
+    * test seam for the load/invalidate interleaving, a no-op otherwise. */
+  @volatile private[graft] var afterListing: (String, String) => Unit = (_, _) => ()
 
   /** Drop this session's cached plans (all tables, or one table under
     * `dir`) so the next [[load]] re-lists the directory — required after
     * appending to or regenerating a table directory mid-session. */
   def invalidate(spark: SparkSession, dir: String = null,
-      name: String = null): Unit = planCache.synchronized {
-    val m = planCache.get(spark)
-    if (m != null) {
-      if (dir == null && name == null) m.clear()
-      else m.keySet.removeIf { case (d, n) =>
+      name: String = null): Unit = {
+    val p = plansOf(spark)
+    p.synchronized {
+      p.generation += 1
+      p.plans.keySet.removeIf { case (d, n) =>
         (dir == null || d == dir) && (name == null || n == name)
       }
     }
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val perSession = planCache.synchronized {
-      var m = planCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-        planCache.put(spark, m)
+    val p = plansOf(spark)
+    val key = (dir, name)
+    val (cached, generation) = p.synchronized((p.plans.get(key), p.generation))
+    if (cached != null) cached
+    else {
+      val listed = loadUncached(spark, dir, name)
+      afterListing(dir, name)
+      p.synchronized {
+        if (p.generation != generation) listed
+        else {
+          val prev = p.plans.putIfAbsent(key, listed)
+          if (prev != null) prev else listed
+        }
       }
-      m
     }
-    perSession.computeIfAbsent((dir, name), { _ => loadUncached(spark, dir, name) })
   }
 
   private def loadUncached(spark: SparkSession, dir: String,

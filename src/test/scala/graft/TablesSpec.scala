@@ -81,4 +81,25 @@ class TablesSpec extends AnyFunSuite {
     Tables.invalidate(spark, dir, "region")
     assert(Tables.load(spark, dir, "region").count() == 5)
   }
+
+  test("invalidate racing a load: a plan listed before the invalidate is not cached") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables-race").toString
+    def write(n: Int, files: Int): Unit = (1 to n).toDF("r_regionkey")
+      .repartition(files).write.mode("overwrite").parquet(s"$dir/region.parquet")
+    write(3, 1)
+    // thread A lists the 3-row table; before it caches the plan, thread B
+    // regenerates the table and invalidates
+    Tables.afterListing = (d, _) => if (d == dir) {
+      val b = new Thread(() => { write(5, 2); Tables.invalidate(spark, dir, "region") })
+      b.start()
+      b.join()
+    }
+    val a = new Thread(() => { Tables.load(spark, dir, "region"); () })
+    try {
+      a.start()
+      a.join()
+    } finally Tables.afterListing = (_, _) => ()
+    assert(Tables.load(spark, dir, "region").count() == 5)
+  }
 }

@@ -153,6 +153,30 @@ class AttributeIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("parallel local neighbor build == sequential (randomized, astral chars)") {
+    // short strings over a small alphabet with astral letters mixed in,
+    // so many pairs clear the threshold and code-point and UTF-16
+    // lengths disagree; the parallel pair loop must return exactly the
+    // sequential lists, sims to the bit
+    val alphabet = Vector("A", "B", "C", "D", "E") ++
+      (0 until 3).map(i => new String(Character.toChars(0x1D400 + i)))
+    val rng = new java.util.SplittableRandom(8080L)
+    (1 to 8).foreach { trial =>
+      val size = 50 + rng.nextInt(250)
+      val values = Array.fill(size)(
+        (0 until 2 + rng.nextInt(7)).map(_ => alphabet(rng.nextInt(alphabet.length)))
+          .mkString).distinct.sorted
+      val fn = LevenshteinSimilarity(3.0 + rng.nextInt(5), 10.0)
+      val (pn, ps) = LocalNeighbors.levenshtein(values, fn, parallel = true)
+      val (sn, ss) = LocalNeighbors.levenshtein(values, fn, parallel = false)
+      assert(pn.map(_.toSeq).toSeq == sn.map(_.toSeq).toSeq, s"trial $trial neighbors")
+      assert(ps.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq).toSeq ==
+        ss.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq).toSeq,
+        s"trial $trial sims")
+      assert(pn.exists(_.nonEmpty), s"trial $trial has no neighbor pairs")
+    }
+  }
+
   test("simNorm equals direct sum over the domain") {
     val fn = LevenshteinSimilarity(5.0, 10.0)
     val idx = AttributeIndex.build(spark, statesDf, 0,

@@ -421,6 +421,17 @@ class ERProjectSpec extends AnyFunSuite {
     assert(e.getMessage.contains("no record has an entity id"))
   }
 
+  test("the sample step releases the final sampler state") {
+    val dir = Files.createTempDirectory("ersamplerelease").toString
+    writeTwoFiles(dir)
+    val sc = spark.sparkContext
+    // holding the map keeps every RDD in it strongly reachable
+    val before = sc.getPersistentRDDs
+    ERProject.run(spark, twoFileConf(dir, Seq("sample")))
+    assert(sc.getPersistentRDDs.keySet == before.keySet)
+    assert(Files.exists(Paths.get(s"$dir/out/saved-state/driver-state.bin")))
+  }
+
   test("summarize + evaluate release the SMPC cache, on success and on failure") {
     val dir = Files.createTempDirectory("errelease").toString
     writeTwoFiles(dir)

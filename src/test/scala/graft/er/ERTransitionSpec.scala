@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{SparkException, TestAccess}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted}
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -111,16 +111,16 @@ class ERTransitionSpec extends AnyFunSuite {
     val st = (1 to 3).foldLeft(
       init(GibbsKernel.PCG1, idx => KDTreePartitioner.fit(idx, Seq(0, 1), 2))
     )((s, _) => s.step())
-    val parts = st.clusterRdd.mapPartitions(it => Iterator(it.size)).collect()
+    val parts = st.clusterView.mapPartitions(it => Iterator(it.size)).collect()
     assert(parts.length == 4 && parts.count(_ > 0) > 1, parts.toSeq)
 
-    val a = ERState.summarize(st.clusterRdd, st.index, st.theta)
-    val b = ERState.summarize(st.clusterRdd, st.index, st.theta)
+    val a = ERState.summarize(st.clusterRdd, st.index, st.records, st.theta)
+    val b = ERState.summarize(st.clusterRdd, st.index, st.records, st.theta)
     assert(java.lang.Double.doubleToRawLongBits(a.logLikelihood) ==
       java.lang.Double.doubleToRawLongBits(b.logLikelihood))
     assert(a == b && a == st.summary)
 
-    val want = recount(st.clusterRdd.collect().toSeq, st.index.value, st.theta)
+    val want = recount(st.clusterView.collect().toSeq, st.index.value, st.theta)
     assert(a.numObservedEntities == want.numObservedEntities)
     assert(a.numIsolates == want.numIsolates)
     assert(a.aggDistortions == want.aggDistortions)
@@ -132,40 +132,19 @@ class ERTransitionSpec extends AnyFunSuite {
 
   test("a step is one job of two stages and a local cut one job, at every sweep") {
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val stages = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
-        stages.incrementAndGet(); ()
-      }
-    }
-    /** (jobs, stages submitted) while `f` runs. */
-    def shape[A](f: => A): (A, (Int, Int)) = {
-      TestAccess.drainListenerBus(sc)
-      val (j0, s0) = (jobs.get, stages.get)
-      val a = f
-      TestAccess.drainListenerBus(sc)
-      (a, (jobs.get - j0, stages.get - s0))
-    }
     var st = init(GibbsKernel.PCG1)
     assert(st.partitioner.numPartitions == 2)
-    sc.addSparkListener(listener)
-    try {
-      val steps = (1 to 9).map { _ =>
-        val (next, n) = shape(st.step())
-        st = next
-        n
-      }
-      val (cut, cutShape) = shape(st.checkpointed())
-      val (_, afterCut) = shape(cut.step())
-      assert(steps.forall(_ == ((1, 2))), steps)
-      assert(steps(8) == steps(0))
-      assert(cutShape._1 == 1, cutShape)
-      assert(afterCut == ((1, 2)))
-    } finally sc.removeSparkListener(listener)
+    val steps = (1 to 9).map { _ =>
+      val (next, n) = shape(sc)(st.step())
+      st = next
+      n
+    }
+    val (cut, cutShape) = shape(sc)(st.checkpointed())
+    val (_, afterCut) = shape(sc)(cut.step())
+    assert(steps.forall(_ == ((1, 2))), steps)
+    assert(steps(8) == steps(0))
+    assert(cutShape._1 == 1, cutShape)
+    assert(afterCut == ((1, 2)))
   }
 
   test("a run failing at sweep 3 releases its caches and durable cuts") {
@@ -217,6 +196,95 @@ class ERTransitionSpec extends AnyFunSuite {
     }
   }
 
+  test("the state is one block per partition, after init, steps and cuts") {
+    def blocks(st: ERState) =
+      st.clusterRdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
+    var st = init(GibbsKernel.PCG1, idx => KDTreePartitioner.fit(idx, Seq(0, 1), 2))
+    assert(blocks(st) == Seq(1, 1, 1, 1))
+    (1 to 3).foreach { _ =>
+      st = st.step()
+      assert(blocks(st) == Seq(1, 1, 1, 1))
+    }
+    st = st.checkpointed()
+    assert(blocks(st) == Seq(1, 1, 1, 1))
+    // Spark partition p holds exactly the entities keyed to p
+    val part = st.partitioner
+    val keyed = st.clusterView.mapPartitionsWithIndex((p, cs) =>
+      cs.map(c => c.partitionId == p && part.partitionOf(c.entityValues) == p))
+    assert(keyed.collect().forall(identity))
+    assert(st.clusterView.count() == st.summary.numObservedEntities +
+      st.summary.numIsolates)
+  }
+
+  test("a flush of linkage samples is one job with no shuffle stage") {
+    val sc = spark.sparkContext
+    val st1 = init(GibbsKernel.PCG1).step()
+    val st2 = st1.step(retainClusters = true)
+    val st3 = st2.step(retainClusters = true)
+    val batch = Seq(st2, st3).map(_.linkageSample()).reduce(_ unionAll _)
+    val dir = Files.createTempDirectory("graft-er-flush").resolve("chain").toString
+    val (_, (jobs, stages)) = shape(sc)(
+      batch.write.partitionBy("partitionId").parquet(dir))
+    assert((jobs, stages) == ((1, 1)))
+    val chain = IO.readChain(spark, dir).collect()
+    assert(chain.map(_.iteration).distinct.sorted.toSeq == Seq(2L, 3L))
+    assert(chain.filter(_.iteration == 3L).flatMap(_.linkageStructure.flatten)
+      .sorted.toSeq == records.collect().map(_.getString(0)).sorted.toSeq)
+    Seq(st2, st3).foreach(_.clusterRdd.unpersist(blocking = true))
+  }
+
+  test("a step shuffles at most a third of the bytes the cluster objects did") {
+    val sc = spark.sparkContext
+    val written = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        written.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
+      }
+    }
+    var st = init(GibbsKernel.PCG1)
+    sc.addSparkListener(listener)
+    try {
+      (1 to 9).foreach(_ => st = st.step())
+      TestAccess.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    // shuffle bytes per step of this chain when each step shuffled
+    // Java-serialized EntityClusters, measured once on that code
+    val clusterObjectBytes = ParentShuffleBytesPerStep
+    info(s"${written.get() / 9} bytes per step, $clusterObjectBytes with cluster objects")
+    assert(written.get() / 9 <= clusterObjectBytes / 3,
+      s"${written.get() / 9} bytes per step")
+  }
+
+  test("a state saved with cluster records resumes into the uninterrupted chain") {
+    import spark.implicits._
+    // saved by the code that held the state as Java-serialized clusters:
+    // this test's 60 records, PCG-I, two partitions, seed 1234, 3 sweeps
+    val saved = Paths.get(getClass.getResource(
+      "/er/state-saved-with-cluster-records/driver-state.bin").toURI).getParent
+    val resumed = IO.loadState(spark, saved.toString)
+    assert(resumed.iteration == 3L && resumed.partitioner.numPartitions == 2)
+    assert(resumed.clusterRdd.mapPartitions(it => Iterator(it.size)).collect()
+      .toSeq == Seq(1, 1))
+
+    val straight = Sampler.run(init(GibbsKernel.PCG1), numSweeps = 3,
+      checkpointEvery = 10).state
+    assert(resumed.theta == straight.theta)
+    assert(resumed.summary.copy(logLikelihood = 0.0) ==
+      straight.summary.copy(logLikelihood = 0.0))
+    def clustering(st: ERState) =
+      st.currentClusters().collect().map(_.sorted.mkString(",")).sorted.toSeq
+    assert(clustering(resumed) == clustering(straight))
+
+    val a = Sampler.run(resumed, numSweeps = 3, checkpointEvery = 10)
+    val b = Sampler.run(straight, numSweeps = 3, checkpointEvery = 10)
+    assert(a.diagnostics.map(render) == b.diagnostics.map(render))
+    assert(a.diagnostics.map(render) == Seq("4 51 9  0=60", "5 51 9  0=60",
+      "6 51 9  0=60"))
+    assert(clustering(a.state) == clustering(b.state))
+    assert(clustering(a.state).filter(_.contains(",")) == expectedLinked)
+    Seq(a.state, b.state).foreach(_.release())
+  }
+
   /** SummaryVars recomputed on the driver from collected clusters. */
   private def recount(cs: Seq[EntityCluster], idx: ModelIndex,
       theta: DistortionProbs): SummaryVars = {
@@ -245,6 +313,32 @@ class ERTransitionSpec extends AnyFunSuite {
 }
 
 object ERTransitionSpec {
+
+  /** Shuffle write bytes per step of the 9-step PCG-I chain in "a step
+    * shuffles at most a third of the bytes", measured on the code whose
+    * state was an RDD of Java-serialized EntityClusters. */
+  val ParentShuffleBytesPerStep = 3026L
+
+  /** (jobs, stages submitted) while `f` runs. */
+  def shape[A](sc: org.apache.spark.SparkContext)(f: => A): (A, (Int, Int)) = {
+    val jobs = new AtomicInteger
+    val stages = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        stages.incrementAndGet(); ()
+      }
+    }
+    TestAccess.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = f
+      TestAccess.drainListenerBus(sc)
+      (a, (jobs.get, stages.get))
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** partitionOf calls, counted across every task's copy of the
     * partitioner (local mode runs tasks in this JVM). */

@@ -44,18 +44,25 @@ class GibbsKernelSpec extends AnyFunSuite {
     assert(!GibbsKernel.sampleDistortion(idx, theta, MissingValue, x, rng))
   }
 
+  /** A one-attribute partition state: record r has value `recs(r)._1`
+    * and distortion flag `recs(r)._2`, in file 0, and belongs to
+    * `assign(r)`. */
+  private def stateOf(
+      entities: ArrayBuffer[Array[Int]], recs: Seq[(Int, Boolean)],
+      assign: Array[Int]): GibbsKernel.PartitionState =
+    new GibbsKernel.PartitionState(1, entities, recs.indices.toArray,
+      recs.map(_._1).toArray, Array.fill(recs.length)(0),
+      recs.map(_._2).toArray, assign,
+      ArrayBuffer.tabulate(entities.length)(e =>
+        ArrayBuffer(assign.indices.filter(assign(_) == e): _*)))
+
   private def singletonState(
-      idx: AttributeIndex, recs: Seq[(String, Int, Boolean)]): GibbsKernel.PartitionState = {
+      idx: AttributeIndex, recs: Seq[(String, Int, Boolean)]): GibbsKernel.PartitionState =
     // one entity holding all records
-    val records = recs.map { case (id, v, d) =>
-      StateRecord(id, "0", Array(v), Array(d))
-    }.toArray
-    new GibbsKernel.PartitionState(
-      ArrayBuffer(Array(idx.idOf("ANNA"))),
-      records,
-      Array.fill(records.length)(0),
-      ArrayBuffer(ArrayBuffer.tabulate(records.length)(identity)))
-  }
+    stateOf(ArrayBuffer(Array(idx.idOf("ANNA"))),
+      recs.map { case (_, v, d) => (v, d) }, Array.fill(recs.length)(0))
+
+  private def theta(p: Double) = new GibbsKernel.Theta(Array(p), 1)
 
   test("sampleEntityValue: non-distorted link pins the value") {
     val idx = levIndex
@@ -108,9 +115,7 @@ class GibbsKernelSpec extends AnyFunSuite {
     // entities: ANNA, ANNE, BOB; record observed=ANNA non-distorted
     val entities = ArrayBuffer(
       Array(idx.idOf("ANNA")), Array(idx.idOf("ANNE")), Array(idx.idOf("BOB")))
-    val rec = StateRecord("r", "0", Array(idx.idOf("ANNA")), Array(false))
-    val st = new GibbsKernel.PartitionState(entities, Array(rec), Array(0),
-      ArrayBuffer(ArrayBuffer(0), ArrayBuffer.empty, ArrayBuffer.empty))
+    val st = stateOf(entities, Seq((idx.idOf("ANNA"), false)), Array(0))
     val inv = {
       val m = new java.util.HashMap[Long, ArrayBuffer[Int]]()
       entities.zipWithIndex.foreach { case (vals, e) =>
@@ -121,19 +126,16 @@ class GibbsKernelSpec extends AnyFunSuite {
       }
       m
     }
-    val (cands, _) = GibbsKernel.indexedAssignmentWeights(st, inv, mkModel(idx), rec)
+    val (cands, _) = GibbsKernel.indexedAssignmentWeights(st, inv, mkModel(idx), 0)
     assert(cands.toSeq == Seq(0)) // only the ANNA entity matches
   }
 
   test("collapsed assignment weights match the analytic mixture") {
     val idx = levIndex
-    val theta = DistortionProbs(Map((0, "0") -> 0.2))
     val entities = ArrayBuffer(
       Array(idx.idOf("ANNA")), Array(idx.idOf("ANNE")), Array(idx.idOf("BOB")))
-    val rec = StateRecord("r", "0", Array(idx.idOf("ANNA")), Array(false))
-    val st = new GibbsKernel.PartitionState(entities, Array(rec), Array(0),
-      ArrayBuffer(ArrayBuffer(0), ArrayBuffer.empty, ArrayBuffer.empty))
-    val (cands, w) = GibbsKernel.collapsedAssignmentWeights(st, mkModel(idx), theta, rec)
+    val st = stateOf(entities, Seq((idx.idOf("ANNA"), false)), Array(0))
+    val (cands, w) = GibbsKernel.collapsedAssignmentWeights(st, mkModel(idx), theta(0.2), 0)
     assert(cands.length == 3)
     val x = idx.idOf("ANNA")
     entities.zipWithIndex.foreach { case (vals, e) =>
@@ -147,17 +149,15 @@ class GibbsKernelSpec extends AnyFunSuite {
     val idx = levIndex
     val entities = ArrayBuffer(
       Array(idx.idOf("ANNA")), Array(idx.idOf("ANNE")), Array(idx.idOf("BOB")))
-    val rec = StateRecord("r", "0", Array(idx.idOf("ANNA")), Array(false))
-    val st = new GibbsKernel.PartitionState(entities, Array(rec), Array(0),
-      ArrayBuffer(ArrayBuffer(0), ArrayBuffer.empty, ArrayBuffer.empty))
-    val (cands, w) = GibbsKernel.sequentialAssignmentWeights(st, mkModel(idx), rec)
+    val st = stateOf(entities, Seq((idx.idOf("ANNA"), false)), Array(0))
+    val (cands, w) = GibbsKernel.sequentialAssignmentWeights(st, mkModel(idx), 0)
     assert(cands.length == 3)
     // non-distorted ANNA: only entity 0 gets non-zero weight
     assert(w(0) > 0.0 && w(1) == 0.0 && w(2) == 0.0)
 
     // distorted record: every entity weighted by expSim/z
-    val recD = StateRecord("r", "0", Array(idx.idOf("ANNA")), Array(true))
-    val (_, wd) = GibbsKernel.sequentialAssignmentWeights(st, mkModel(idx), recD)
+    val stD = stateOf(entities, Seq((idx.idOf("ANNA"), true)), Array(0))
+    val (_, wd) = GibbsKernel.sequentialAssignmentWeights(stD, mkModel(idx), 0)
     entities.zipWithIndex.foreach { case (vals, e) =>
       val expected = idx.expSim(idx.idOf("ANNA"), vals(0)) / idx.simNorms(vals(0))
       assert(math.abs(wd(e) - expected) < 1e-12, s"entity $e")
@@ -166,7 +166,6 @@ class GibbsKernelSpec extends AnyFunSuite {
 
   test("collapsed entity-value draw matches the exact collapsed posterior") {
     val idx = levIndex
-    val theta = DistortionProbs(Map((0, "0") -> 0.25))
     // two observed links: ANNA (flag irrelevant), ANNE
     val st = singletonState(idx,
       Seq(("r0", idx.idOf("ANNA"), false), ("r1", idx.idOf("ANNE"), true)))
@@ -183,7 +182,7 @@ class GibbsKernelSpec extends AnyFunSuite {
     val counts = new Array[Long](idx.domainSize)
     (0 until n).foreach { _ =>
       counts(GibbsKernel.sampleEntityValueCollapsed(idx, 0, st.links(0), st,
-        theta, rng)) += 1
+        theta(0.25), rng)) += 1
     }
     (0 until idx.domainSize).foreach { y =>
       assert(math.abs(counts(y).toDouble / n - target(y) / z) < 0.006,
@@ -235,29 +234,25 @@ class GibbsKernelSpec extends AnyFunSuite {
   test("memoized collapsed weights == direct scan (randomized states)") {
     val idx = levIndex
     val model = mkModel(idx)
-    val theta = DistortionProbs(Map((0, "0") -> 0.23))
+    val th = theta(0.23)
     val rng = new SplittableRandom(17L)
     (1 to 20).foreach { trial =>
       val nE = 1 + rng.nextInt(12)
       val entities = ArrayBuffer.tabulate(nE)(_ =>
         Array(rng.nextInt(idx.domainSize)))
       // records: random values, occasional missing
-      val recs = Array.tabulate(6) { i =>
+      val recs = Seq.fill(6) {
         val v = if (rng.nextInt(5) == 0) MissingValue
           else rng.nextInt(idx.domainSize)
-        StateRecord(s"r$i", "0", Array(v), Array(rng.nextBoolean()))
+        (v, rng.nextBoolean())
       }
-      val st = new GibbsKernel.PartitionState(entities, recs,
-        Array.fill(recs.length)(0),
-        ArrayBuffer.tabulate(nE)(e =>
-          if (e == 0) ArrayBuffer.tabulate(recs.length)(identity)
-          else ArrayBuffer.empty[Int]))
+      val st = stateOf(entities, recs, Array.fill(recs.length)(0))
       val scratch = new GibbsKernel.CollapsedScratch(st, model)
-      recs.foreach { rec =>
+      recs.indices.foreach { rec =>
         val (cd, wd) =
-          GibbsKernel.collapsedAssignmentWeights(st, model, theta, rec)
+          GibbsKernel.collapsedAssignmentWeights(st, model, th, rec)
         val (cf, wf) = GibbsKernel.collapsedAssignmentWeightsFast(
-          st, model, theta, rec, scratch)
+          st, model, th, rec, scratch)
         assert(cd.toSeq == cf.toSeq, s"trial $trial cands")
         cd.indices.foreach { e =>
           assert(math.abs(wd(e) - wf(e)) <=
@@ -275,22 +270,17 @@ class GibbsKernelSpec extends AnyFunSuite {
     // falls back to the direct mixture (term = 1{x=y} exactly).
     val idx = levIndex
     val model = mkModel(idx)
-    val theta = DistortionProbs(Map((0, "0") -> 0.0))
+    val th = theta(0.0)
     val entities = ArrayBuffer(
       Array(idx.idOf("ANNA")), Array(idx.idOf("ANNE")), Array(idx.idOf("BOB")))
-    val recs = Array(
-      StateRecord("r0", "0", Array(idx.idOf("ANNA")), Array(false)),
-      StateRecord("r1", "0", Array(idx.idOf("BOB")), Array(false)))
-    val st = new GibbsKernel.PartitionState(entities, recs,
-      Array.fill(recs.length)(0),
-      ArrayBuffer(ArrayBuffer(0, 1), ArrayBuffer.empty[Int],
-        ArrayBuffer.empty[Int]))
+    val st = stateOf(entities,
+      Seq((idx.idOf("ANNA"), false), (idx.idOf("BOB"), false)), Array(0, 0))
     val scratch = new GibbsKernel.CollapsedScratch(st, model)
-    recs.foreach { rec =>
+    (0 until 2).foreach { rec =>
       val (_, wd) =
-        GibbsKernel.collapsedAssignmentWeights(st, model, theta, rec)
+        GibbsKernel.collapsedAssignmentWeights(st, model, th, rec)
       val (_, wf) = GibbsKernel.collapsedAssignmentWeightsFast(
-        st, model, theta, rec, scratch)
+        st, model, th, rec, scratch)
       wd.indices.foreach { e =>
         assert(!wf(e).isNaN, s"entity $e: fast weight is NaN")
         assert(wd(e) == wf(e), s"entity $e: direct ${wd(e)} fast ${wf(e)}")
