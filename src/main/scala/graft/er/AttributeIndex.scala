@@ -10,15 +10,22 @@ import graft.er.model._
 
 /** Per-attribute dictionary + empirical distribution + truncated-similarity
   * neighborhood index (reference capability: AttributeIndex.scala:39-104,
-  * RecordsCache.scala:34-54 — re-expressed with DataFrame aggregations and a
-  * lossless length-blocked similarity self-join instead of the reference's
-  * O(|V|²) `cartesian`, its single worst scale bottleneck).
+  * RecordsCache.scala:34-54 — re-expressed with counts from one pass over
+  * the records ([[RecordPass]]) and a lossless length-blocked similarity
+  * self-join instead of the reference's O(|V|²) `cartesian`, its single
+  * worst scale bottleneck).
   *
   * The index is driver-built and broadcast: the value domain of a matching
   * attribute is categorical (names, dates, codes), orders of magnitude
   * smaller than the record count, so it fits comfortably even at 100 TB of
   * records. All sampler math runs on dense ValueIds; -1 = missing.
+  *
+  * Saved sampler states (IO.saveState) Java-serialize the index. The
+  * default serialVersionUID covers the companion's methods too (their
+  * static forwarders), so it is pinned to the value it had before the
+  * companion lost its single-column `build`, and older states still load.
   */
+@SerialVersionUID(6446730841700174786L)
 final class AttributeIndex(
     val attrId: Int,
     val name: String,
@@ -145,35 +152,10 @@ object AttributeIndex {
         "free text or a unique key; drop the attribute or bucket it " +
         "before linking")
 
-  /** Build one index from the raw (string-typed) attribute column.
-    *
-    * Value counts come from a grouped aggregation (one shuffle, map-side
-    * combined); the neighbor pairs from a self-join blocked on string
-    * length (lossless: for truncated Levenshtein, sim > 0 bounds
-    * |len(a)-len(b)| — see LevenshteinSimilarity.maxLengthGap). Constant
-    * similarity skips neighbor construction entirely.
-    */
-  def build(
-      spark: SparkSession,
-      column: DataFrame, // single-column DataFrame of raw strings
-      attrId: Int,
-      spec: AttributeSpec): AttributeIndex = {
-    import spark.implicits._
-
-    val colName = column.columns.head
-    val grouped = column
-      .filter(col(colName).isNotNull)
-      .groupBy(col(colName).cast("string").as("v"))
-      .agg(count(lit(1)).as("n"))
-    // count before collecting: fail on oversized domains while the data
-    // is still distributed, not with a driver OOM
-    requireDomainFits(spec.name, grouped.count())
-    fromCounts(spark, grouped.as[(String, Long)].collect(), attrId, spec)
-  }
-
-  /** Build from already-collected (value, count) pairs — lets the caller
-    * compute every attribute's dictionary in ONE grouped aggregation
-    * (melt + groupBy) instead of one Spark job per attribute. */
+  /** Build from already-counted (value, count) pairs: the dictionary
+    * sorted by value, and the neighbor index of the similarity. Every
+    * attribute's counts come from one pass over the records
+    * ([[RecordPass]]). */
   def fromCounts(
       spark: SparkSession,
       countedUnsorted: Array[(String, Long)],
@@ -424,55 +406,12 @@ final class ModelIndex(
 
 object ModelIndex {
 
-  /** One statistics pass over the raw records DataFrame: file sizes and
-    * per-(attribute, file) observed counts in a single grouped aggregation
-    * (replaces the reference's foreach + map-accumulators,
-    * RecordsCache.scala:74-107 — deterministic under task retry), plus one
-    * dictionary/neighbor build per attribute.
-    */
+  /** Build the index of `records` (columns: `fileIdCol` and one column
+    * per attribute spec): [[RecordPass]] without the record table. */
   def build(
       spark: SparkSession,
-      records: DataFrame, // columns: id, fileId, attr columns
+      records: DataFrame,
       fileIdCol: String,
-      specs: Seq[AttributeSpec]): ModelIndex = {
-    import spark.implicits._
-
-    // ONE pass over the input: melt to (aid, value, file) counted rows,
-    // nulls KEPT (posexplode emits null array elements) so file sizes
-    // and per-(attribute, file) observed counts fall out of the same
-    // aggregate the dictionaries come from — no separate stats pass.
-    val melted = records
-      .select(col(fileIdCol).cast("string").as("f"),
-        posexplode(array(
-          specs.map(s => col(s.name).cast("string")): _*)).as(Seq("aid", "v")))
-      .groupBy(col("aid"), col("v"), col("f"))
-      .agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // per-attribute domain sizes BEFORE collecting the dictionaries —
-    // an oversized (free-text) attribute fails with a diagnostic while
-    // the data is still distributed
-    melted.filter(col("v").isNotNull)
-      .groupBy(col("aid")).agg(countDistinct(col("v")).as("n"))
-      .as[(Int, Long)].collect()
-      .foreach { case (aid, n) =>
-        AttributeIndex.requireDomainFits(specs(aid).name, n)
-      }
-    val rows = melted.as[(Int, String, String, Long)].collect()
-    melted.unpersist(blocking = false)
-
-    // attribute 0's rows cover every record once (null or not) → file sizes
-    val fileSizes = rows.filter(_._1 == 0).groupBy(_._3)
-      .map { case (f, rs) => f -> rs.map(_._4).sum }
-    val observed = rows.filter(_._2 != null)
-      .groupBy(r => (r._1, r._3))
-      .map { case (k, rs) => k -> rs.map(_._4).sum }
-    val byAttr = rows.filter(_._2 != null).groupBy(_._1)
-    val attrs = specs.zipWithIndex.map { case (s, i) =>
-      val counted = byAttr.getOrElse(i, Array.empty[(Int, String, String, Long)])
-        .groupBy(_._2).map { case (v, rs) => (v, rs.map(_._4).sum) }.toArray
-      AttributeIndex.fromCounts(spark, counted, i, s)
-    }.toIndexedSeq
-
-    new ModelIndex(attrs, fileSizes, observed, fileSizes.values.sum)
-  }
+      specs: Seq[AttributeSpec]): ModelIndex =
+    RecordPass.run(spark, records, None, col(fileIdCol), specs).index
 }

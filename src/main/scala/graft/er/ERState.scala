@@ -2,13 +2,11 @@ package graft.er
 
 import java.util.SplittableRandom
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.Rng
@@ -260,10 +258,15 @@ object ERState {
     * starts as its own singleton entity — entity values copied from the
     * record, missing attributes drawn from the empirical prior (seeded by
     * record id, so init is retry-deterministic), no distortion anywhere,
-    * θ at its prior mean. The records are encoded on the executors and
-    * collected into the record table; the singletons are placed on their
-    * logical partitions on the driver, so the state starts in the layout
-    * every step keeps. */
+    * θ at its prior mean.
+    *
+    * One Spark job: [[RecordPass]] builds the index and encodes the
+    * records in one pass, and `partitioner` is called once, on that
+    * index. The driver then builds the record table, places the
+    * singletons on their logical partitions (the layout every step keeps)
+    * and folds the initial summary over those blocks, merged in partition
+    * order as [[summarize]] merges its tasks' folds. The blocks are
+    * persisted but first computed by the first `step()`'s job. */
   def initialize(
       spark: SparkSession,
       records: DataFrame, // columns: id, fileId, attr columns (all strings)
@@ -273,44 +276,15 @@ object ERState {
       partitioner: ModelIndex => EntityPartitioner,
       seed: Long,
       samplerKind: GibbsKernel.SamplerKind = GibbsKernel.Gibbs): ERState = {
-    val withFile = fileIdCol match {
-      case Some(f) => records.withColumn("__file", col(f).cast("string"))
-      case None => records.withColumn("__file", org.apache.spark.sql.functions.lit("0"))
-    }
-    val idx = ModelIndex.build(spark, withFile, "__file", specs)
-    val idxB = spark.sparkContext.broadcast(idx)
+    val pass = RecordPass.run(spark, records, Some(idCol),
+      fileIdCol.fold(lit("0"))(col), specs)
+    val idx = pass.index
     val part = partitioner(idx)
-
-    val attrNames = specs.map(_.name)
-    val projected = withFile.select(
-      (col(idCol).cast("string").as("id") ::
-        col("__file").as("fileId") ::
-        attrNames.map(n => col(n).cast("string").as(n)).toList): _*)
-
     val nA = specs.length
-    // one (ids, files, values) chunk per input partition
-    val chunks = projected.rdd.mapPartitions { rows =>
-      val ids = ArrayBuffer.empty[String]
-      val files = ArrayBuffer.empty[String]
-      val vals = ArrayBuffer.empty[Int]
-      rows.foreach { row =>
-        ids += row.getString(0)
-        files += row.getString(1)
-        var a = 0
-        while (a < nA) {
-          vals += idxB.value.attributes(a).idOf(
-            if (row.isNullAt(2 + a)) null else row.getString(2 + a))
-          a += 1
-        }
-      }
-      Iterator((ids.toArray, files.toArray, vals.toArray))
-    }.collect()
-    val ids = chunks.flatMap(_._1)
-    val (table, _) = RecordTable.build(nA, ids, chunks.flatMap(_._2),
-      chunks.flatMap(_._3))
+    val (table, _) = RecordTable.build(nA, pass.ids, pass.files, pass.values)
 
     // entity values: copy the record, impute missing from the empirical prior
-    val blocks = Array.fill(part.numPartitions)(new StateBlock.Builder(nA))
+    val builders = Array.fill(part.numPartitions)(new StateBlock.Builder(nA))
     val clean = new Array[Boolean](nA)
     var r = 0
     while (r < table.size) {
@@ -319,19 +293,19 @@ object ERState {
         val v = table.value(r, a)
         if (v != MissingValue) v else idx.attributes(a).samplePowered(0, rng)
       }
-      val b = blocks(part.partitionOf(entityVals))
+      val b = builders(part.partitionOf(entityVals))
       b.entity(entityVals)
       b.member(r, clean, 0)
       r += 1
     }
+    val blocks = builders.map(_.result())
 
     val theta = idx.priorTheta
-    val state = fromBlocks(spark, idxB, table, part, blocks.map(_.result()),
-      theta, 0L, seed, samplerKind, SummaryAggregator.zero)
-    val summary = materialize(state.clusterRdd)(
-      summarize(state.clusterRdd, idxB, state.records, theta))
-    new ERState(spark, idxB, state.records, part, state.clusterRdd, theta, 0L,
-      seed, samplerKind, summary)
+    val th = dense(table, theta)
+    val summary = blocks.map(b => SummaryAggregator.fold(Iterator(b), table, idx, th))
+      .foldLeft(SummaryAggregator.zero)(SummaryAggregator.merge)
+    fromBlocks(spark, spark.sparkContext.broadcast(idx), table, part, blocks,
+      theta, 0L, seed, samplerKind, summary)
   }
 
   /** θ in the kernel's dense layout for `table`'s files. */

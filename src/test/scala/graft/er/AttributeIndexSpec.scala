@@ -1,5 +1,7 @@
 package graft.er
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -7,6 +9,8 @@ import graft.core.{ConstantSimilarity, LevenshteinSimilarity}
 import graft.er.model._
 
 class AttributeIndexSpec extends AnyFunSuite {
+  import AttributeIndexSpec._
+
   lazy val spark = TestSpark.spark
 
   private val states = Seq(
@@ -33,7 +37,7 @@ class AttributeIndexSpec extends AnyFunSuite {
   }
 
   test("dictionary is sorted and ids round-trip") {
-    val idx = AttributeIndex.build(spark, statesDf, 0,
+    val idx = attributeIndex(spark, statesDf,
       AttributeSpec("state", ConstantSimilarity, BetaParams(1.0, 1.0)))
     assert(idx.values.toSeq == states.sorted)
     states.foreach { s => assert(idx.values(idx.idOf(s)) == s) }
@@ -42,7 +46,7 @@ class AttributeIndexSpec extends AnyFunSuite {
   }
 
   test("empirical distribution matches counts") {
-    val idx = AttributeIndex.build(spark, statesDf, 0,
+    val idx = attributeIndex(spark, statesDf,
       AttributeSpec("state", ConstantSimilarity, BetaParams(1.0, 1.0)))
     val total = (1 to states.length).sum.toDouble
     states.zipWithIndex.foreach { case (s, i) =>
@@ -52,7 +56,7 @@ class AttributeIndexSpec extends AnyFunSuite {
   }
 
   test("constant similarity: no neighbors, unit norms") {
-    val idx = AttributeIndex.build(spark, statesDf, 0,
+    val idx = attributeIndex(spark, statesDf,
       AttributeSpec("state", ConstantSimilarity, BetaParams(1.0, 1.0)))
     assert(idx.neighbors.forall(_.isEmpty))
     assert(idx.simNorms.forall(z => math.abs(z - 1.0) < 1e-12))
@@ -62,7 +66,7 @@ class AttributeIndexSpec extends AnyFunSuite {
 
   test("levenshtein neighbors match brute force") {
     val fn = LevenshteinSimilarity(5.0, 10.0)
-    val idx = AttributeIndex.build(spark, statesDf, 0,
+    val idx = attributeIndex(spark, statesDf,
       AttributeSpec("state", fn, BetaParams(1.0, 1.0)))
     // brute-force all pairs
     for (i <- states.indices; j <- states.indices if i != j) {
@@ -179,7 +183,7 @@ class AttributeIndexSpec extends AnyFunSuite {
 
   test("simNorm equals direct sum over the domain") {
     val fn = LevenshteinSimilarity(5.0, 10.0)
-    val idx = AttributeIndex.build(spark, statesDf, 0,
+    val idx = attributeIndex(spark, statesDf,
       AttributeSpec("state", fn, BetaParams(1.0, 1.0)))
     for (v <- states.indices) {
       val direct = states.indices.map { w =>
@@ -191,7 +195,7 @@ class AttributeIndexSpec extends AnyFunSuite {
 
   test("distortion density sums to one given any entity value") {
     val fn = LevenshteinSimilarity(5.0, 10.0)
-    val idx = AttributeIndex.build(spark, statesDf, 0,
+    val idx = attributeIndex(spark, statesDf,
       AttributeSpec("state", fn, BetaParams(1.0, 1.0)))
     for (y <- states.indices) {
       val total = states.indices.map(x => idx.distortionProb(x, y)).sum
@@ -201,7 +205,7 @@ class AttributeIndexSpec extends AnyFunSuite {
 
   test("powered totals match direct computation") {
     val fn = LevenshteinSimilarity(5.0, 10.0)
-    val idx = AttributeIndex.build(spark, statesDf, 0,
+    val idx = attributeIndex(spark, statesDf,
       AttributeSpec("state", fn, BetaParams(1.0, 1.0)))
     for (k <- 0 to 3) {
       val direct = states.indices.map { v =>
@@ -226,4 +230,14 @@ class AttributeIndexSpec extends AnyFunSuite {
     assert(mi.observedCounts((1, "A")) == 1L)
     assert(mi.observedCounts((1, "B")) == 1L)
   }
+}
+
+object AttributeIndexSpec {
+
+  /** The index of the one attribute in `column`'s single column, built by
+    * `ModelIndex.build` with every record in one file. */
+  def attributeIndex(spark: SparkSession, column: DataFrame,
+      spec: AttributeSpec): AttributeIndex =
+    ModelIndex.build(spark, column.toDF(spec.name).withColumn("__file", lit("0")),
+      "__file", Seq(spec)).attributes(0)
 }

@@ -325,6 +325,16 @@ class ERProjectSpec extends AnyFunSuite {
       .select(array_join(col("records"), ", ")).collect().map(_.getString(0))
       .toSeq.sorted
 
+  test("the sample step starts its chain in one job") {
+    val dir = Files.createTempDirectory("ersample").toString
+    writeTwoFiles(dir)
+    val (_, jobs) = jobsDuring(ERProject.run(spark, twoFileConf(dir, Seq("sample"))))
+    // with the index from a melt aggregation and a second pass to encode
+    // the records, this step ran 18 jobs on this input; initialize alone
+    // took 8 of them
+    assert(jobs <= 11, s"$jobs jobs")
+  }
+
   test("summarize + evaluate match the separate queries, in at most 14 jobs") {
     val dir = Files.createTempDirectory("erposterior").toString
     writeTwoFiles(dir)

@@ -130,10 +130,20 @@ class ERTransitionSpec extends AnyFunSuite {
       1e-9 * math.abs(want.logLikelihood))
   }
 
+  test("initialize is one Spark job") {
+    val (st, (jobs, _)) = shape(spark.sparkContext)(init(GibbsKernel.PCG1))
+    // an index built by a melt aggregation, with a second pass to encode
+    // the records and a job for the initial summary, took
+    // ParentInitializeJobs jobs here
+    assert(jobs == 1, s"$jobs jobs, $ParentInitializeJobs before")
+    st.release()
+  }
+
   test("a step is one job of two stages and a local cut one job, at every sweep") {
     val sc = spark.sparkContext
     var st = init(GibbsKernel.PCG1)
     assert(st.partitioner.numPartitions == 2)
+    // the first step also computes the blocks initialize placed
     val steps = (1 to 9).map { _ =>
       val (next, n) = shape(sc)(st.step())
       st = next
@@ -318,6 +328,11 @@ object ERTransitionSpec {
     * shuffles at most a third of the bytes", measured on the code whose
     * state was an RDD of Java-serialized EntityClusters. */
   val ParentShuffleBytesPerStep = 3026L
+
+  /** Spark jobs `ERState.initialize` ran on this spec's input when the
+    * index came from a grouped melt aggregation and the records were
+    * encoded in a second pass. */
+  val ParentInitializeJobs = 8
 
   /** (jobs, stages submitted) while `f` runs. */
   def shape[A](sc: org.apache.spark.SparkContext)(f: => A): (A, (Int, Int)) = {

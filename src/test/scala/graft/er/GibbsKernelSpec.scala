@@ -20,7 +20,7 @@ class GibbsKernelSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq.fill(4)("ANNA") ++ Seq.fill(3)("ANNE") ++ Seq.fill(2)("BOB") ++
       Seq("BORIS")
-    AttributeIndex.build(spark, df.toDF("name"), 0,
+    AttributeIndexSpec.attributeIndex(spark, df.toDF("name"),
       AttributeSpec("name", LevenshteinSimilarity(5.0, 10.0), BetaParams(0.5, 50.0)))
   }
 

@@ -13,7 +13,7 @@ class PartitionerSpec extends AnyFunSuite {
     import spark.implicits._
     // skewed domain: value "v00" dominates
     val vals = (0 until 20).flatMap(i => Seq.fill(21 - i)(f"v$i%02d"))
-    val idx = AttributeIndex.build(spark, vals.toDF("a"), 0,
+    val idx = AttributeIndexSpec.attributeIndex(spark, vals.toDF("a"),
       AttributeSpec("a", ConstantSimilarity, BetaParams(1.0, 1.0)))
     new ModelIndex(IndexedSeq(idx), Map("0" -> vals.length.toLong),
       Map((0, "0") -> vals.length.toLong), vals.length.toLong)
@@ -52,7 +52,7 @@ class PartitionerSpec extends AnyFunSuite {
     // LPT bin-packing reaches a perfect 10/10.
     val weights = Map("a" -> 8, "b" -> 7, "c" -> 1, "d" -> 1, "e" -> 3)
     val vals = weights.toSeq.sortBy(_._1).flatMap { case (v, n) => Seq.fill(n)(v) }
-    val idx = AttributeIndex.build(spark, vals.toDF("x"), 0,
+    val idx = AttributeIndexSpec.attributeIndex(spark, vals.toDF("x"),
       AttributeSpec("x", ConstantSimilarity, BetaParams(1.0, 1.0)))
     val mi = new ModelIndex(IndexedSeq(idx), Map("0" -> vals.length.toLong),
       Map((0, "0") -> vals.length.toLong), vals.length.toLong)
