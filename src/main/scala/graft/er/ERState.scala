@@ -164,18 +164,9 @@ final class ERState private (
   }
 
   /** Current linkage structure, one row per partition (reference A1,
-    * State.scala:102-112); isolates dropped (P5). Narrow: partition p's
-    * block is already logical partition p, so no shuffle and no encoder of
-    * whole clusters. */
-  def linkageSample(): Dataset[LinkageSample] = {
-    val it = iteration
-    val table = records
-    spark.createDataset(clusterRdd.mapPartitionsWithIndex { (pid, blocks) =>
-      val linkage = blocks.flatMap(_.linkage(table.value)).toSeq
-      if (linkage.isEmpty) Iterator.empty
-      else Iterator(LinkageSample(it, pid, linkage))
-    })
-  }
+    * State.scala:102-112): the one-state case of
+    * [[ERState.linkageSamples]]. */
+  def linkageSample(): Dataset[LinkageSample] = ERState.linkageSamples(Seq(this))
 
   /** Predicted clusters (record-id sets) at the current state. */
   def currentClusters(): Dataset[Seq[String]] = {
@@ -201,6 +192,35 @@ object ERState {
     * the blocks it persists nor deserializes the ones it reads (the sweep
     * copies a block before it mutates anything). */
   private val Level = StorageLevel.MEMORY_AND_DISK
+
+  /** The linkage rows of `states`, one per state and logical partition
+    * that links an entity (isolates dropped, P5). Narrow: partition p's
+    * block is already logical partition p, so no shuffle and no encoder of
+    * whole clusters. Each state's rows are tagged with their own partition
+    * before the union, and the tagging keeps the state's partitioner:
+    * when every state carries the step's `HashPartitioner(n)`, Spark
+    * aligns the union into n partitions (a `PartitionerAwareUnionRDD`), so
+    * one task emits every state's row of one logical partition and a
+    * write of the batch is one task per partition. A state without a
+    * partitioner (the parallelized blocks of `initialize` or `resume`)
+    * makes Spark fall back to a plain union, one task per state and
+    * partition, with the same rows. */
+  def linkageSamples(states: Seq[ERState]): Dataset[LinkageSample] = {
+    val spark = states.head.spark
+    import spark.implicits._
+    val rows = states.map { st =>
+      val it = st.iteration
+      val table = st.records
+      st.clusterRdd.mapPartitionsWithIndex(
+        { (pid, blocks) =>
+          val linkage = blocks.flatMap(_.linkage(table.value)).toSeq
+          if (linkage.isEmpty) Iterator.empty
+          else Iterator(LinkageSample(it, pid, linkage))
+        },
+        preservesPartitioning = true)
+    }
+    spark.createDataset(spark.sparkContext.union(rows))
+  }
 
   /** Run the job that fills the persisted `rdd`. If it fails, the cache
     * is dropped before the failure propagates, so a failed transition

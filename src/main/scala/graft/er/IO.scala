@@ -129,15 +129,16 @@ object IO {
     finally oos.close()
   }
 
-  /** S4: resume a saved sampler state. */
+  /** S4: resume a saved sampler state. The clusters are read with their
+    * encoder's schema, as [[readChain]] reads the chain, so the only job
+    * is the one `ERState.resume` collects them with. */
   def loadState(spark: SparkSession, dir: String): ERState = {
     val ois = new ObjectInputStream(
       Files.newInputStream(Paths.get(s"$dir/driver-state.bin")))
     val ds = try ois.readObject().asInstanceOf[DriverState] finally ois.close()
     implicit val enc = Encoders.product[EntityCluster]
-    val clusters = spark.read.parquet(s"$dir/clusters.parquet")
-      .select(col("partitionId"), col("entityValues"), col("records"))
-      .as[EntityCluster]
+    val clusters = spark.read.schema(enc.schema)
+      .parquet(s"$dir/clusters.parquet").as[EntityCluster]
     ERState.resume(spark, ds.index, ds.partitioner, clusters, ds.theta,
       ds.iteration, ds.baseSeed, ds.samplerKind, ds.summary)
   }

@@ -26,15 +26,20 @@ object Sampler {
       diagnostics: Seq[Diagnostics])
 
   /** Run `numSweeps` transitions from `init`. Post burn-in, every
-    * `thin`-th linkage sample is buffered and (optionally) appended to
-    * `chainPath` as Parquet partitioned by partitionId — the reference's
-    * chain layout (BufferedRDDWriter.scala:44-50). When no path is given
-    * the thinned samples are unioned into an in-memory Dataset.
-    */
-  /** `sweepsPerJob` > 1 runs blocked sweeps (GibbsKernel.sweepMany): k
-    * sweeps per shuffle+action. Samples/diagnostics are only observable at
-    * block boundaries, so pick a value dividing `thin` (and `burnIn`) to
-    * keep the recorded-sample count unchanged. */
+    * `thin`-th state is buffered, and every `writeBufferSize` samples the
+    * buffer is flushed: [[ERState.linkageSamples]] builds the batch's
+    * linkage rows with one task per logical partition for all buffered
+    * samples, and the batch is appended to `chainPath` as Parquet
+    * partitioned by partitionId — the reference's chain layout
+    * (BufferedRDDWriter.scala:44-50) — one file per partition and flush.
+    * When no path is given the batches are unioned into an in-memory
+    * Dataset.
+    *
+    * `sweepsPerJob` > 1 runs blocked sweeps (GibbsKernel.sweepBlock,
+    * through ERState.step): k sweeps per shuffle+action. Samples and
+    * diagnostics are only observable at block boundaries, so pick a value
+    * dividing `thin` (and `burnIn`) to keep the recorded-sample count
+    * unchanged. */
   def run(
       init: ERState,
       numSweeps: Int,
@@ -48,10 +53,10 @@ object Sampler {
     val t0 = System.currentTimeMillis()
     var state = init
     var diags = Vector.empty[Diagnostics]
-    var buffered = Vector.empty[Dataset[LinkageSample]]
+    var buffered = Vector.empty[ERState]
     var collected = Vector.empty[Dataset[LinkageSample]]
-    // cluster caches backing the lazy samples in `buffered`: released
-    // once a parquet flush has materialized them; the in-memory chain
+    // cluster caches of the states in `buffered`: released once a
+    // parquet flush has materialized their samples; the in-memory chain
     // keeps them (its samples stay lazy projections over cache, exactly
     // the footprint eager checkpoints had — the caller's cleanup
     // releases everything)
@@ -79,7 +84,7 @@ object Sampler {
     // last checkpoint cut
     def flush(current: RDD[StateBlock]): Unit = {
       if (buffered.nonEmpty) {
-        val batch = buffered.reduce(_ unionAll _)
+        val batch = ERState.linkageSamples(buffered)
         chainPath match {
           case Some(p) =>
             batch.write.mode(SaveMode.Append).partitionBy("partitionId").parquet(p)
@@ -119,11 +124,11 @@ object Sampler {
           if (chainPath.isDefined && retained.isEmpty) dropSuperseded()
         }
         if (sweep > burnIn && (sweep - burnIn) % thin == 0) {
-          // The sample stays LAZY over this state's persisted clusters (no
-          // per-sample checkpoint job); the state is retained until the
-          // sample is materialized (parquet flush) or handed to the caller
-          // (in-memory chain).
-          buffered :+= state.linkageSample()
+          // The state is buffered and its sample built at the flush from
+          // its persisted blocks (no per-sample checkpoint job); the state
+          // is retained until the sample is materialized (parquet flush) or
+          // handed to the caller (in-memory chain).
+          buffered :+= state
           retained :+= state.clusterRdd
           justSampled = true
           if (buffered.size >= writeBufferSize) flush(state.clusterRdd)
@@ -158,10 +163,7 @@ object Sampler {
     }
 
     val chain = chainPath match {
-      case Some(p) =>
-        implicit val enc: org.apache.spark.sql.Encoder[LinkageSample] =
-          org.apache.spark.sql.Encoders.product[LinkageSample]
-        Some(state.spark.read.parquet(p).as[LinkageSample])
+      case Some(p) => Some(IO.readChain(state.spark, p))
       case None =>
         if (collected.isEmpty) None else Some(collected.reduce(_ unionAll _))
     }

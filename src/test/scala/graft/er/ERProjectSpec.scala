@@ -331,8 +331,9 @@ class ERProjectSpec extends AnyFunSuite {
     val (_, jobs) = jobsDuring(ERProject.run(spark, twoFileConf(dir, Seq("sample"))))
     // with the index from a melt aggregation and a second pass to encode
     // the records, this step ran 18 jobs on this input; initialize alone
-    // took 8 of them
-    assert(jobs <= 11, s"$jobs jobs")
+    // took 8 of them. Opening the written chain by inferring its schema
+    // from the Parquet footers took one more (11)
+    assert(jobs <= 10, s"$jobs jobs")
   }
 
   test("summarize + evaluate match the separate queries, in at most 14 jobs") {

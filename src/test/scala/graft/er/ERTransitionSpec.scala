@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{SparkException, TestAccess}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted, SparkListenerTaskEnd}
+  SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -55,6 +55,27 @@ class ERTransitionSpec extends AnyFunSuite {
 
   private def twoPartitions(idx: ModelIndex): EntityPartitioner =
     KDTreePartitioner.fit(idx, Seq(0), 1)
+
+  private def fourPartitions(idx: ModelIndex): EntityPartitioner =
+    KDTreePartitioner.fit(idx, Seq(0, 1), 2)
+
+  /** Linkage rows as a sorted multiset of (iteration, partition, clusters). */
+  private def rows(samples: Seq[LinkageSample]): Seq[(Long, Int, String)] =
+    samples.map(s => (s.iteration, s.partitionId,
+      s.linkageStructure.map(_.sorted.mkString(",")).sorted.mkString(";")))
+      .sorted
+
+  /** Parquet part files per `partitionId=p` directory of a chain. */
+  private def partFiles(chain: String): Map[String, Int] = {
+    val w = Files.list(Paths.get(chain))
+    try w.iterator().asScala.filter(Files.isDirectory(_)).map { d =>
+      val f = Files.list(d)
+      try d.getFileName.toString ->
+        f.iterator().asScala.count(_.getFileName.toString.startsWith("part-"))
+      finally f.close()
+    }.toMap
+    finally w.close()
+  }
 
   private def init(kind: GibbsKernel.SamplerKind,
       partitioner: ModelIndex => EntityPartitioner = twoPartitions): ERState =
@@ -109,7 +130,7 @@ class ERTransitionSpec extends AnyFunSuite {
 
   test("summarize equals a driver-side recount; repeated calls are bit-identical") {
     val st = (1 to 3).foldLeft(
-      init(GibbsKernel.PCG1, idx => KDTreePartitioner.fit(idx, Seq(0, 1), 2))
+      init(GibbsKernel.PCG1, fourPartitions)
     )((s, _) => s.step())
     val parts = st.clusterView.mapPartitions(it => Iterator(it.size)).collect()
     assert(parts.length == 4 && parts.count(_ > 0) > 1, parts.toSeq)
@@ -209,7 +230,7 @@ class ERTransitionSpec extends AnyFunSuite {
   test("the state is one block per partition, after init, steps and cuts") {
     def blocks(st: ERState) =
       st.clusterRdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
-    var st = init(GibbsKernel.PCG1, idx => KDTreePartitioner.fit(idx, Seq(0, 1), 2))
+    var st = init(GibbsKernel.PCG1, fourPartitions)
     assert(blocks(st) == Seq(1, 1, 1, 1))
     (1 to 3).foreach { _ =>
       st = st.step()
@@ -231,7 +252,7 @@ class ERTransitionSpec extends AnyFunSuite {
     val st1 = init(GibbsKernel.PCG1).step()
     val st2 = st1.step(retainClusters = true)
     val st3 = st2.step(retainClusters = true)
-    val batch = Seq(st2, st3).map(_.linkageSample()).reduce(_ unionAll _)
+    val batch = ERState.linkageSamples(Seq(st2, st3))
     val dir = Files.createTempDirectory("graft-er-flush").resolve("chain").toString
     val (_, (jobs, stages)) = shape(sc)(
       batch.write.partitionBy("partitionId").parquet(dir))
@@ -241,6 +262,68 @@ class ERTransitionSpec extends AnyFunSuite {
     assert(chain.filter(_.iteration == 3L).flatMap(_.linkageStructure.flatten)
       .sorted.toSeq == records.collect().map(_.getString(0)).sorted.toSeq)
     Seq(st2, st3).foreach(_.clusterRdd.unpersist(blocking = true))
+  }
+
+  test("a flush of k samples over n partitions is one write task and one file per partition") {
+    val sc = spark.sparkContext
+    var st = init(GibbsKernel.PCG1, fourPartitions).step()
+    val states = (1 to 3).map { _ => st = st.step(retainClusters = true); st }
+    val n = st.numPartitions
+    assert(n == 4)
+    val batch = ERState.linkageSamples(states)
+    assert(batch.rdd.getNumPartitions == n)
+    val dir = Files.createTempDirectory("graft-er-flush").resolve("chain").toString
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        tasks.add(e.stageInfo.numTasks); ()
+      }
+    }
+    TestAccess.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    val (_, (jobs, stages)) = try shape(sc)(
+      batch.write.partitionBy("partitionId").parquet(dir))
+    finally sc.removeSparkListener(listener)
+    // the union of one Dataset per sample wrote k·n tasks and files
+    assert((jobs, stages) == ((1, 1)))
+    assert(tasks.asScala.toSeq == Seq(n))
+    val files = partFiles(dir)
+    assert(files.values.forall(_ == 1) && files.size == n, files)
+
+    val perState = states.flatMap(_.linkageSample().collect())
+    assert(rows(IO.readChain(spark, dir).collect()) == rows(perState))
+    assert(rows(batch.collect()) == rows(perState))
+    states.foreach(_.clusterRdd.unpersist(blocking = true))
+  }
+
+  test("a batch with a state without a partitioner still yields its rows") {
+    val st0 = init(GibbsKernel.PCG1, fourPartitions)
+    assert(st0.clusterRdd.partitioner.isEmpty)
+    val st1 = st0.step(retainClusters = true)
+    val st2 = st1.step(retainClusters = true)
+    val states = Seq(st0, st1, st2)
+    val batch = ERState.linkageSamples(states)
+    // Spark falls back to a plain union: one task per state and partition
+    assert(batch.rdd.getNumPartitions == 3 * st0.numPartitions)
+    assert(rows(batch.collect()) ==
+      rows(states.flatMap(_.linkageSample().collect())))
+    states.foreach(_.clusterRdd.unpersist(blocking = true))
+  }
+
+  test("the in-memory chain holds the durable chain's rows, one file per partition and flush") {
+    val dir = Files.createTempDirectory("graft-er-flush").resolve("chain").toString
+    // six samples, flushed as four and two
+    def run(chainPath: Option[String]) = Sampler.run(init(GibbsKernel.PCG1, fourPartitions),
+      numSweeps = 6, checkpointEvery = 3, writeBufferSize = 4, chainPath = chainPath)
+    val durable = run(Some(dir))
+    val inMemory = run(None)
+    val files = partFiles(dir)
+    assert(files.nonEmpty && files.values.forall(_ == 2), files)
+    val chain = rows(durable.chain.get.collect())
+    assert(chain.map(_._1).distinct == (1L to 6L))
+    assert(rows(inMemory.chain.get.collect()) == chain)
+    assert(rows(IO.readChain(spark, dir).collect()) == chain)
+    Seq(durable.state, inMemory.state).foreach(_.clusterRdd.unpersist(blocking = true))
   }
 
   test("a step shuffles at most a third of the bytes the cluster objects did") {
@@ -271,7 +354,11 @@ class ERTransitionSpec extends AnyFunSuite {
     // this test's 60 records, PCG-I, two partitions, seed 1234, 3 sweeps
     val saved = Paths.get(getClass.getResource(
       "/er/state-saved-with-cluster-records/driver-state.bin").toURI).getParent
-    val resumed = IO.loadState(spark, saved.toString)
+    val (resumed, (loadJobs, _)) = shape(spark.sparkContext)(
+      IO.loadState(spark, saved.toString))
+    // inferring the clusters' schema from the Parquet footers took a
+    // second job
+    assert(loadJobs == 1, s"$loadJobs jobs, 2 before")
     assert(resumed.iteration == 3L && resumed.partitioner.numPartitions == 2)
     assert(resumed.clusterRdd.mapPartitions(it => Iterator(it.size)).collect()
       .toSeq == Seq(1, 1))
