@@ -14,7 +14,10 @@ object GateRunner {
       s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'"))
 
   /** The gate session: local[cpus], one shuffle partition per core, AQE,
-    * UTC session time, no UI, WARN logging. */
+    * UTC session time, no UI, WARN logging, and the engine's SQL extension
+    * ([[GraftExtensions]]: `lev_sim`, `strip_accents`, `arg_max_struct` and
+    * the rest resolve in SQL text, as in the test session; its
+    * BandedRangeJoinRule stays inert until its conf key is set). */
   def session(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -23,6 +26,7 @@ object GateRunner {
       .config("spark.sql.maxPlanStringLength", "16384")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       // the default 100-entry whole-stage-codegen class cache (a STATIC
       // conf) thrashes under a 131-query suite: by the time the late
       // heavy queries run, their JIT-warmed generated classes have been

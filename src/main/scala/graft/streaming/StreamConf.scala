@@ -3,19 +3,32 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Session isolation + shuffle-partition pinning for the drain-once
-  * STATEFUL streaming runners.
+/** Session isolation, shuffle-partition pinning and checkpoint placement
+  * for the drain-once STATEFUL streaming runners.
   *
-  * A stateful streaming operator keeps one state store per shuffle
-  * partition, and per-micro-batch commit cost is per-STORE, not
-  * per-row (each store writes/renames its delta file on every batch).
-  * The batch session's 32 shuffle partitions are right for batch
-  * shuffles, but a drain-once stream over one input file carries tiny
-  * per-partition state — 32 stores cost ~4× the fixed commit overhead
-  * of 8 for zero parallelism benefit (measured on q_stream_join in an
-  * earlier round: 14.2 → 2.8 s). At real scale state VOLUME grows and
-  * more partitions become right — which is why this is a per-query
-  * knob, not a session default.
+  * What a commit costs. Every micro-batch commits as small atomic file
+  * writes: an offset-log and a commit-log entry on the driver, and on the
+  * executors one delta file per state store (one store per shuffle
+  * partition and stateful operator), plus, since Spark 4.1, a checksum
+  * file beside each. So the fixed cost of a batch grows with the number
+  * of STORES, not rows, and the cost of one file write is what every
+  * batch multiplies:
+  *  - Stores: the batch session's 32 shuffle partitions are right for
+  *    batch shuffles, but a drain-once stream over one input file carries
+  *    tiny per-partition state, so the runners pin 8 (q_stream_join:
+  *    14.2 → 2.8 s when this was introduced). At real scale state VOLUME
+  *    grows and more partitions become right, so `n` is per query, not a
+  *    session default.
+  *  - Files: Spark's default manager writes through Hadoop's local
+  *    filesystem, which, without libhadoop, starts a `chmod` process per
+  *    created file and, through FileContext, a `readlink` process per
+  *    rename: 1,453 processes in one q_stream_join run. The isolated
+  *    session installs [[LocalCheckpointFileManager]], which writes
+  *    `file:` checkpoints through java.nio (temp file, then an atomic
+  *    move) and starts none (q_stream_join in perfbench's gates workload
+  *    on a 4-core box: 2.2-2.4 → 0.9-1.1 s).
+  *  - Disk: the throwaway checkpoints go to tmpfs when there is one, so
+  *    no batch waits on a disk flush.
   *
   * Isolation model: each runner builds its sources AND starts its
   * query on a private `newSession()` that starts from DEFAULT runtime
@@ -71,18 +84,6 @@ object StreamConf {
     "spark.sql.parquet.int96RebaseModeInWrite",
     StateStoreKey)
 
-  /** An isolated session with the stream's conf pinned. `newSession()`
-    * shares the SparkContext and builder-level conf but starts from
-    * DEFAULT runtime conf; only [[InheritedConf]] (timezone, ANSI
-    * mode, state-store opt-in) is copied from the parent — an
-    * allowlist, NOT a `getAll` snapshot, so nothing a concurrent
-    * thread transiently set on the shared session can ride along.
-    * Then the shuffle pin and state-store provider are applied on the
-    * new session only. `stateStore` is the explicit backend choice
-    * (`Some("rocksdb")` → RocksDB); when absent, the parent's
-    * `StateStoreKey` conf opt-in still applies (the library-level
-    * switch). Runners set any source-reading conf they need (e.g.
-    * nanos-as-long) on the returned session themselves. */
   /** Ephemeral checkpoint root for the drain-once runners. Micro-batch
     * offset/commit logs and state-store delta files are written and
     * fsync'd per batch per store; for a drain-once gate they are
@@ -99,7 +100,7 @@ object StreamConf {
   // JVM shutdown hook (and kept a live tmpfs dir) per call — unbounded
   // hook accumulation for no isolation benefit, since the per-call
   // subdirectory is already private.
-  private lazy val processCheckpointRoot: java.nio.file.Path = {
+  private[streaming] lazy val processCheckpointRoot: java.nio.file.Path = {
     val shm = new java.io.File("/dev/shm")
     val base =
       if (shm.isDirectory && shm.canWrite) shm.toPath
@@ -119,6 +120,20 @@ object StreamConf {
     java.nio.file.Files
       .createTempDirectory(processCheckpointRoot, "session").toString
 
+  /** An isolated session with the stream's conf pinned. `newSession()`
+    * shares the SparkContext and builder-level conf but starts from
+    * DEFAULT runtime conf; only [[InheritedConf]] (timezone, ANSI
+    * mode, state-store opt-in) is copied from the parent — an
+    * allowlist, NOT a `getAll` snapshot, so nothing a concurrent
+    * thread transiently set on the shared session can ride along.
+    * Then the shuffle pin and state-store provider are applied on the
+    * new session only, and, unless the deployment names its own, the
+    * checkpoint file manager is [[LocalCheckpointFileManager]].
+    * `stateStore` is the explicit backend choice
+    * (`Some("rocksdb")` → RocksDB); when absent, the parent's
+    * `StateStoreKey` conf opt-in still applies (the library-level
+    * switch). Runners set any source-reading conf they need (e.g.
+    * nanos-as-long) on the returned session themselves. */
   def isolated(parent: SparkSession, n: Int = 8,
       stateStore: Option[String] = None): SparkSession = {
     val s = parent.newSession()
@@ -133,6 +148,9 @@ object StreamConf {
     if (s.conf.getOption("spark.sql.streaming.checkpointLocation").isEmpty)
       s.conf.set("spark.sql.streaming.checkpointLocation",
         ephemeralCheckpointRoot())
+    if (s.conf.getOption(LocalCheckpointFileManager.ConfKey).isEmpty)
+      s.conf.set(LocalCheckpointFileManager.ConfKey,
+        classOf[LocalCheckpointFileManager].getName)
     val backend =
       stateStore.orElse(parent.conf.getOption(StateStoreKey))
     if (backend.contains("rocksdb"))

@@ -62,9 +62,8 @@ object TestSpark {
       .master("local[4, 2]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      // the extension surface a deployment installs through
-      // spark.sql.extensions (GateRunner's session does not: gates call
-      // the Scala API)
+      // the SQL extension GateRunner.session installs too, so a function
+      // that resolves here resolves under Verify and Bench
       .config("spark.sql.extensions", "graft.GraftExtensions")
       // Deep iterative plans (MCMC) otherwise render multi-GB debug strings
       // at persist() time — the string is UI-only, cap it.

@@ -51,6 +51,41 @@ class EventStreamsSpec extends AnyFunSuite {
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
   }
 
+  test("a drain-once stateful runner checkpoints without Hadoop's local filesystem") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions._
+    val dir = flavorDirs("ltz")
+    val name = "stream_counts_nio_ckpt"
+    val q = EventStreams.runWindowedCountsOnce(spark, dir, name)
+    q.awaitTermination(120000)
+    val streamed = spark.table(name)
+      .select("window_start", "event_type", "n", "sum_value")
+    val batch = graft.Tables.load(spark, dir, "events")
+      .groupBy(date_trunc("hour", col("ts")).as("window_start"), col("event_type"))
+      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
+    assert(streamed.count() > 0)
+    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+
+    // the query's checkpoint is <process root>/<session>/<query name>
+    val files = {
+      val all = java.nio.file.Files.walk(StreamConf.processCheckpointRoot)
+      try all.iterator().asScala.toSeq finally all.close()
+    }
+    val ckpt = files.filter(p => p.getFileName.toString == name && p.toFile.isDirectory)
+    assert(ckpt.size == 1, s"checkpoint directories named $name: $ckpt")
+    val mine = files.filter(_.startsWith(ckpt.head)).map(ckpt.head.relativize(_).toString)
+    assert(mine.exists(_.startsWith("commits/")) && mine.exists(_.matches("state/.*\\.delta")),
+      mine.sorted.mkString("\n"))
+    // RawLocalFileSystem writes a `.<name>.crc` beside every file (and
+    // starts a chmod per file without libhadoop); Spark's own 4.1
+    // checksum files are `<name>.crc`; a `.tmp` is an unfinished write
+    val leftovers = mine.filter { f =>
+      val n = f.split('/').last
+      (n.startsWith(".") && n.endsWith(".crc")) || n.endsWith(".tmp")
+    }
+    assert(leftovers.isEmpty, leftovers.mkString("\n"))
+  }
+
   for (flavor <- Seq("ltz", "ntz"))
   test(s"[$flavor] streaming OHLC bars match the batch resample") {
     import org.apache.spark.sql.functions._
