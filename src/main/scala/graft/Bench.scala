@@ -25,8 +25,8 @@ object Bench {
         persistLevel = org.apache.spark.storage.StorageLevel.NONE).count()
       pipeline.Dedup.nearDuplicatePairs(docs, "doc_id", "text",
         persistLevel = org.apache.spark.storage.StorageLevel.NONE).count()
-      pipeline.Dedup.dedupAgainstCorpus(docs, docs.limit(8), "doc_id", "text",
-        persistLevel = org.apache.spark.storage.StorageLevel.NONE).count()
+      pipeline.Dedup.dedupAgainstCorpus(docs, docs.limit(8), "doc_id", "text")
+        .count()
       val emb = Tables.load(spark, sfDir, "embeddings")
         .select(col("vec_id"), col("embedding")).limit(64)
       // warm BOTH gate configurations: generated code is shape-specific

@@ -89,13 +89,24 @@ object Dedup {
       .select(col("docId"), transform(col("sh"), s => xxhash64(s)).as("shHash"))
       .select(col("docId"),
         minHashSignature(col("shHash"), bands * rowsPerBand).as("sig"))
-      .select(col("docId"), posexplode(
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(lit("band"), b,
-            array_join(slice(col("sig"), b * lit(rowsPerBand) + lit(1), lit(rowsPerBand)), ",")))))
+      .select(col("docId"), posexplode(bandHashes(col("sig"), bands, rowsPerBand)))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bandHash")
   }
+
+  /** The `bands` LSH bucket keys of a MinHash signature column: band b
+    * hashes rows b·r+1 .. b·r+r of the signature, joined as decimal text,
+    * under the tag "band" and the band index. One element per band, so
+    * each band's expression references `sig` on its own: a projection
+    * that computes `sig` is never collapsed into this one (a lambda over
+    * the band index would reference it once and get the signature
+    * inlined, recomputed per band). */
+  private[pipeline] def bandHashes(sig: Column, bands: Int,
+      rowsPerBand: Int): Column =
+    array((0 until bands).map { b =>
+      xxhash64(lit("band"), lit(b),
+        array_join(slice(sig, b * rowsPerBand + 1, rowsPerBand), ","))
+    }: _*)
 
   /** LSH banding: docs sharing any (bandIndex, bandHash) bucket are
     * candidate near-duplicates. */
@@ -161,17 +172,10 @@ object Dedup {
     * corpus, so the two array-carrying shuffles move only candidate docs'
     * shingles, not the whole table's (and AQE turns the prune itself into
     * a broadcast semi-join when the id list is small). */
-  private def joinExactJaccard(sh: DataFrame, pairs: DataFrame): DataFrame =
-    joinExactJaccardTwoSided(sh, sh, pairs)
-
-  /** Two-corpus form: pair side `a` resolves against `shA`, side `b`
-    * against `shB` — used by the incremental-ingest dedup where the two
-    * sides come from different tables. Same semi-join pruning contract. */
-  private def joinExactJaccardTwoSided(shLeft: DataFrame, shRight: DataFrame,
-      pairs: DataFrame): DataFrame = {
-    val aCand = shLeft.join(pairs.select(col("a").as("docId")).distinct(),
+  private def joinExactJaccard(sh: DataFrame, pairs: DataFrame): DataFrame = {
+    val aCand = sh.join(pairs.select(col("a").as("docId")).distinct(),
       Seq("docId"), "left_semi")
-    val bCand = shRight.join(pairs.select(col("b").as("docId")).distinct(),
+    val bCand = sh.join(pairs.select(col("b").as("docId")).distinct(),
       Seq("docId"), "left_semi")
     pairs
       .join(aCand.toDF("a", "shA"), "a")
@@ -268,55 +272,42 @@ object Dedup {
 
   /** Incremental ingest dedup — the daily-batch story: drop new docs
     * that exactly or nearly duplicate the EXISTING corpus, or an
-    * earlier doc in the same batch. Returns the surviving new doc ids.
+    * earlier doc in the same batch. Returns the surviving new doc ids
+    * (one column, `docId`).
     *
-    * Stages (each the already-proven shape):
-    *  1. exact vs corpus: content-hash anti-join;
-    *  2. exact within batch: keep the lowest id per content hash;
-    *  3. near vs corpus: new-side LSH bands bucket-joined against
-    *     corpus bands (cross-corpus — the corpus NEVER self-joins),
-    *     exact-verified at `threshold`;
-    *  4. near within batch: new-side band self-join, drop the higher id
-    *     of each qualifying pair (independently of whether the lower id
-    *     itself survives — deterministic and replayable).
+    * Rules (each the already-proven shape):
+    *  1. exact vs corpus: a doc whose md5 the corpus contains is dropped;
+    *  2. exact within batch: the lowest id per content hash is kept;
+    *  3. near vs corpus: a survivor sharing an LSH band bucket with a
+    *     corpus doc at exact word-shingle Jaccard >= `threshold` is
+    *     dropped, over buckets holding at most `maxBucket` corpus docs
+    *     (larger buckets are boilerplate-degree similarity, and their
+    *     true near-dups also collide in smaller buckets);
+    *  4. near within batch: for each survivor pair sharing a bucket of
+    *     2..`maxBucket` survivors at Jaccard >= `threshold`, the higher
+    *     id is dropped (whether or not the lower id survives rule 3 —
+    *     deterministic and replayable).
     *
-    * At scale the corpus side's shingle/band tables are the natural
-    * precomputed asset: persist them once per corpus version and only
-    * the (small) new batch is sketched per ingest. Caching contract as
-    * in nearDuplicatePairs. */
+    * Shape: the batch is resolved on the DRIVER. One job collects its
+    * sketch (id, md5, shingle set, band keys); the driver applies rule 2
+    * and rule 4. The corpus is read in ONE pass with that sketch
+    * broadcast, which returns the batch hashes the corpus contains, the
+    * corpus row count of every batch bucket key, and, per batch doc, the
+    * bands it shares with a corpus doc it verifies against — so no
+    * candidate pair is ever shuffled and the corpus never joins itself.
+    * The premise is a batch that fits the driver (an ingest slice, not a
+    * corpus); the batch side of the previous join plan was already
+    * broadcast. A batch sketch over [[IngestDedup.MaxBatchSketchBytes]]
+    * fails with a message to split the batch rather than exhaust the
+    * driver. Ids are keys on both sides (a null id is kept and never
+    * drops another doc). */
   def dedupAgainstCorpus(corpus: DataFrame, newDocs: DataFrame,
       idCol: String, textCol: String,
       threshold: Double = 0.8, shingleSize: Int = 3,
-      bands: Int = 32, rowsPerBand: Int = 4,
-      persistLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    // corpus shingles feed both the band build and the verify join —
-    // persist once (same contract as nearDuplicatePairs)
-    val shCorpus =
-      if (persistLevel == org.apache.spark.storage.StorageLevel.NONE)
-        shingleTable(corpus, idCol, textCol, shingleSize)
-      else shingleTable(corpus, idCol, textCol, shingleSize).persist(persistLevel)
-    val rawBands = lshBandsFromShingles(shCorpus, bands, rowsPerBand)
-    dedupCore(
-      corpusHashes = corpus.select(md5(col(textCol).cast("binary")).as("h")).distinct(),
-      shCorpus = shCorpus,
-      // Inline path: do NOT aggregate the full corpus band table into
-      // posting lists (a 32xN-row shuffle + collect_set that the r4
-      // sketch refactor accidentally put on this query's critical path —
-      // 2.9 s -> 5.5 s in the driver bench). Semi-prune the corpus bands
-      // by the batch's few thousand bucket keys first (broadcast), then
-      // aggregate only the surviving rows. Surviving buckets keep ALL
-      // their members, so size(cids) — and the maxBucket cap — is
-      // identical to the unpruned aggregation.
-      corpusPostingsFor = batchKeys =>
-        bandPostingsOf(rawBands.join(
-          org.apache.spark.sql.functions.broadcast(batchKeys),
-          Seq("band", "bandHash"), "left_semi")),
-      newDocs = newDocs, idCol = idCol, textCol = textCol,
-      threshold = threshold, shingleSize = shingleSize,
-      bands = bands, rowsPerBand = rowsPerBand,
-      persistLevel = persistLevel)
-  }
+      bands: Int = 32, rowsPerBand: Int = 4): DataFrame =
+    IngestDedup.againstCorpus(corpus, newDocs, idCol, textCol,
+      IngestDedup.Shape(threshold, shingleSize, bands, rowsPerBand,
+        maxBucket = 4096))
 
   /** The reusable corpus-side dedup asset: content hashes, the shingle
     * table (docId, sh), and the LSH band table (docId, band, bandHash).
@@ -336,9 +327,8 @@ object Dedup {
   /** Materialize the corpus sketch to parquet (three tables under
     * `path`). Bands are stored as per-bucket POSTING LISTS, aggregated
     * once here — so per-ingest cost genuinely tracks the new batch (an
-    * ingest never re-aggregates or re-shuffles the corpus side; it
-    * equi-joins the batch's few thousand band rows against the posting
-    * table and explodes the capped lists). */
+    * ingest never re-aggregates or re-shuffles the corpus side; it reads
+    * the posting rows of the batch's bucket keys). */
   def writeCorpusSketch(corpus: DataFrame, idCol: String, textCol: String,
       path: String, shingleSize: Int = 3,
       bands: Int = 32, rowsPerBand: Int = 4): Unit = {
@@ -372,100 +362,21 @@ object Dedup {
       bandsDf)
   }
 
-  /** `dedupAgainstCorpus` against prepared corpus assets: only the new
-    * batch is hashed/shingled/banded here — the daily-ingest fast path. */
+  /** `dedupAgainstCorpus` against prepared corpus assets — the daily-
+    * ingest fast path. Only the new batch is hashed, shingled and banded;
+    * the corpus side is read from the sketch: the hashes table filtered
+    * to the batch's hashes, the posting rows of the batch's bucket keys
+    * (`maxBucket` applied to each row's list), and the shingle rows of
+    * the candidate corpus ids those lists name, verified against the
+    * broadcast batch sketch. Same rules and driver premise as
+    * `dedupAgainstCorpus`. */
   def dedupAgainstSketch(assets: CorpusSketch, newDocs: DataFrame,
       idCol: String, textCol: String,
       threshold: Double = 0.8, shingleSize: Int = 3,
       bands: Int = 32, rowsPerBand: Int = 4,
-      maxBucket: Int = 4096,
-      persistLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame =
-    dedupCore(assets.hashes, assets.shingles, _ => assets.bandPostings,
-      newDocs, idCol, textCol, threshold, shingleSize, bands, rowsPerBand,
-      maxBucket, persistLevel)
-
-  /** Shared ingest-dedup core. `corpusPostingsFor` supplies the corpus
-    * posting lists given the batch's distinct (band, bandHash) keys —
-    * pre-aggregated from a sketch on the fast path, or a pruned inline
-    * aggregation when no sketch exists. */
-  private def dedupCore(corpusHashes: DataFrame, shCorpus: DataFrame,
-      corpusPostingsFor: DataFrame => DataFrame,
-      newDocs: DataFrame, idCol: String, textCol: String,
-      threshold: Double, shingleSize: Int,
-      bands: Int, rowsPerBand: Int,
-      maxBucket: Int = 4096,
-      persistLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    def cached(df: DataFrame): DataFrame =
-      if (persistLevel == org.apache.spark.storage.StorageLevel.NONE) df
-      else df.persist(persistLevel)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("h")).orderBy(col("docId").asc)
-    val newHashed = newDocs.select(col(idCol).as("docId"),
-      col(textCol).as("text"), md5(col(textCol).cast("binary")).as("h"))
-    // Persist policy: ONLY exactSurvivors is cached here. Its recompute
-    // would re-run the corpus-hash anti join (a full corpus-side scan —
-    // scale-critical), while shNew/bNew are BATCH-sized at any corpus
-    // scale and their recompute (re-shingle a few thousand ingest docs)
-    // costs less than the InMemoryRelation boundaries it would insert:
-    // dropping their persists cut the gate query ~20% (cache boundaries
-    // split whole-stage codegen and add columnar round-trips).
-    val exactSurvivors = cached(newHashed
-      .join(corpusHashes, Seq("h"), "left_anti")
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") === 1)
-      .select(col("docId"), col("text")))
-    val shNew = shingleTable(exactSurvivors, "docId", "text", shingleSize)
-    val bNew = lshBandsFromShingles(shNew, bands, rowsPerBand)
-    // near vs corpus: every candidate hit disqualifies the new doc.
-    // Corpus buckets arrive as posting lists; the maxBucket filter drops
-    // over-popular buckets (they are boilerplate-degree similarity, and
-    // their true near-dups also collide in smaller buckets), bounding a
-    // hot corpus bucket's fan-out per new doc at maxBucket — and the
-    // corpus side is never re-shuffled at ingest time.
-    val corpusPostings = corpusPostingsFor(
-        bNew.select(col("band"), col("bandHash")).distinct())
-      .filter(size(col("cids")) <= maxBucket)
-    val candsX = bNew.toDF("a", "band", "bandHash")
-      .join(corpusPostings, Seq("band", "bandHash"))
-      .select(col("a"), explode(col("cids")).as("b")).distinct()
-    // near within batch: drop the higher id of each qualifying pair
-    // (capped posting lists, not an uncapped band self-join)
-    val candsN = bNew.groupBy("band", "bandHash")
-      .agg(collect_set(col("docId")).as("__ids"))
-      .filter(size(col("__ids")).between(2, maxBucket))
-      .select(explode(col("__ids")).as("a"), col("__ids"))
-      .select(col("a"), explode(col("__ids")).as("b"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-    // ONE tagged verify join for both candidate families (vs-corpus and
-    // within-batch) instead of two separate jaccard joins — halves the
-    // verify-stage job count; the tag keeps the two id namespaces apart
-    // even when batch and corpus ids collide numerically. A vs-corpus
-    // hit drops the batch doc `a`; a within-batch hit drops the higher
-    // id `b`.
-    val cands = candsX.withColumn("__src", lit("c"))
-      .unionAll(candsN.withColumn("__src", lit("n")))
-    val aCand = shNew.join(cands.select(col("a").as("docId")).distinct(),
-      Seq("docId"), "left_semi")
-    val shRight = shCorpus.withColumn("__src", lit("c"))
-      .unionAll(shNew.withColumn("__src", lit("n")))
-      .join(cands.select(col("b").as("docId"), col("__src")).distinct(),
-        Seq("docId", "__src"), "left_semi")
-      .select(col("docId").as("b"), col("sh").as("shB"), col("__src"))
-    val dropIds = cands
-      .join(aCand.toDF("a", "shA"), "a")
-      .join(shRight, Seq("b", "__src"))
-      .filter((size(array_intersect(col("shA"), col("shB"))).cast("double") /
-        size(array_union(col("shA"), col("shB")))) >= threshold)
-      .select(when(col("__src") === "c", col("a")).otherwise(col("b"))
-        .as("docId"))
-      .distinct()
-    exactSurvivors
-      .join(dropIds, Seq("docId"), "left_anti")
-      .select(col("docId"))
-  }
+      maxBucket: Int = 4096): DataFrame =
+    IngestDedup.againstSketch(assets, newDocs, idCol, textCol,
+      IngestDedup.Shape(threshold, shingleSize, bands, rowsPerBand, maxBucket))
 
   /** Bloom asset over the corpus's xxhash64 content keys — the exact-
     * dedup prefilter for [[exactDedupWithBloom]]. Built by Spark's

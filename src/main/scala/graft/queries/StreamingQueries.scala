@@ -20,19 +20,8 @@ object StreamingQueries {
     * the query died — otherwise a hung/failed stream would silently gate
     * on a stale (possibly empty) memory table. */
   private[graft] def drained(q: org.apache.spark.sql.streaming.StreamingQuery,
-      timeoutMs: Long = 300000): Unit = {
-    val done = q.awaitTermination(timeoutMs)
-    q.exception.foreach { e =>
-      throw new IllegalStateException(
-        s"streaming query '${q.name}' failed: ${e.message}", e)
-    }
-    if (!done) {
-      q.stop()
-      throw new IllegalStateException(
-        s"streaming query '${q.name}' did not drain within ${timeoutMs} ms; " +
-          "refusing to read its sink table")
-    }
-  }
+      timeoutMs: Long = 300000): Unit =
+    graft.streaming.StreamConf.awaitDrain(q, timeoutMs)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Streaming per-key rate limiter (flatMapGroupsWithState keyed by

@@ -264,8 +264,9 @@ object DocStreams {
     * all be dropped) and 30-char truncations of every 30th+7 (all
     * fresh — no within-batch duplicate groups, keeping the streaming
     * result a pure set with no keep-first ordering dependence). */
-  def runStreamingBloomDedupOnce(spark: SparkSession, sfDir: String,
+  def runStreamingBloomDedupOnce(parent: SparkSession, sfDir: String,
       queryName: String): StreamingQuery = {
+    val spark = StreamConf.isolated(parent)
     val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val bloomBytes = Dedup.buildCorpusBloom(corpus, "text")
@@ -288,11 +289,13 @@ object DocStreams {
     val suspects = hashed.filter(col("__maybe"))
       .join(hashes, Seq("h"), "left_anti")
     val fresh = hashed.filter(!col("__maybe"))
-    suspects.unionByName(fresh).select(col("doc_id"))
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamConf.publish(parent, spark, queryName, {
+      suspects.unionByName(fresh).select(col("doc_id"))
+        .writeStream.outputMode(OutputMode.Append)
+        .format("memory").queryName(queryName)
+        .trigger(Trigger.AvailableNow())
+        .start()
+    })
   }
 
   /** Drain-once runner: stream the documents table (with the same
@@ -349,8 +352,9 @@ object DocStreams {
     * equal the batch (and therefore the pixel-closed-form oracle)
     * exactly. Proves the multimodal kernels compose into streaming
     * pipelines unchanged. */
-  def runStreamingImageHashOnce(spark: SparkSession, sfDir: String,
+  def runStreamingImageHashOnce(parent: SparkSession, sfDir: String,
       queryName: String): StreamingQuery = {
+    val spark = StreamConf.isolated(parent)
     import spark.implicits._
     val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
     val stream = spark.readStream.schema(schema)
@@ -359,21 +363,23 @@ object DocStreams {
     // repartition within the micro-batch: the single-file source plans
     // 1-2 input partitions and codec work is task-serial (the batch
     // gate's fanOut, expressed stream-side)
-    stream.select(col("doc_id"))
-      .repartition(spark.sparkContext.defaultParallelism).as[Long]
-      .map { id =>
-        val w = (8 + id % 16).toInt
-        val h = (8 + (id / 16) % 8).toInt
-        val img = graft.pipeline.Multimodal.grayImage(w, h,
-          (x, y) => ((x * 7 + y * 13 + id) % 256).toInt)
-        graft.pipeline.Multimodal.aHash64(id,
-          graft.pipeline.Multimodal.decodeImage(
-            graft.pipeline.Multimodal.encodePng(img)).get)
-      }
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamConf.publish(parent, spark, queryName, {
+      stream.select(col("doc_id"))
+        .repartition(spark.sparkContext.defaultParallelism).as[Long]
+        .map { id =>
+          val w = (8 + id % 16).toInt
+          val h = (8 + (id / 16) % 8).toInt
+          val img = graft.pipeline.Multimodal.grayImage(w, h,
+            (x, y) => ((x * 7 + y * 13 + id) % 256).toInt)
+          graft.pipeline.Multimodal.aHash64(id,
+            graft.pipeline.Multimodal.decodeImage(
+              graft.pipeline.Multimodal.encodePng(img)).get)
+        }
+        .writeStream.outputMode(OutputMode.Append)
+        .format("memory").queryName(queryName)
+        .trigger(Trigger.AvailableNow())
+        .start()
+    })
   }
 
   /** Streaming token accounting under a LEARNED BPE model: the merge
@@ -385,8 +391,9 @@ object DocStreams {
     * an expression, so redeploying a retrained model is a query
     * restart, not a state migration. Drained rows must hash-match the
     * batch `Bpe.tokenCounts` oracle. */
-  def runStreamingBpeCountsOnce(spark: SparkSession, sfDir: String,
+  def runStreamingBpeCountsOnce(parent: SparkSession, sfDir: String,
       queryName: String, merges: Seq[(String, String)]): StreamingQuery = {
+    val spark = StreamConf.isolated(parent)
     val S = graft.pipeline.Bpe.S
     val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
     val stream = spark.readStream.schema(schema)
@@ -401,35 +408,40 @@ object DocStreams {
     }
     val toks = filter(Dedup.tokens(col("text")),
       t => t.rlike("^[a-z0-9]+$"))
-    stream
-      .select(col("doc_id"), toks.as("__toks"))
-      .filter(size(col("__toks")) > 0) // batch inner-join semantics
-      // stream-side fanOut: the per-token merge-fold (k nested replaces
-      // per token) is task-serial on the single-file source otherwise
-      .repartition(spark.sparkContext.defaultParallelism)
-      .select(col("doc_id"),
-        size(col("__toks")).cast("long").as("n_words"),
-        aggregate(transform(col("__toks"), t => nSyms(t)), lit(0L),
-          (acc, n) => acc + n).as("n_bpe_tokens"))
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamConf.publish(parent, spark, queryName, {
+      stream
+        .select(col("doc_id"), toks.as("__toks"))
+        .filter(size(col("__toks")) > 0) // batch inner-join semantics
+        // stream-side fanOut: the per-token merge-fold (k nested replaces
+        // per token) is task-serial on the single-file source otherwise
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select(col("doc_id"),
+          size(col("__toks")).cast("long").as("n_words"),
+          aggregate(transform(col("__toks"), t => nSyms(t)), lit(0L),
+            (acc, n) => acc + n).as("n_bpe_tokens"))
+        .writeStream.outputMode(OutputMode.Append)
+        .format("memory").queryName(queryName)
+        .trigger(Trigger.AvailableNow())
+        .start()
+    })
   }
 
-  def runStreamingMixtureOnce(spark: SparkSession, sfDir: String,
+  def runStreamingMixtureOnce(parent: SparkSession, sfDir: String,
       queryName: String, weights: Map[String, Double],
       defaultWeight: Double): StreamingQuery = {
+    val spark = StreamConf.isolated(parent)
     val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(sfDir)
-    graft.pipeline.Sampling.mixtureSample(stream, "source", "doc_id",
-        weights, defaultWeight)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamConf.publish(parent, spark, queryName, {
+      graft.pipeline.Sampling.mixtureSample(stream, "source", "doc_id",
+          weights, defaultWeight)
+        .select(col("doc_id"), col("source"), col("n_chars"))
+        .writeStream.outputMode(OutputMode.Append)
+        .format("memory").queryName(queryName)
+        .trigger(Trigger.AvailableNow())
+        .start()
+    })
   }
 }

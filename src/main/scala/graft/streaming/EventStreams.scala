@@ -371,23 +371,26 @@ object EventStreams {
     * DataFrame — Spark broadcasts it into every micro-batch, the
     * stateless streaming analog of the dimension joins every 100 TB
     * event pipeline runs; no state store involved at all. */
-  def runStreamStaticJoinOnce(spark: SparkSession, sfDir: String,
+  def runStreamStaticJoinOnce(parent: SparkSession, sfDir: String,
       queryName: String): StreamingQuery = {
+    val spark = StreamConf.isolated(parent)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val fileSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
     val customers = spark.read.parquet(s"$sfDir/customer.parquet")
       .select(col("c_custkey"), col("c_mktsegment"))
-    spark.readStream.schema(fileSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .select(col("event_id"), col("user_id"))
-      .join(broadcast(customers),
-        col("user_id") + 1 === col("c_custkey"))
-      .select(col("event_id"), col("user_id"), col("c_mktsegment"))
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamConf.publish(parent, spark, queryName, {
+      spark.readStream.schema(fileSchema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sfDir)
+        .select(col("event_id"), col("user_id"))
+        .join(broadcast(customers),
+          col("user_id") + 1 === col("c_custkey"))
+        .select(col("event_id"), col("user_id"), col("c_mktsegment"))
+        .writeStream.outputMode(OutputMode.Append)
+        .format("memory").queryName(queryName)
+        .trigger(Trigger.AvailableNow())
+        .start()
+    })
   }
 
   /** CHAINED stateful aggregation — two windowed aggregations in ONE
@@ -433,8 +436,9 @@ object EventStreams {
     * re-runs resume instead of re-emit; within one drain each batch id
     * is delivered exactly once, so the landed rows equal the source
     * (asserted by the gate's batch oracle over the landed files). */
-  def runForeachBatchSinkOnce(spark: SparkSession, eventsDir: String,
+  def runForeachBatchSinkOnce(parent: SparkSession, eventsDir: String,
       dataDir: String, checkpointDir: String): StreamingQuery = {
+    val spark = StreamConf.isolated(parent)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
     spark.readStream.schema(fileSchema)

@@ -162,11 +162,32 @@ object StreamConf {
   /** Await an AvailableNow drain of `q` (started on `child`) and FAIL
     * LOUDLY if it died or hung, then re-register the child's
     * memory-sink table `queryName` as a parent-session temp view so
-    * gates read it from the session they hold. Returns the terminated
-    * query (callers' `drained(q)` re-check is a no-op). */
+    * gates read it from the session they hold. However the query ends,
+    * the state stores it loaded are unloaded here
+    * ([[org.apache.spark.sql.GraftStateStoreBridge]]) rather than left
+    * to Spark's maintenance task a minute later: each kept its checkpoint
+    * file manager and thread pool (128 threads per q_stream_join run)
+    * and the heap behind them. Returns the terminated query (callers'
+    * `drained(q)` re-check is a no-op). */
   def publish(parent: SparkSession, child: SparkSession,
       queryName: String, q: StreamingQuery,
       timeoutMs: Long = 300000): StreamingQuery = {
+    try awaitDrain(q, timeoutMs)
+    finally org.apache.spark.sql.GraftStateStoreBridge.unloadStores(q)
+    // re-bind the sink's (driver-resident) plan to the parent session
+    // instead of collectAsList + createDataFrame: same rows, same
+    // driver residency, but no O(rows) Row copy + re-encode on the
+    // gate's clock (q_stream_merge drains 142k rows at sf0.1)
+    val out = child.table(queryName)
+    org.apache.spark.sql.GraftExpressionBridge
+      .ofLogical(parent, out.queryExecution.analyzed)
+      .createOrReplaceTempView(queryName)
+    q
+  }
+
+  /** Await an AvailableNow drain of `q`; throw if it failed, or stop it
+    * and throw if it did not finish within `timeoutMs`. */
+  def awaitDrain(q: StreamingQuery, timeoutMs: Long): Unit = {
     val done = q.awaitTermination(timeoutMs)
     q.exception.foreach { e =>
       throw new IllegalStateException(
@@ -178,14 +199,5 @@ object StreamConf {
         s"streaming query '${q.name}' did not drain within ${timeoutMs} ms; " +
           "refusing to read its sink table")
     }
-    // re-bind the sink's (driver-resident) plan to the parent session
-    // instead of collectAsList + createDataFrame: same rows, same
-    // driver residency, but no O(rows) Row copy + re-encode on the
-    // gate's clock (q_stream_merge drains 142k rows at sf0.1)
-    val out = child.table(queryName)
-    org.apache.spark.sql.GraftExpressionBridge
-      .ofLogical(parent, out.queryExecution.analyzed)
-      .createOrReplaceTempView(queryName)
-    q
   }
 }

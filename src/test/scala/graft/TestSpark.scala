@@ -1,9 +1,11 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.spark.ExceptionFailure
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.{ExceptionFailure, TestAccess}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
@@ -50,6 +52,43 @@ object TestSpark {
           if (stages != null)
             stages.foreach(stageNonChaosFailures.remove(_))
       }
+    }
+  }
+
+  /** What the Spark jobs of one call ran: the jobs, the stages submitted,
+    * and each job's final-stage name in start order. */
+  final case class JobShape(jobs: Int, stages: Int, finalStages: Seq[String])
+
+  /** The [[JobShape]] of the jobs `f` starts on this thread. They carry a
+    * job tag of their own (Spark SQL hands it to the threads it runs
+    * broadcasts on), so a job another thread starts meanwhile is not
+    * counted; the listener bus is drained before and after. */
+  def jobShape[A](f: => A): (A, JobShape) = {
+    val sc = spark.sparkContext
+    val tag = s"job-shape-${System.nanoTime()}"
+    def tagged(p: java.util.Properties): Boolean =
+      Option(p).flatMap(p => Option(p.getProperty("spark.job.tags")))
+        .exists(_.split(",").contains(tag))
+    val finals = new ConcurrentLinkedQueue[String]
+    val stages = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (tagged(e.properties)) {
+          finals.add(e.stageInfos.maxBy(_.stageId).name); ()
+        }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (tagged(e.properties)) { stages.incrementAndGet(); () }
+    }
+    TestAccess.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      val a = f
+      TestAccess.drainListenerBus(sc)
+      (a, JobShape(finals.size, stages.get, finals.asScala.toSeq))
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
     }
   }
 

@@ -1,10 +1,7 @@
 package graft.er
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.TestAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -258,20 +255,8 @@ class ERProjectSpec extends AnyFunSuite {
 
   /** Spark jobs started while `f` runs. */
   private def jobsDuring[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    TestAccess.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
-      val a = f
-      TestAccess.drainListenerBus(sc)
-      (a, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val (a, shape) = TestSpark.jobShape(f)
+    (a, shape.jobs)
   }
 
   /** The evaluation text as the separate pairwise and ARI queries over the

@@ -1,13 +1,13 @@
 package graft.er
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{SparkException, TestAccess}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
+  SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -152,7 +152,7 @@ class ERTransitionSpec extends AnyFunSuite {
   }
 
   test("initialize is one Spark job") {
-    val (st, (jobs, _)) = shape(spark.sparkContext)(init(GibbsKernel.PCG1))
+    val (st, (jobs, _)) = shape(init(GibbsKernel.PCG1))
     // an index built by a melt aggregation, with a second pass to encode
     // the records and a job for the initial summary, took
     // ParentInitializeJobs jobs here
@@ -166,12 +166,12 @@ class ERTransitionSpec extends AnyFunSuite {
     assert(st.partitioner.numPartitions == 2)
     // the first step also computes the blocks initialize placed
     val steps = (1 to 9).map { _ =>
-      val (next, n) = shape(sc)(st.step())
+      val (next, n) = shape(st.step())
       st = next
       n
     }
-    val (cut, cutShape) = shape(sc)(st.checkpointed())
-    val (_, afterCut) = shape(sc)(cut.step())
+    val (cut, cutShape) = shape(st.checkpointed())
+    val (_, afterCut) = shape(cut.step())
     assert(steps.forall(_ == ((1, 2))), steps)
     assert(steps(8) == steps(0))
     assert(cutShape._1 == 1, cutShape)
@@ -254,7 +254,7 @@ class ERTransitionSpec extends AnyFunSuite {
     val st3 = st2.step(retainClusters = true)
     val batch = ERState.linkageSamples(Seq(st2, st3))
     val dir = Files.createTempDirectory("graft-er-flush").resolve("chain").toString
-    val (_, (jobs, stages)) = shape(sc)(
+    val (_, (jobs, stages)) = shape(
       batch.write.partitionBy("partitionId").parquet(dir))
     assert((jobs, stages) == ((1, 1)))
     val chain = IO.readChain(spark, dir).collect()
@@ -281,7 +281,7 @@ class ERTransitionSpec extends AnyFunSuite {
     }
     TestAccess.drainListenerBus(sc)
     sc.addSparkListener(listener)
-    val (_, (jobs, stages)) = try shape(sc)(
+    val (_, (jobs, stages)) = try shape(
       batch.write.partitionBy("partitionId").parquet(dir))
     finally sc.removeSparkListener(listener)
     // the union of one Dataset per sample wrote k·n tasks and files
@@ -354,7 +354,7 @@ class ERTransitionSpec extends AnyFunSuite {
     // this test's 60 records, PCG-I, two partitions, seed 1234, 3 sweeps
     val saved = Paths.get(getClass.getResource(
       "/er/state-saved-with-cluster-records/driver-state.bin").toURI).getParent
-    val (resumed, (loadJobs, _)) = shape(spark.sparkContext)(
+    val (resumed, (loadJobs, _)) = shape(
       IO.loadState(spark, saved.toString))
     // inferring the clusters' schema from the Parquet footers took a
     // second job
@@ -422,24 +422,9 @@ object ERTransitionSpec {
   val ParentInitializeJobs = 8
 
   /** (jobs, stages submitted) while `f` runs. */
-  def shape[A](sc: org.apache.spark.SparkContext)(f: => A): (A, (Int, Int)) = {
-    val jobs = new AtomicInteger
-    val stages = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
-        stages.incrementAndGet(); ()
-      }
-    }
-    TestAccess.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
-      val a = f
-      TestAccess.drainListenerBus(sc)
-      (a, (jobs.get, stages.get))
-    } finally sc.removeSparkListener(listener)
+  def shape[A](f: => A): (A, (Int, Int)) = {
+    val (a, s) = TestSpark.jobShape(f)
+    (a, (s.jobs, s.stages))
   }
 
   /** partitionOf calls, counted across every task's copy of the

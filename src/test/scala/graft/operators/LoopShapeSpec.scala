@@ -1,11 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.TestAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -22,34 +16,16 @@ class LoopShapeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** Final-stage names of the Spark jobs `f` starts on this thread (its
-    * job group, so a job another thread starts meanwhile is not counted),
+  /** Final-stage names of the Spark jobs `f` starts on this thread,
     * with adaptive execution off. */
   private def jobsDuring[A](f: => A): (A, Seq[String]) = {
-    val sc = spark.sparkContext
-    val group = s"loop-shape-${System.nanoTime()}"
-    val jobs = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties)
-          .filter(_.getProperty("spark.jobGroup.id") == group)
-          .foreach { _ => jobs.add(e.stageInfos.maxBy(_.stageId).name); () }
-    }
     val aqe = "spark.sql.adaptive.enabled"
     val aqeBefore = spark.conf.getOption(aqe)
     spark.conf.set(aqe, "false")
-    TestAccess.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "loop shape")
     try {
-      val a = f
-      TestAccess.drainListenerBus(sc)
-      (a, jobs.asScala.toSeq)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-      aqeBefore.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
-    }
+      val (a, shape) = TestSpark.jobShape(f)
+      (a, shape.finalStages)
+    } finally aqeBefore.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
   }
 
   // two rings + a chain (the LoopCheckpointSpec graph): the chain peels

@@ -157,28 +157,33 @@ class PipelineSpec extends AnyFunSuite {
       (11L, "the quick brown fox jumps over the lazy dog and runs away fast"),
       (12L, "entirely novel text about mountains rivers and weather patterns today ok"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("sketch").toString
-    Dedup.writeCorpusSketch(corpus, "doc_id", "text", dir)
-    val viaSketch = Dedup.dedupAgainstSketch(
-      Dedup.readCorpusSketch(spark, dir), newDocs, "doc_id", "text",
-      threshold = 0.6).as[Long].collect().toSet
-    val direct = Dedup.dedupAgainstCorpus(corpus, newDocs, "doc_id", "text",
-      threshold = 0.6).as[Long].collect().toSet
-    assert(viaSketch == direct && viaSketch == Set(12L),
-      s"sketch=$viaSketch direct=$direct")
+    val dir = java.nio.file.Files.createTempDirectory("sketch").toFile
+    try {
+      Dedup.writeCorpusSketch(corpus, "doc_id", "text", dir.toString)
+      val viaSketch = Dedup.dedupAgainstSketch(
+        Dedup.readCorpusSketch(spark, dir.toString), newDocs, "doc_id", "text",
+        threshold = 0.6).as[Long].collect().toSet
+      val direct = Dedup.dedupAgainstCorpus(corpus, newDocs, "doc_id", "text",
+        threshold = 0.6).as[Long].collect().toSet
+      assert(viaSketch == direct && viaSketch == Set(12L),
+        s"sketch=$viaSketch direct=$direct")
+    } finally graft.util.Scratch.deleteRecursively(dir)
   }
 
   test("reading a pre-posting-list sketch fails fast with a rebuild message") {
-    val dir = java.nio.file.Files.createTempDirectory("stalesketch").toString
-    val corpus = Seq((1L, "some corpus text here")).toDF("doc_id", "text")
-    Dedup.writeCorpusSketch(corpus, "doc_id", "text", dir)
-    // overwrite bands with the old per-row (docId, band, bandHash) layout
-    Seq((1L, 0, 42L)).toDF("docId", "band", "bandHash")
-      .write.mode("overwrite").parquet(s"$dir/bands.parquet")
-    val e = intercept[IllegalArgumentException] {
-      Dedup.readCorpusSketch(spark, dir)
-    }
-    assert(e.getMessage.contains("rebuild"), e.getMessage)
+    val root = java.nio.file.Files.createTempDirectory("stalesketch").toFile
+    val dir = root.toString
+    try {
+      val corpus = Seq((1L, "some corpus text here")).toDF("doc_id", "text")
+      Dedup.writeCorpusSketch(corpus, "doc_id", "text", dir)
+      // overwrite bands with the old per-row (docId, band, bandHash) layout
+      Seq((1L, 0, 42L)).toDF("docId", "band", "bandHash")
+        .write.mode("overwrite").parquet(s"$dir/bands.parquet")
+      val e = intercept[IllegalArgumentException] {
+        Dedup.readCorpusSketch(spark, dir)
+      }
+      assert(e.getMessage.contains("rebuild"), e.getMessage)
+    } finally graft.util.Scratch.deleteRecursively(root)
   }
 
   test("contamination pairs surface planted leaks and skip clean docs") {
