@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * MinHash+LSH, SimHash, and n-gram Jaccard — all expressed as declarative
   * DataFrame pipelines (hash → band → bucket-join), so the only shuffles
   * are the band-bucket groupBys/joins and everything stays in whole-stage
-  * codegen (no Python, no RDDs).
+  * codegen (no Python, no RDDs). The ingest dedup is the exception: it
+  * resolves a batch-sized sketch on the driver ([[IngestDedup]]).
   */
 object Dedup {
 
@@ -96,11 +97,10 @@ object Dedup {
 
   /** The `bands` LSH bucket keys of a MinHash signature column: band b
     * hashes rows b·r+1 .. b·r+r of the signature, joined as decimal text,
-    * under the tag "band" and the band index. One element per band, so
-    * each band's expression references `sig` on its own: a projection
-    * that computes `sig` is never collapsed into this one (a lambda over
-    * the band index would reference it once and get the signature
-    * inlined, recomputed per band). */
+    * under the tag "band" and the band index. Each band's element
+    * references `sig` itself, and Spark merges a projection into the
+    * next only when its non-trivial expressions are referenced once, so
+    * the signature stays computed once in the projection below. */
   private[pipeline] def bandHashes(sig: Column, bands: Int,
       rowsPerBand: Int): Column =
     array((0 until bands).map { b =>
@@ -275,7 +275,7 @@ object Dedup {
     * earlier doc in the same batch. Returns the surviving new doc ids
     * (one column, `docId`).
     *
-    * Rules (each the already-proven shape):
+    * Rules:
     *  1. exact vs corpus: a doc whose md5 the corpus contains is dropped;
     *  2. exact within batch: the lowest id per content hash is kept;
     *  3. near vs corpus: a survivor sharing an LSH band bucket with a
@@ -296,8 +296,8 @@ object Dedup {
     * bands it shares with a corpus doc it verifies against — so no
     * candidate pair is ever shuffled and the corpus never joins itself.
     * The premise is a batch that fits the driver (an ingest slice, not a
-    * corpus); the batch side of the previous join plan was already
-    * broadcast. A batch sketch over [[IngestDedup.MaxBatchSketchBytes]]
+    * corpus), the one the inline path has always made when it broadcast
+    * the batch's band keys. A batch sketch over [[IngestDedup.MaxBatchSketchBytes]]
     * fails with a message to split the batch rather than exhaust the
     * driver. Ids are keys on both sides (a null id is kept and never
     * drops another doc). */

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Session isolation, shuffle-partition pinning and checkpoint placement
-  * for the drain-once STATEFUL streaming runners.
+  * for the drain-once streaming runners (the stateless ones too: their
+  * offset and commit logs are checkpoint files all the same).
   *
   * What a commit costs. Every micro-batch commits as small atomic file
   * writes: an offset-log and a commit-log entry on the driver, and on the
