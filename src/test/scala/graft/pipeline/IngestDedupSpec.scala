@@ -174,7 +174,8 @@ class IngestDedupSpec extends AnyFunSuite {
 
   test("dedupAgainstCorpus runs three jobs on a single-file corpus") {
     import org.apache.spark.sql.functions.col
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    // the benchmark's read-only copy of the sf0.01 tables: one Parquet file
+    val docs = spark.read.parquet("perfbench/data/sf0.01/documents.parquet")
       .select(col("doc_id"), col("text"))
     val batch = docs.filter(col("doc_id") % 30 === 0)
       .select((col("doc_id") + 200000).as("doc_id"), col("text"))

@@ -13,7 +13,8 @@ import graft.TestSpark
   * loaded when it ends, and only those: another query's stores stay. */
 class StateStoreUnloadSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  private val dir = "/root/testdata/sf0.001"
+  /** The benchmark's read-only copy of the sf0.01 tables. */
+  private val dir = "perfbench/data/sf0.01"
 
   /** Threads of the checksum file managers that loaded stores keep. */
   private def checksumThreads(): Int =
