@@ -35,17 +35,21 @@ private[pipeline] object IngestDedup {
       rowsPerBand: Int, maxBucket: Int)
 
   /** Largest batch sketch (id, md5, shingles, band keys as unsafe rows)
-    * the driver collects: 256 MiB, an ingest slice of a few hundred
-    * thousand documents. Each batch partition checks its own running
-    * size and the driver checks the sum, so an oversized batch fails
-    * with a message naming the cap instead of exhausting the driver. */
-  val MaxBatchSketchBytes: Long = 256L << 20
+    * the driver collects: 128 MiB, the largest power of two measured to
+    * resolve in Spark's default 1 GiB driver heap. Measured on 4 cores,
+    * JDK 17, with 54-word documents (about 2 KB of sketch each): a
+    * 128 MiB batch of 66k docs ran in 13.6 s against a 20k-doc corpus and
+    * in 10.7 s against its sketch, while a 250 MiB batch ran the 1 GiB
+    * driver out of heap as its task results arrived. Each batch partition
+    * checks its own running size and the driver checks the sum, so an
+    * oversized batch fails with a message naming the cap. */
+  val MaxBatchSketchBytes: Long = 128L << 20
 
   /** One batch document as the driver holds it: the id as a Catalyst
     * value, md5 hex, distinct shingle set and band keys (null text gives
-    * a null md5 and null shingles). */
-  private final class Doc(val id: Any, val h: UTF8String,
-      val sh: Array[UTF8String], val keys: Array[Long]) {
+    * a null md5 and null shingles). `h` and `sh` read the collected row. */
+  private[pipeline] final class Doc(val id: Any, val h: UTF8String,
+      val sh: ArrayData, val keys: Array[Long]) {
     /** Can take part in the near stages: a null id never joins a
       * candidate pair and a null shingle set never verifies. */
     def near: Boolean = id != null && sh != null
@@ -71,8 +75,9 @@ private[pipeline] object IngestDedup {
         s"$bytes), the cap for resolving a batch on the driver; split " +
         "the batch into smaller ingests")
 
-  /** The batch sketch, in ONE job, and the id column's type. */
-  private def collectBatch(newDocs: DataFrame, idCol: String,
+  /** The batch sketch, in ONE job, and the id column's type; a sketch
+    * over `cap` bytes fails. */
+  private[pipeline] def collectBatch(newDocs: DataFrame, idCol: String,
       textCol: String, s: Shape, cap: Long): (DataType, Array[Doc]) = {
     val frame = sketchFrame(newDocs, idCol, textCol, s)
     val schema = frame.schema
@@ -87,12 +92,11 @@ private[pipeline] object IngestDedup {
       }
     }.collect()
     overCap(rows.iterator.map(_.getSizeInBytes.toLong).sum, cap)
-    def strings(a: ArrayData) = Array.tabulate(a.numElements())(a.getUTF8String)
     val idType = schema("docId").dataType
     (idType, rows.map(r => new Doc(
       if (r.isNullAt(0)) null else r.get(0, idType),
       if (r.isNullAt(1)) null else r.getUTF8String(1),
-      if (r.isNullAt(2)) null else strings(r.getArray(2)),
+      if (r.isNullAt(2)) null else r.getArray(2),
       r.getArray(3).toLongArray())))
   }
 
@@ -125,56 +129,123 @@ private[pipeline] object IngestDedup {
     inter.toDouble / (n + set.size - inter) >= threshold
   }
 
-  private def shingleSet(d: Doc): JHashSet[UTF8String] =
-    new JHashSet[UTF8String](d.sh.toSeq.asJava)
-
-  /** The bucket keys of `docKeys` (each doc's band keys): per band,
-    * bandHash → key index, and per key the docs (indices into `docKeys`)
-    * it holds. */
-  private final class Keys(docKeys: Array[Array[Long]], bands: Int)
+  /** Strings as one UTF-8 byte array and the end offset of each: two
+    * objects however many strings. Java serialization, which broadcasts
+    * use, tracks every object it writes, and one object per batch
+    * shingle ran a 3 GiB driver out of heap at 130k docs. */
+  private final class Flat(bytes: Array[Byte], ends: Array[Int])
       extends Serializable {
-    val index: Array[mutable.LongMap[Int]] =
-      Array.fill(bands)(mutable.LongMap.empty[Int])
-    val members: Array[Array[Int]] = {
+    def size: Int = ends.length
+    def apply(i: Int): UTF8String = {
+      val from = if (i == 0) 0 else ends(i - 1)
+      UTF8String.fromBytes(bytes, from, ends(i) - from)
+    }
+  }
+
+  private object Flat {
+    def apply(strs: Iterator[UTF8String]): Flat = {
+      val out = new java.io.ByteArrayOutputStream
+      val ends = mutable.ArrayBuilder.make[Int]
+      strs.foreach { u => u.writeTo(out); ends += out.size }
+      new Flat(out.toByteArray, ends.result())
+    }
+  }
+
+  /** The kept docs' distinct hashes, each with an index (the bit a corpus
+    * side sets when the corpus contains it). Ships flat; each JVM builds
+    * the lookup on first use. */
+  private final class Hashes(kept: Array[Doc]) extends Serializable {
+    private val flat = Flat(kept.iterator.map(_.h).filter(_ != null).distinct)
+    @transient private lazy val index = {
+      val m = new JHashMap[UTF8String, Integer](2 * flat.size)
+      (0 until flat.size).foreach(i => m.put(flat(i), i))
+      m
+    }
+    def isEmpty: Boolean = flat.size == 0
+    /** The index of `h`, or null when no kept doc has it. */
+    def get(h: UTF8String): Integer = index.get(h)
+  }
+
+  /** The bucket keys of the near docs: per band, bandHash → key index,
+    * and per key the docs (indices into the near docs) it holds. Ships
+    * as the flat band keys; each JVM builds the lookup on first use. */
+  private final class Keys(near: Array[Doc], bands: Int)
+      extends Serializable {
+    private val flat = near.flatMap(_.keys)
+    @transient private lazy val built = {
+      val index = Array.fill(bands)(mutable.LongMap.empty[Int])
       val lists = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[Int]]
-      docKeys.indices.foreach { a =>
+      (0 until flat.length / bands).foreach { a =>
         var b = 0
         while (b < bands) {
-          val k = index(b).getOrElseUpdate(docKeys(a)(b), {
+          val k = index(b).getOrElseUpdate(flat(a * bands + b), {
             lists += mutable.ArrayBuffer.empty[Int]; lists.size - 1 })
           lists(k) += a
           b += 1
         }
       }
-      lists.map(_.toArray).toArray
+      (index, lists.map(_.toArray).toArray)
     }
+    def members: Array[Array[Int]] = built._2
+    /** The key index of band `b`'s key `h`, or -1. */
+    def keyOf(b: Int, h: Long): Int =
+      if (b < 0 || b >= bands) -1 else built._1(b).getOrElse(h, -1)
   }
 
-  /** What the inline corpus pass looks up, broadcast once: the batch
-    * hashes, bucket keys and shingle sets. */
-  private final class Probe(val hashes: JHashMap[UTF8String, Integer],
-      val keys: Keys, val sets: Array[JHashSet[UTF8String]],
-      val bands: Int, val threshold: Double) extends Serializable
+  /** The near docs' shingle sets. Ships flat; each JVM builds the sets
+    * on first use. */
+  private final class ShingleSets(near: Array[Doc]) extends Serializable {
+    private val flat = Flat(near.iterator.flatMap(d =>
+      Iterator.tabulate(d.sh.numElements())(d.sh.getUTF8String)))
+    private val ends = near.scanLeft(0)(_ + _.sh.numElements()).tail
+    @transient private lazy val sets = Array.tabulate(ends.length) { a =>
+      val set = new JHashSet[UTF8String]
+      (if (a == 0) 0 else ends(a - 1)).until(ends(a)).foreach(i => set.add(flat(i)))
+      set
+    }
+    def apply(a: Int): JHashSet[UTF8String] = sets(a)
+  }
+
+  /** The kept batch as both corpus sides and rule 4 look it up. In local
+    * mode a broadcast hands tasks these same objects, so each lookup is
+    * built once. */
+  private final class Batch(kept: Array[Doc], bands: Int) {
+    val near: Array[Doc] = kept.filter(_.near)
+    val hashes = new Hashes(kept)
+    val keys = new Keys(near, bands)
+    val sets = new ShingleSets(near)
+    /** Passes rule 1, given the hash indices the corpus contains. */
+    def fresh(contained: JBitSet)(d: Doc): Boolean =
+      d.h == null || !contained.get(hashes.get(d.h))
+  }
+
+  /** What the inline corpus pass looks up, broadcast once. */
+  private final class Probe(val hashes: Hashes, val keys: Keys,
+      val sets: ShingleSets, val s: Shape) extends Serializable
 
   /** The inline corpus pass's answer, merged over partitions: batch hash
     * indices the corpus contains, corpus rows per bucket key (non-null
-    * ids, as a posting list counts them), and bit a·bands+b for batch doc
-    * a and band b when a verifies against a corpus doc sharing its band-b
-    * key. */
-  private final class Hits(val contained: JBitSet, val counts: Array[Long],
-      val shared: JBitSet) extends Serializable {
+    * ids, as a posting list counts them; only keys some corpus row has),
+    * and bit a·bands+b for near doc a and band b when a verifies against
+    * a corpus doc sharing its band-b key. */
+  private final class Hits(val contained: JBitSet,
+      val counts: mutable.LongMap[Long], val shared: JBitSet)
+      extends Serializable {
+    def this() = this(new JBitSet, mutable.LongMap.empty[Long], new JBitSet)
+    def count(k: Int): Long = counts.getOrElse(k, 0L)
     def merge(o: Hits): Hits = {
       contained.or(o.contained)
       shared.or(o.shared)
-      var k = 0
-      while (k < counts.length) { counts(k) += o.counts(k); k += 1 }
+      o.counts.foreachEntry((k, n) => counts(k) = counts.getOrElse(k, 0L) + n)
       this
     }
   }
 
+  /** One corpus partition's [[Hits]]. A key whose count in this partition
+    * passes `maxBucket` passes it in the whole corpus, so its later rows
+    * are counted but not verified. */
   private def scanCorpus(p: Probe, rows: Iterator[InternalRow]): Hits = {
-    val hits = new Hits(new JBitSet, new Array[Long](p.keys.members.length),
-      new JBitSet)
+    val hits = new Hits
     val candBands = new JHashMap[Int, JBitSet]
     rows.foreach { r =>
       if (!r.isNullAt(1)) {
@@ -185,11 +256,12 @@ private[pipeline] object IngestDedup {
         val bk = r.getArray(3)
         candBands.clear()
         var b = 0
-        while (b < p.bands) {
-          val k = p.keys.index(b).getOrElse(bk.getLong(b), -1)
+        while (b < p.s.bands) {
+          val k = p.keys.keyOf(b, bk.getLong(b))
           if (k >= 0) {
-            hits.counts(k) += 1
-            p.keys.members(k).foreach { a =>
+            val n = hits.count(k) + 1
+            hits.counts(k) = n
+            if (n <= p.s.maxBucket) p.keys.members(k).foreach { a =>
               candBands.computeIfAbsent(a, _ => new JBitSet).set(b)
             }
           }
@@ -198,10 +270,10 @@ private[pipeline] object IngestDedup {
         if (!candBands.isEmpty) {
           val sh = r.getArray(2)
           candBands.forEach { (a, bs) =>
-            if (verifies(sh, p.sets(a), p.threshold)) {
+            if (verifies(sh, p.sets(a), p.s.threshold)) {
               var b = bs.nextSetBit(0)
               while (b >= 0) {
-                hits.shared.set(a * p.bands + b)
+                hits.shared.set(a * p.s.bands + b)
                 b = bs.nextSetBit(b + 1)
               }
             }
@@ -229,125 +301,131 @@ private[pipeline] object IngestDedup {
     try f(bc) finally bc.destroy()
   }
 
-  /** Rule 4 over the exact survivors: per bucket key of 2..maxBucket
-    * near-eligible survivors, each pair a < b verifying drops b. */
-  private def withinBatchDrops(survivors: Array[Doc], s: Shape,
-      ord: Ordering[Any]): Set[Doc] = {
-    val buckets = mutable.HashMap.empty[(Int, Long), mutable.ArrayBuffer[Doc]]
-    survivors.filter(_.near).foreach { d =>
-      (0 until s.bands).foreach { b =>
-        buckets.getOrElseUpdate((b, d.keys(b)), mutable.ArrayBuffer.empty) += d
-      }
+  /** `f` over every row of `df` with `value` broadcast, what it returns
+    * collected: the sketch path's filters by batch keys, which never
+    * put a batch-sized literal list in a plan. `f` must copy what it
+    * keeps of a row. */
+  private def scanWith[V: ClassTag, T: ClassTag](df: DataFrame, value: V)(
+      f: (V, InternalRow) => Iterator[T]): Array[T] =
+    withBroadcast(df.sparkSession, value) { bc =>
+      df.queryExecution.toRdd.mapPartitions { rows =>
+        val v = bc.value
+        rows.flatMap(f(v, _))
+      }.collect()
     }
-    val sets = mutable.HashMap.empty[Doc, JHashSet[UTF8String]]
-    val seen = mutable.HashSet.empty[(Doc, Doc)]
-    val drops = mutable.HashSet.empty[Doc]
-    buckets.valuesIterator
-      .filter(m => m.size >= 2 && m.size <= s.maxBucket)
+
+  /** Rule 4: per bucket key of 2..maxBucket near docs that pass rule 1,
+    * each pair a < b verifying drops b. Returns near-doc indices. */
+  private def withinBatchDrops(batch: Batch, fresh: Doc => Boolean,
+      s: Shape, ord: Ordering[Any]): JBitSet = {
+    val near = batch.near
+    val seen = mutable.HashSet.empty[Long]
+    val drops = new JBitSet
+    batch.keys.members.iterator.filter(_.length >= 2)
+      .map(_.filter(a => fresh(near(a))))
+      .filter(m => m.length >= 2 && m.length <= s.maxBucket)
       .foreach { m =>
-        for (x <- m; y <- m if ord.lt(x.id, y.id) && !drops(y) && seen.add((x, y)))
-          if (verifies(ArrayData.toArrayData(x.sh),
-              sets.getOrElseUpdate(y, shingleSet(y)), s.threshold)) drops += y
+        for (x <- m; y <- m if ord.lt(near(x).id, near(y).id) && !drops.get(y) &&
+            seen.add(x.toLong * near.length + y))
+          if (verifies(near(x).sh, batch.sets(y), s.threshold)) drops.set(y)
       }
-    drops.toSet
+    drops
   }
 
+  private def bits(set: JBitSet): Iterator[Int] =
+    Iterator.iterate(set.nextSetBit(0))(i => set.nextSetBit(i + 1))
+      .takeWhile(_ >= 0)
+
   /** The driver side both paths share: collect the batch sketch and apply
-    * rule 2; `corpusSide` takes the kept docs and returns those that pass
-    * rule 1 with the ones of them rule 3 drops; then rule 4, and the
+    * rule 2; `corpusSide` returns the hash indices the corpus contains
+    * (rule 1) and the near docs rule 3 drops; then rule 4, and the
     * surviving ids as a one-column local frame in id order. */
   private def resolve(newDocs: DataFrame, idCol: String, textCol: String,
-      s: Shape, cap: Long)(
-      corpusSide: Array[Doc] => (Array[Doc], Set[Doc])): DataFrame = {
-    val (idType, batch) = collectBatch(newDocs, idCol, textCol, s, cap)
+      s: Shape)(corpusSide: Batch => (JBitSet, JBitSet)): DataFrame = {
+    val (idType, docs) =
+      collectBatch(newDocs, idCol, textCol, s, MaxBatchSketchBytes)
     val ord = idOrdering(idType)
-    val kept = keepMin(batch, ord)
-    val (survivors, corpusDrops) =
-      if (kept.isEmpty) (kept, Set.empty[Doc]) else corpusSide(kept)
-    val batchDrops = withinBatchDrops(survivors, s, ord)
+    val kept = keepMin(docs, ord)
+    val ids = if (kept.isEmpty) Array.empty[Any] else {
+      val batch = new Batch(kept, s.bands)
+      val (contained, corpusDrops) = corpusSide(batch)
+      val fresh = batch.fresh(contained) _
+      val gone = withinBatchDrops(batch, fresh, s, ord)
+      gone.or(corpusDrops)
+      val goneDocs = bits(gone).map(batch.near).toSet
+      kept.filter(d => fresh(d) && !goneDocs(d)).sortBy(_.id)(ord).map(_.id)
+    }
     val toScala = CatalystTypeConverters.createToScalaConverter(idType)
-    val rows = survivors.filterNot(d => corpusDrops(d) || batchDrops(d))
-      .sortBy(_.id)(ord).map(d => Row(toScala(d.id)))
-    newDocs.sparkSession.createDataFrame(rows.toSeq.asJava,
+    newDocs.sparkSession.createDataFrame(
+      ids.toSeq.map(id => Row(toScala(id))).asJava,
       StructType(Seq(StructField("docId", idType, nullable = true))))
   }
 
   def againstCorpus(corpus: DataFrame, newDocs: DataFrame, idCol: String,
-      textCol: String, s: Shape,
-      cap: Long = MaxBatchSketchBytes): DataFrame =
-    resolve(newDocs, idCol, textCol, s, cap) { kept =>
-      val near = kept.filter(_.near)
-      val hashes = new JHashMap[UTF8String, Integer]
-      kept.foreach(d => if (d.h != null) hashes.putIfAbsent(d.h, hashes.size))
-      val keys = new Keys(near.map(_.keys), s.bands)
-      val probe = new Probe(hashes, keys, near.map(shingleSet), s.bands,
-        s.threshold)
+      textCol: String, s: Shape): DataFrame =
+    resolve(newDocs, idCol, textCol, s) { batch =>
+      val probe = new Probe(batch.hashes, batch.keys, batch.sets, s)
       val scan = sketchFrame(
         spread(corpus.select(col(idCol), col(textCol))), idCol, textCol, s)
+      // a tree merge: each partition's counts hold only the keys it hit,
+      // and executors merge them before the driver does
       val hits = withBroadcast(newDocs.sparkSession, probe) { bc =>
         scan.queryExecution.toRdd
           .mapPartitions(rows => Iterator(scanCorpus(bc.value, rows)))
-          .collect()
-          .foldLeft(new Hits(new JBitSet, new Array[Long](keys.members.length),
-            new JBitSet))(_ merge _)
+          .treeAggregate(new Hits)(_ merge _, _ merge _)
       }
-      val drops = near.indices.filter { a =>
-        (0 until s.bands).exists(b => hits.shared.get(a * s.bands + b) &&
-          hits.counts(keys.index(b)(near(a).keys(b))) <= s.maxBucket)
-      }.map(near).toSet
-      (kept.filter(d => d.h == null || !hits.contained.get(hashes.get(d.h))),
-        drops)
+      val drops = new JBitSet
+      batch.near.indices.foreach { a =>
+        if ((0 until s.bands).exists(b => hits.shared.get(a * s.bands + b) &&
+            hits.count(batch.keys.keyOf(b, batch.near(a).keys(b))) <= s.maxBucket))
+          drops.set(a)
+      }
+      (hits.contained, drops)
     }
 
   def againstSketch(assets: Dedup.CorpusSketch, newDocs: DataFrame,
-      idCol: String, textCol: String, s: Shape,
-      cap: Long = MaxBatchSketchBytes): DataFrame =
-    resolve(newDocs, idCol, textCol, s, cap) { kept =>
-      val batchHashes = kept.flatMap(d => Option(d.h)).map(_.toString).distinct
-      val inCorpus =
-        if (batchHashes.isEmpty) Set.empty[String]
-        else assets.hashes.filter(col("h").isin(batchHashes: _*))
-          .select(col("h")).collect().map(_.getString(0)).toSet
-      val survivors = kept.filter(d => d.h == null || !inCorpus(d.h.toString))
-      val near = survivors.filter(_.near)
-      // corpus id → the near survivors whose capped posting lists name it
-      val keys = new Keys(near.map(_.keys), s.bands)
+      idCol: String, textCol: String, s: Shape): DataFrame =
+    resolve(newDocs, idCol, textCol, s) { batch =>
+      val contained = new JBitSet
+      if (!batch.hashes.isEmpty)
+        scanWith(assets.hashes.select(col("h")), batch.hashes) { (hs, r) =>
+          if (r.isNullAt(0)) Iterator.empty
+          else Option(hs.get(r.getUTF8String(0))).iterator.map(_.intValue)
+        }.foreach(i => contained.set(i))
+      val fresh = (a: Int) => batch.fresh(contained)(batch.near(a))
+      // corpus id (a Catalyst value) → the fresh near docs whose capped
+      // posting lists name it
+      val idT = assets.shingles.schema("docId").dataType
       val cands = mutable.HashMap.empty[Any, mutable.Set[Int]]
-      if (near.nonEmpty) assets.bandPostings
-        .filter(col("bandHash").isin(near.flatMap(_.keys).distinct: _*) &&
-          size(col("cids")) <= s.maxBucket)
-        .select(col("band"), col("bandHash"), col("cids"))
-        .collect()
-        .foreach { r =>
-          val b = r.getInt(0)
-          val k =
-            if (b < 0 || b >= s.bands) -1
-            else keys.index(b).getOrElse(r.getLong(1), -1)
-          if (k >= 0) r.getSeq[Any](2).iterator.filter(_ != null).foreach { c =>
-            cands.getOrElseUpdate(c, mutable.Set.empty[Int]) ++= keys.members(k)
-          }
+      if (batch.near.indices.exists(fresh)) scanWith(assets.bandPostings
+          .filter(size(col("cids")) <= s.maxBucket)
+          .select(col("band"), col("bandHash"), col("cids")), batch.keys) { (ks, r) =>
+        val k =
+          if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) -1
+          else ks.keyOf(r.getInt(0), r.getLong(1))
+        if (k < 0) Iterator.empty
+        else {
+          val cids = r.getArray(2)
+          (0 until cids.numElements()).iterator.filterNot(cids.isNullAt)
+            .map(i => (k, InternalRow.copyValue(cids.get(i, idT))))
         }
-      val drops = if (cands.isEmpty) Set.empty[Doc] else {
-        val byId = cands.iterator.map { case (c, as) => c -> as.toArray }.toMap
-        val scan = assets.shingles
-          .filter(col("docId").isin(byId.keys.toSeq: _*))
-          .select(col("docId"), col("sh"))
-        val idT = scan.schema("docId").dataType
-        withBroadcast(newDocs.sparkSession, (byId, near.map(shingleSet))) { bc =>
-          scan.queryExecution.toRdd.mapPartitions { rows =>
-            val (ids, sets) = bc.value
-            val toScala = CatalystTypeConverters.createToScalaConverter(idT)
-            rows.flatMap { r =>
-              if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
-              else {
-                val sh = r.getArray(1)
-                ids.getOrElse(toScala(r.get(0, idT)), Array.empty[Int])
-                  .iterator.filter(a => verifies(sh, sets(a), s.threshold))
-              }
-            }
-          }.collect().map(near).toSet
-        }
+      }.foreach { case (k, c) =>
+        val as = batch.keys.members(k).filter(fresh)
+        if (as.nonEmpty) cands.getOrElseUpdate(c, mutable.Set.empty[Int]) ++= as
       }
-      (survivors, drops)
+      val drops = new JBitSet
+      if (cands.nonEmpty) {
+        val byId = cands.iterator.map { case (c, as) => c -> as.toArray }.toMap
+        scanWith(assets.shingles.select(col("docId"), col("sh")),
+            (byId, batch.sets)) { case ((ids, sets), r) =>
+          if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
+          else {
+            val sh = r.getArray(1)
+            ids.getOrElse(r.get(0, idT), Array.empty[Int])
+              .iterator.filter(a => verifies(sh, sets(a), s.threshold))
+          }
+        }.foreach(a => drops.set(a))
+      }
+      (contained, drops)
     }
 }

@@ -36,11 +36,8 @@ object GraftStateStoreBridge {
       }
     }
 
-  /** How many of `q`'s state stores are loaded in this JVM. */
-  def loadedStores(q: StreamingQuery): Int = storeIds(q).count(StateStore.isLoaded)
-
   /** Every store id `q`'s stateful operators can have loaded. */
-  private def storeIds(q: StreamingQuery): Seq[StateStoreProviderId] = q match {
+  private[sql] def storeIds(q: StreamingQuery): Seq[StateStoreProviderId] = q match {
     case w: StreamingQueryWrapper =>
       Option(w.streamingQuery.lastExecution).toSeq.flatMap { last =>
         last.executedPlan.collect { case op: StateStoreWriter => op }

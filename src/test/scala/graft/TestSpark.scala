@@ -56,8 +56,10 @@ object TestSpark {
   }
 
   /** What the Spark jobs of one call ran: the jobs, the stages submitted,
-    * and each job's final-stage name in start order. */
-  final case class JobShape(jobs: Int, stages: Int, finalStages: Seq[String])
+    * and, per job in start order, its final-stage name and the serialized
+    * result bytes its tasks sent the driver. */
+  final case class JobShape(jobs: Int, stages: Int, finalStages: Seq[String],
+      resultBytes: Seq[Long])
 
   /** The [[JobShape]] of the jobs `f` starts on this thread. They carry a
     * job tag of their own (Spark SQL hands it to the threads it runs
@@ -69,15 +71,21 @@ object TestSpark {
     def tagged(p: java.util.Properties): Boolean =
       Option(p).flatMap(p => Option(p.getProperty("spark.job.tags")))
         .exists(_.split(",").contains(tag))
-    val finals = new ConcurrentLinkedQueue[String]
+    val finals = new ConcurrentLinkedQueue[(String, AtomicLong)]
+    val jobOfStage = new ConcurrentHashMap[Int, AtomicLong]
     val stages = new AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (tagged(e.properties)) {
-          finals.add(e.stageInfos.maxBy(_.stageId).name); ()
+          val bytes = new AtomicLong
+          finals.add((e.stageInfos.maxBy(_.stageId).name, bytes))
+          e.stageIds.foreach(jobOfStage.put(_, bytes))
         }
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         if (tagged(e.properties)) { stages.incrementAndGet(); () }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        for (bytes <- Option(jobOfStage.get(e.stageId));
+             m <- Option(e.taskMetrics)) bytes.addAndGet(m.resultSize)
     }
     TestAccess.drainListenerBus(sc)
     sc.addSparkListener(listener)
@@ -85,7 +93,8 @@ object TestSpark {
     try {
       val a = f
       TestAccess.drainListenerBus(sc)
-      (a, JobShape(finals.size, stages.get, finals.asScala.toSeq))
+      val jobs = finals.asScala.toSeq
+      (a, JobShape(jobs.size, stages.get, jobs.map(_._1), jobs.map(_._2.get)))
     } finally {
       sc.removeJobTag(tag)
       sc.removeSparkListener(listener)

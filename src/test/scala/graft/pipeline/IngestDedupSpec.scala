@@ -163,13 +163,50 @@ class IngestDedupSpec extends AnyFunSuite {
       capped)) == Set(10L))
   }
 
+  test("a skewed corpus: a boilerplate bucket over maxBucket drops nothing") {
+    val text = "terms of service apply to every page of this site and all " +
+      "content on it is provided as is without warranty of any kind"
+    // 40 copies over 4 partitions: each partition alone holds 10 > 8 of
+    // every bucket of `text`
+    val corpus = spark.sparkContext
+      .parallelize((1 to 40).map(i => (i.toLong, text)), 4).toDF("doc_id", "text")
+    val batch = Seq((100L, text + " today"),
+      (101L, "a short note about the weather and the garden and the birds " +
+        "that came back to the feeder this morning")).toDF("doc_id", "text")
+    val capped = IngestDedup.Shape(Threshold, K, bands = 32, rowsPerBand = 4,
+      maxBucket = 8)
+    assert(ids(IngestDedup.againstCorpus(corpus, batch, "doc_id", "text",
+      capped)) == Set(100L, 101L))
+    assert(viaSketch(corpus, batch, maxBucket = 8) == Set(100L, 101L))
+    // under the default cap the near copy goes
+    assert(ids(Dedup.dedupAgainstCorpus(corpus, batch, "doc_id", "text",
+      threshold = Threshold)) == Set(101L))
+    assert(viaSketch(corpus, batch) == Set(101L))
+  }
+
   test("a batch sketch over the byte cap fails with a message naming it") {
     val batch = Seq((1L, "a few words of text"), (2L, "and a few more")).toDF("doc_id", "text")
     val e = intercept[Exception] {
-      IngestDedup.againstCorpus(batch, batch, "doc_id", "text",
+      IngestDedup.collectBatch(batch, "doc_id", "text",
         IngestDedup.Shape(Threshold, K, 32, 4, 4096), cap = 64L)
     }
     assert(e.getMessage.contains("exceeds 64 bytes"), e.getMessage)
+  }
+
+  test("the corpus pass sends the driver only the keys a partition hit") {
+    val rng = new scala.util.Random(11)
+    val corpus = spark.sparkContext.parallelize(
+      Seq.tabulate(256)(i => (i.toLong, words(rng, 40).mkString(" "))), 64)
+      .toDF("doc_id", "text")
+    val batch = Seq.tabulate(2000)(i =>
+      (100000L + i, words(rng, 40).mkString(" "))).toDF("doc_id", "text")
+    val (kept, shape) = TestSpark.jobShape(ids(Dedup.dedupAgainstCorpus(
+      corpus, batch, "doc_id", "text", threshold = Threshold)))
+    assert(kept.size == 2000)
+    // the corpus pass is the last job: 64 scan tasks, merged in a tree. A
+    // per-partition count per batch key (2000 docs x 32 bands x 8 B) would
+    // be 500 KiB a task, 32 MiB in all.
+    assert(shape.resultBytes.last < (256L << 10), shape)
   }
 
   test("dedupAgainstCorpus runs three jobs on a single-file corpus") {

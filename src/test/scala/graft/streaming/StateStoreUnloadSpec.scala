@@ -2,7 +2,7 @@ package graft.streaming
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.GraftStateStoreBridge
+import org.apache.spark.sql.{GraftStateStoreBridge, StateStoreTestAccess}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,7 +33,7 @@ class StateStoreUnloadSpec extends AnyFunSuite {
     (1 to 3).foreach { i =>
       val q = EventStreams.runStreamStreamJoinOnce(spark, dir, s"unload_join_$i")
       assert(spark.table(s"unload_join_$i").count() > 0)
-      assert(GraftStateStoreBridge.loadedStores(q) == 0)
+      assert(StateStoreTestAccess.loadedStores(q) == 0)
     }
     // threads other suites' still-running or unmaintained queries hold
     // may remain; these runs must add none
@@ -53,11 +53,11 @@ class StateStoreUnloadSpec extends AnyFunSuite {
       .start()
     try {
       running.processAllAvailable()
-      val loaded = GraftStateStoreBridge.loadedStores(running)
+      val loaded = StateStoreTestAccess.loadedStores(running)
       assert(loaded > 0)
       val q = EventStreams.runStreamStreamJoinOnce(spark, dir, "unload_own")
-      assert(GraftStateStoreBridge.loadedStores(q) == 0)
-      assert(GraftStateStoreBridge.loadedStores(running) == loaded)
+      assert(StateStoreTestAccess.loadedStores(q) == 0)
+      assert(StateStoreTestAccess.loadedStores(running) == loaded)
     } finally {
       running.stop()
       GraftStateStoreBridge.unloadStores(running)
