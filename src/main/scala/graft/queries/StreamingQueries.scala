@@ -3,9 +3,11 @@ package graft.queries
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.streaming.EventStreams
+import graft.streaming.{CdcStreams, DocStreams, EventStreams, Frequency}
 
 /** Structured Streaming exercised through the correctness gate: the
   * windowed-count stream drains the events table with AvailableNow and
@@ -16,70 +18,67 @@ object StreamingQueries {
 
   private val runCounter = new AtomicInteger(0)
 
-  /** Await an AvailableNow drain and FAIL LOUDLY if it didn't finish or
-    * the query died — otherwise a hung/failed stream would silently gate
-    * on a stale (possibly empty) memory table. */
-  private[graft] def drained(q: org.apache.spark.sql.streaming.StreamingQuery,
-      timeoutMs: Long = 300000): Unit =
-    graft.streaming.StreamConf.awaitDrain(q, timeoutMs)
+  /** `prefix` plus a number no earlier run in this JVM used: memory-sink
+    * tables and scratch directories are per run. */
+  private def fresh(prefix: String): String =
+    s"${prefix}_${runCounter.incrementAndGet()}"
+
+  /** Drain a runner into a fresh memory table and read it from `s`. The
+    * runner returns once its query has drained (`StreamConf.drainOnce`),
+    * so the table is complete. */
+  private def drainTable(s: SparkSession, prefix: String)(
+      run: String => StreamingQuery): DataFrame = {
+    val name = fresh(prefix)
+    run(name)
+    s.table(name)
+  }
+
+  /** The newest row per `key` by `order` descending: the converged state
+    * of a per-key fold whose memory sink holds every update. */
+  private def latestPer(df: DataFrame, key: String, order: String): DataFrame =
+    df.withColumn("__rn", row_number().over(
+        Window.partitionBy(key).orderBy(col(order).desc)))
+      .filter(col("__rn") === 1)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Streaming per-key rate limiter (flatMapGroupsWithState keyed by
     // user × tumbling day, ONE counter of state per live key): admit
     // the earliest 3 events per user-day. AvailableNow = one batch,
     // so the admitted set equals the batch row_number replay.
-    "q_stream_rate_limit" -> ((s, dir) => {
-      val name = s"stream_rate_limit_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runRateLimitOnce(s, dir, name)
-      drained(q)
-      s.table(name)
+    "q_stream_rate_limit" -> ((s, dir) =>
+      drainTable(s, "stream_rate_limit")(EventStreams.runRateLimitOnce(s, dir, _))
         .select(col("user_id"), col("bucket"), col("event_id"), col("ts_us"))
-        .orderBy("user_id", "bucket", "event_id")
-    }),
+        .orderBy("user_id", "bucket", "event_id")),
 
     // Stateless streaming multimodal fingerprinting: the real
     // PNG-decode + integer aHash kernel mapped over the doc stream;
     // the drained hashes equal the batch pixel-closed-form oracle.
-    "q_stream_image_ahash" -> ((s, dir) => {
-      val name = s"stream_ahash_${runCounter.incrementAndGet()}"
-      val q = graft.streaming.DocStreams.runStreamingImageHashOnce(
-        s, dir, name)
-      drained(q)
-      s.table(name)
+    "q_stream_image_ahash" -> ((s, dir) =>
+      drainTable(s, "stream_ahash")(DocStreams.runStreamingImageHashOnce(s, dir, _))
         .select(col("mediaId").as("doc_id"), col("nAbove").as("n_above"),
           col("bits"))
-        .orderBy("doc_id")
-    }),
+        .orderBy("doc_id")),
 
     // Streaming clamped balance (floor-at-zero fold, 2 numbers of
     // state/key): converges bitwise to the batch in-row fold, so it
     // reuses the scalar list_reduce oracle.
-    "q_stream_clamped_balance" -> ((s, dir) => {
-      val name = s"stream_bal_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runClampedBalanceOnce(s, dir, name)
-      drained(q)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("n_events").desc)
-      s.table(name)
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    "q_stream_clamped_balance" -> ((s, dir) =>
+      latestPer(drainTable(s, "stream_bal")(
+          EventStreams.runClampedBalanceOnce(s, dir, _)), "user_id", "n_events")
         .select(col("user_id"), col("n_events"),
           round(col("balance"), 6).as("balance"))
-        .orderBy("user_id")
-    }),
+        .orderBy("user_id")),
 
     // Streaming Markov transitions (one string of state per user):
     // drained (prev -> next) counts equal the batch lag replay; the
     // conditional probabilities re-derive in the gate aggregation.
     "q_stream_transitions" -> ((s, dir) => {
-      val name = s"stream_trans_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runStreamingTransitionsOnce(s, dir, name)
-      drained(q)
-      val counts = s.table(name)
+      val counts = drainTable(s, "stream_trans")(
+          EventStreams.runStreamingTransitionsOnce(s, dir, _))
         .groupBy(col("prev"), col("next"))
         .agg(count(lit(1)).as("n"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("prev"))
-      counts.withColumn("p",
-          round(col("n") / sum(col("n")).over(w) + 1e-9, 6))
+      counts.withColumn("p", round(col("n") /
+          sum(col("n")).over(Window.partitionBy(col("prev"))) + 1e-9, 6))
         .orderBy("prev", "next")
     }),
 
@@ -87,45 +86,34 @@ object StreamingQueries {
     // after the previously KEPT event of its (user, type) key — one
     // timestamp of state per key; the sequential kept-anchor rule is
     // replayed by a recursive-CTE oracle.
-    "q_stream_burst_collapse" -> ((s, dir) => {
-      val name = s"stream_burst_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runBurstCollapseOnce(s, dir, name)
-      drained(q)
-      s.table(name)
+    "q_stream_burst_collapse" -> ((s, dir) =>
+      drainTable(s, "stream_burst")(EventStreams.runBurstCollapseOnce(s, dir, _))
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_kept"))
-        .orderBy("user_id")
-    }),
+        .orderBy("user_id")),
 
     // Streaming Holt linear-trend forecasting ((n, level, trend) state
     // per key): the converged fold is bitwise the batch recurrence, so
     // the gate reuses the recursive-CTE oracle.
-    "q_stream_holt" -> ((s, dir) => {
-      val name = s"stream_holt_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runStreamingHoltOnce(s, dir, name)
-      drained(q)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("n_events").desc)
-      s.table(name)
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    "q_stream_holt" -> ((s, dir) =>
+      latestPer(drainTable(s, "stream_holt")(
+          EventStreams.runStreamingHoltOnce(s, dir, _)), "user_id", "n_events")
         .select(col("user_id"), col("n_events"),
           round(col("level"), 6).as("level"),
           round(col("trend"), 6).as("trend"),
           round(col("level") + col("trend"), 6).as("forecast"))
-        .orderBy("user_id")
-    }),
+        .orderBy("user_id")),
 
     // Streaming approximate distinct (HLL++ per group, Complete mode):
     // the estimate must land within the configured rsd bound of the
     // exact batch count — the streaming member of the HLL family.
     "q_stream_approx_distinct" -> ((s, dir) => {
-      val name = s"stream_apxd_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runApproxDistinctOnce(s, dir, name)
-      drained(q)
+      val est = drainTable(s, "stream_apxd")(
+        EventStreams.runApproxDistinctOnce(s, dir, _))
       val exact = graft.Tables.load(s, dir, "events")
         .groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("n_exact"))
-      s.table(name).join(exact, "event_type")
+      est.join(exact, "event_type")
         .select(col("event_type"), col("n_exact"),
           (abs(col("__est") - col("n_exact")).cast("double") /
             col("n_exact") <= 0.06).as("within_bound"))
@@ -136,105 +124,76 @@ object StreamingQueries {
     // key): the converged moments must match the batch avg/var_samp
     // replay to 6/5 decimals (both are mathematically exact; only
     // summation-order ulps differ).
-    "q_stream_welford" -> ((s, dir) => {
-      val name = s"stream_welford_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runStreamingWelfordOnce(s, dir, name)
-      drained(q)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("n").desc)
-      s.table(name)
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    "q_stream_welford" -> ((s, dir) =>
+      latestPer(drainTable(s, "stream_welford")(
+          EventStreams.runStreamingWelfordOnce(s, dir, _)), "user_id", "n")
         .select(col("user_id"), col("n"),
           round(col("mean") + 1e-9, 6).as("mean"),
           round(sqrt(col("m2") / (col("n") - 1)) + 1e-9, 5).as("stddev"))
-        .orderBy("user_id")
-    }),
+        .orderBy("user_id")),
 
     // Streaming percentile sketch (Complete mode, one bounded mergeable
     // sketch per group): the drained approx median must land inside the
     // exact p45–p55 band computed from the batch table — the same
     // accuracy contract as the batch q_approx_quantiles gate.
     "q_stream_approx_quantiles" -> ((s, dir) => {
-      val name = s"stream_apxq_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runApproxQuantilesOnce(s, dir, name)
-      drained(q)
+      val apx = drainTable(s, "stream_apxq")(
+        EventStreams.runApproxQuantilesOnce(s, dir, _))
       val bounds = graft.Tables.load(s, dir, "events")
         .groupBy(col("event_type"))
         .agg(expr("percentile_cont(0.45) WITHIN GROUP (ORDER BY value)")
           .as("__lo"),
           expr("percentile_cont(0.55) WITHIN GROUP (ORDER BY value)")
             .as("__hi"))
-      s.table(name).join(bounds, "event_type")
+      apx.join(bounds, "event_type")
         .select(col("event_type"), col("n"),
           (col("apx") >= col("__lo") && col("apx") <= col("__hi"))
             .as("median_in_band"))
         .orderBy("event_type")
     }),
 
-    "q_stream_windowed_counts" -> ((s, dir) => {
-      val name = s"stream_counts_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runWindowedCountsOnce(s, dir, name)
-      drained(q)
-      s.table(name)
+    "q_stream_windowed_counts" -> ((s, dir) =>
+      drainTable(s, "stream_counts")(EventStreams.runWindowedCountsOnce(s, dir, _))
         .select(col("window_start"), col("event_type"), col("n"), col("sum_value"))
-        .orderBy("window_start", "event_type")
-    }),
+        .orderBy("window_start", "event_type")),
 
     // Streaming OHLC bars: the batch resample aggregation drained over
     // the event stream in Complete mode (one bar of state per key x
     // bucket); must hash-match the batch operator's daily bars.
-    "q_stream_ohlc" -> ((s, dir) => {
-      val name = s"stream_ohlc_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runOhlcOnce(s, dir, name)
-      drained(q)
-      s.table(name).withColumnRenamed("bucket", "day")
-        .orderBy("event_type", "day")
-    }),
+    "q_stream_ohlc" -> ((s, dir) =>
+      drainTable(s, "stream_ohlc")(EventStreams.runOhlcOnce(s, dir, _))
+        .withColumnRenamed("bucket", "day")
+        .orderBy("event_type", "day")),
 
     // Streaming data-quality monitor: pipeline/Quality's row-local rules
     // as a Complete-mode aggregation over the event stream — O(rules)
     // state however long the stream runs; must equal the batch audit.
-    "q_stream_dq_monitor" -> ((s, dir) => {
-      val name = s"stream_dq_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runQualityMonitorOnce(s, dir, name)
-      drained(q)
-      s.table(name).orderBy("rule")
-    }),
+    "q_stream_dq_monitor" -> ((s, dir) =>
+      drainTable(s, "stream_dq")(EventStreams.runQualityMonitorOnce(s, dir, _))
+        .orderBy("rule")),
 
     // Streaming CDC merge: the q_merge_upsert change feed folded into
     // per-key state via mapGroupsWithState; the converged snapshot must
     // hash-match the batch merge's relational replay.
-    "q_stream_merge" -> ((s, dir) => {
-      val name = s"stream_merge_${runCounter.incrementAndGet()}"
-      val q = graft.streaming.CdcStreams.runStreamingMergeOnce(s, dir, name)
-      drained(q)
-      // the Update-mode memory sink appends one row per key PER
-      // MICRO-BATCH it was touched in — reduce to the latest snapshot per
-      // key (max version) BEFORE dropping deletes, so a multi-batch drain
-      // (multi-file source, maxFilesPerTrigger) can't surface stale rows
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_orderkey").orderBy(col("version").desc)
-      s.table(name)
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    // The Update-mode memory sink appends one row per key PER
+    // MICRO-BATCH it was touched in — reduce to the latest snapshot per
+    // key (max version) BEFORE dropping deletes, so a multi-batch drain
+    // (multi-file source, maxFilesPerTrigger) can't surface stale rows.
+    "q_stream_merge" -> ((s, dir) =>
+      latestPer(drainTable(s, "stream_merge")(
+          CdcStreams.runStreamingMergeOnce(s, dir, _)), "o_orderkey", "version")
         .filter(col("op") =!= "D")
         .select(col("o_orderkey"), col("status"), col("price_c"))
-        .orderBy("o_orderkey")
-    }),
+        .orderBy("o_orderkey")),
 
     // Streaming per-key EWMA: the sequential recurrence carried as two
     // numbers of state per key; the converged fold must match the batch
     // operator (and its list_reduce oracle) bitwise.
-    "q_stream_ewma" -> ((s, dir) => {
-      val name = s"stream_ewma_${runCounter.incrementAndGet()}"
-      val q = graft.streaming.EventStreams.runStreamingEwmaOnce(s, dir, name)
-      drained(q)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("n_events").desc)
-      s.table(name)
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    "q_stream_ewma" -> ((s, dir) =>
+      latestPer(drainTable(s, "stream_ewma")(
+          EventStreams.runStreamingEwmaOnce(s, dir, _)), "user_id", "n_events")
         .select("user_id", "n_events", "ewma")
-        .orderBy("user_id")
-    }),
+        .orderBy("user_id")),
 
     // State-store INTROSPECTION (ops tooling): the bounded-dedup
     // query's checkpoint read back through Spark's statestore data
@@ -244,11 +203,10 @@ object StreamingQueries {
     // every key's horizon passed, proving the state really is
     // bounded.)
     "q_state_introspect" -> ((s, dir) => {
-      val n = runCounter.incrementAndGet()
-      val chk = graft.util.Scratch.dir(s"state_chk_$n")
-      val q = EventStreams.runStreamingDedupBoundedOnce(s, dir,
-        s"state_introspect_$n", checkpointDir = Some(chk))
-      drained(q)
+      val name = fresh("state_introspect")
+      val chk = graft.util.Scratch.dir(s"${name}_chk")
+      EventStreams.runStreamingDedupBoundedOnce(s, dir, name,
+        checkpointDir = Some(chk))
       s.read.format("statestore").option("batchId", 0).load(chk)
         .select(col("key.user_id").as("user_id"),
           col("key.event_type").as("event_type"))
@@ -258,17 +216,11 @@ object StreamingQueries {
     // The SAME EWMA on Spark 4's transformWithState API (named
     // ValueState via a StatefulProcessor, RocksDB-backed): must
     // converge to bitwise the same fold — identical oracle.
-    "q_stream_ewma_tws" -> ((s, dir) => {
-      val name = s"stream_ewma_tws_${runCounter.incrementAndGet()}"
-      val q = graft.streaming.EventStreams.runStreamingEwmaTwsOnce(s, dir, name)
-      drained(q)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("n_events").desc)
-      s.table(name)
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    "q_stream_ewma_tws" -> ((s, dir) =>
+      latestPer(drainTable(s, "stream_ewma_tws")(
+          EventStreams.runStreamingEwmaTwsOnce(s, dir, _)), "user_id", "n_events")
         .select("user_id", "n_events", "ewma")
-        .orderBy("user_id")
-    }),
+        .orderBy("user_id")),
 
     // Streaming conversion funnel: the batch fold carried as one
     // integer of state per user. The drained per-user reach reduces to
@@ -276,14 +228,9 @@ object StreamingQueries {
     // and must therefore match the identical DuckDB min-time-join
     // replay that gates q_funnel.
     "q_stream_funnel" -> ((s, dir) => {
-      val name = s"stream_funnel_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runStreamingFunnelOnce(s, dir, name)
-      drained(q)
+      val reach = latestPer(drainTable(s, "stream_funnel")(
+        EventStreams.runStreamingFunnelOnce(s, dir, _)), "user_id", "reach")
       val steps = Seq("signup", "click", "purchase")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("reach").desc)
-      val reach = s.table(name)
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
       val stepSums = steps.indices.map(i =>
         sum((col("reach") > i).cast("long")).as(s"s$i"))
       val stackArgs = steps.indices
@@ -297,43 +244,31 @@ object StreamingQueries {
     // Stateless streaming mixture sampling: the batch hash-threshold
     // policy applied to the document stream — zero state, and the
     // drained sample must equal the batch/relational replay exactly.
-    "q_stream_mixture" -> ((s, dir) => {
-      val name = s"stream_mixture_${runCounter.incrementAndGet()}"
-      val q = graft.streaming.DocStreams.runStreamingMixtureOnce(s, dir,
-        name, Map("src0" -> 1.0, "src1" -> 1.0, "src2" -> 0.5,
-          "src3" -> 0.5, "src4" -> 0.25), defaultWeight = 0.1)
-      drained(q)
-      s.table(name)
+    "q_stream_mixture" -> ((s, dir) =>
+      drainTable(s, "stream_mixture")(DocStreams.runStreamingMixtureOnce(s, dir,
+          _, Map("src0" -> 1.0, "src1" -> 1.0, "src2" -> 0.5,
+            "src3" -> 0.5, "src4" -> 0.25), defaultWeight = 0.1))
         .groupBy("source")
         .agg(count(lit(1)).as("n_kept"), sum("n_chars").as("sum_chars"))
-        .orderBy("source")
-    }),
+        .orderBy("source")),
 
     // The LEARNED BPE tokenizer on the document stream: the shared
     // model's 10 merges compile into nested non-overlapping replaces —
     // pure column algebra, ZERO state, no stream-static join, so a
     // retrained tokenizer redeploys as a query restart. Drained counts
     // must hash-match the batch tokenizer oracle exactly.
-    "q_stream_bpe_tokens" -> ((s, dir) => {
-      val name = s"stream_bpe_${runCounter.incrementAndGet()}"
-      val q = graft.streaming.DocStreams.runStreamingBpeCountsOnce(
-        s, dir, name, Pipeline.bpeMerges(s, dir))
-      drained(q)
-      s.table(name)
+    "q_stream_bpe_tokens" -> ((s, dir) =>
+      drainTable(s, "stream_bpe")(DocStreams.runStreamingBpeCountsOnce(
+          s, dir, _, Pipeline.bpeMerges(s, dir)))
         .select(col("doc_id"), col("n_words"), col("n_bpe_tokens"))
-        .orderBy("doc_id")
-    }),
+        .orderBy("doc_id")),
 
     // Stateful streaming dedup (dropDuplicates over the event stream):
     // the emitted key set must equal batch DISTINCT.
-    "q_stream_dedup" -> ((s, dir) => {
-      val name = s"stream_dedup_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runStreamingDedupOnce(s, dir, name)
-      drained(q)
-      s.table(name)
+    "q_stream_dedup" -> ((s, dir) =>
+      drainTable(s, "stream_dedup")(EventStreams.runStreamingDedupOnce(s, dir, _))
         .select(col("user_id"), col("event_type"))
-        .orderBy("user_id", "event_type")
-    }),
+        .orderBy("user_id", "event_type")),
 
     // The SAME stateful dedup under the RocksDB state store — the
     // 100 TB posture for large keyed state (state bounded by local
@@ -344,13 +279,12 @@ object StreamingQueries {
     // the backend choice cannot change a single row.
     "q_stream_dedup_rocksdb" -> ((s, dir) => {
       import scala.jdk.CollectionConverters._
-      val name = s"stream_dedup_rdb_${runCounter.incrementAndGet()}"
+      val name = fresh("stream_dedup_rdb")
       // backend passed explicitly — no shared-session conf is touched,
       // so a stream started concurrently from another thread can never
       // observe this gate's provider choice
       val q = EventStreams.runStreamingDedupOnce(
         s, dir, name, stateStore = Some("rocksdb"))
-      drained(q)
       val metrics = q.recentProgress.flatMap(_.stateOperators)
         .flatMap(_.customMetrics.keySet.asScala)
       require(metrics.exists(_.toLowerCase.contains("rocksdb")),
@@ -364,57 +298,42 @@ object StreamingQueries {
     // dropDuplicatesWithinWatermark): single AvailableNow batch → no
     // state expires mid-run → emitted keys equal batch DISTINCT, while
     // the plan carries the watermarked state-eviction operator.
-    "q_stream_dedup_bounded" -> ((s, dir) => {
-      val name = s"stream_dedup_bounded_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runStreamingDedupBoundedOnce(s, dir, name)
-      drained(q)
-      s.table(name)
+    "q_stream_dedup_bounded" -> ((s, dir) =>
+      drainTable(s, "stream_dedup_bounded")(
+          EventStreams.runStreamingDedupBoundedOnce(s, dir, _))
         .select(col("user_id"), col("event_type"))
-        .orderBy("user_id", "event_type")
-    }),
+        .orderBy("user_id", "event_type")),
 
     // Streaming near-duplicate detection: the signature-only stateful
     // SimHash matcher (flatMapGroupsWithState keyed by 16-bit signature
     // chunk). The distinct emitted pair set must equal the batch
     // simHashPairs answer — and therefore the same full DuckDB replay
     // of the SimHash pipeline that gates q_dedup_simhash.
-    "q_stream_simhash_dedup" -> ((s, dir) => {
-      val name = s"stream_simhash_${runCounter.incrementAndGet()}"
-      val q = graft.streaming.DocStreams.runStreamingSimHashDedupOnce(
-        s, dir, name, maxHamming = 6)
-      drained(q)
-      s.table(name)
+    "q_stream_simhash_dedup" -> ((s, dir) =>
+      drainTable(s, "stream_simhash")(DocStreams.runStreamingSimHashDedupOnce(
+          s, dir, _, maxHamming = 6))
         .select(col("a"), col("b"), col("hamming")).distinct()
-        .orderBy("a", "b")
-    }),
+        .orderBy("a", "b")),
 
     // Streaming heavy hitters: sharded SpaceSaving sketches over the
     // event stream (bounded state per shard). Capacity exceeds every
     // shard's distinct-key load at gate scale, so the sketch is exact
     // and the drained top-20 hash-matches batch GROUP BY counts.
-    "q_stream_topk_users" -> ((s, dir) => {
-      val name = s"stream_topk_${runCounter.incrementAndGet()}"
-      val q = graft.streaming.Frequency.runStreamingTopUsersOnce(
-        s, dir, name)
-      drained(q)
-      graft.streaming.Frequency.latestCounters(s.table(name))
+    "q_stream_topk_users" -> ((s, dir) =>
+      Frequency.latestCounters(drainTable(s, "stream_topk")(
+          Frequency.runStreamingTopUsersOnce(s, dir, _)))
         .select(col("key").as("user_id"), col("n"))
         .orderBy(col("n").desc, col("user_id").asc)
-        .limit(20)
-    }),
+        .limit(20)),
 
     // STREAM-STREAM watermarked interval join: (view, click) attribution
     // pairs of the same user within 2 hours — two independent event-time
     // streams correlated with bounded per-side state. The drained pair
     // set must hash-match the DuckDB relational self-join replay.
-    "q_stream_join" -> ((s, dir) => {
-      val name = s"stream_join_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runStreamStreamJoinOnce(s, dir, name)
-      drained(q)
-      s.table(name)
+    "q_stream_join" -> ((s, dir) =>
+      drainTable(s, "stream_join")(EventStreams.runStreamStreamJoinOnce(s, dir, _))
         .select(col("user_id"), col("view_id"), col("click_id"), col("gap_us"))
-        .orderBy("user_id", "view_id", "click_id")
-    }),
+        .orderBy("user_id", "view_id", "click_id")),
 
     // LEFT OUTER stream-stream join: same attribution correlation, plus
     // the views that NEVER converted — emitted with null click columns
@@ -424,14 +343,11 @@ object StreamingQueries {
     // sides' max event times, minus the 4h delay) has passed
     // view_ts + 2h; later unmatched views are correctly withheld by
     // both the stream and the oracle.
-    "q_stream_join_outer" -> ((s, dir) => {
-      val name = s"stream_join_outer_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runStreamStreamLeftJoinOnce(s, dir, name)
-      drained(q)
-      s.table(name)
+    "q_stream_join_outer" -> ((s, dir) =>
+      drainTable(s, "stream_join_outer")(
+          EventStreams.runStreamStreamLeftJoinOnce(s, dir, _))
         .select(col("user_id"), col("view_id"), col("click_id"), col("gap_us"))
-        .orderBy("user_id", "view_id", "click_id")
-    }),
+        .orderBy("user_id", "view_id", "click_id")),
 
     // CHAINED stateful aggregation (hourly counts re-windowed into
     // daily roll-ups inside ONE streaming query — two state cascades,
@@ -439,15 +355,11 @@ object StreamingQueries {
     // sink). Append mode emits a day only when the watermark closes
     // ALL its hours, so the oracle replays the watermark rule: days
     // whose end precedes max(ts) − 2h.
-    "q_stream_chained_agg" -> ((s, dir) => {
-      val name = s"stream_chained_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runChainedAggOnce(s, dir, name)
-      drained(q)
-      s.table(name)
+    "q_stream_chained_agg" -> ((s, dir) =>
+      drainTable(s, "stream_chained")(EventStreams.runChainedAggOnce(s, dir, _))
         .select(col("day_start"), col("event_type"), col("max_hourly"),
           col("sum_n"), col("n_hours"))
-        .orderBy("day_start", "event_type")
-    }),
+        .orderBy("day_start", "event_type")),
 
     // foreachBatch production sink: the stream lands in parquet through
     // the batch writer (the sink real pipelines use for MERGE/JDBC/
@@ -455,11 +367,9 @@ object StreamingQueries {
     // the gate proves the sink delivered exactly the source rows, per
     // the batch oracle over the original events.
     "q_stream_foreachbatch_sink" -> ((s, dir) => {
-      val root = graft.util.Scratch.dir(
-        s"fbsink_${runCounter.incrementAndGet()}")
-      val q = EventStreams.runForeachBatchSinkOnce(s, dir,
-        s"$root/data", s"$root/chk")
-      drained(q)
+      val root = graft.util.Scratch.dir(fresh("fbsink"))
+      graft.streaming.StreamConf.awaitDrain(
+        EventStreams.runForeachBatchSinkOnce(s, dir, s"$root/data", s"$root/chk"))
       s.read.parquet(s"$root/data")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
@@ -474,81 +384,57 @@ object StreamingQueries {
     // eviction bounds: view emitted when view_ts + 2h passed, click
     // when click_ts itself passed (a matching view can be as late as
     // the click).
-    "q_stream_join_full" -> ((s, dir) => {
-      val name = s"stream_join_full_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runStreamStreamFullJoinOnce(s, dir, name)
-      drained(q)
-      s.table(name)
+    "q_stream_join_full" -> ((s, dir) =>
+      drainTable(s, "stream_join_full")(
+          EventStreams.runStreamStreamFullJoinOnce(s, dir, _))
         .select(col("user_id"), col("view_id"), col("click_id"), col("gap_us"))
-        .orderBy("user_id", "view_id", "click_id")
-    }),
+        .orderBy("user_id", "view_id", "click_id")),
 
     // STREAM-STATIC broadcast join: events enriched against the static
     // customer dimension inside the stream (stateless; the batch dim is
     // broadcast per micro-batch). Drained rows hash-match the plain
     // relational join.
-    "q_stream_static_join" -> ((s, dir) => {
-      val name = s"stream_static_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runStreamStaticJoinOnce(s, dir, name)
-      drained(q)
-      s.table(name)
+    "q_stream_static_join" -> ((s, dir) =>
+      drainTable(s, "stream_static")(EventStreams.runStreamStaticJoinOnce(s, dir, _))
         .select(col("event_id"), col("user_id"), col("c_mktsegment"))
-        .orderBy("event_id")
-    }),
+        .orderBy("event_id")),
 
     // Streaming exact ingest dedup against a static corpus: broadcast
     // bloom prefilter (stateless codegen expression) + stream-static
     // anti join for the suspects. The drained id set equals the plain
     // anti-join (bloom has no false negatives), so the oracle is pure
     // relational algebra.
-    "q_stream_bloom_dedup" -> ((s, dir) => {
-      val name = s"stream_bloom_${runCounter.incrementAndGet()}"
-      val q = graft.streaming.DocStreams.runStreamingBloomDedupOnce(
-        s, dir, name)
-      drained(q)
-      s.table(name).select(col("doc_id")).orderBy("doc_id")
-    }),
+    "q_stream_bloom_dedup" -> ((s, dir) =>
+      drainTable(s, "stream_bloom")(DocStreams.runStreamingBloomDedupOnce(s, dir, _))
+        .select(col("doc_id")).orderBy("doc_id")),
 
     // Streaming embedding near-dup: stateful hyperplane-LSH bucket
     // matcher at the full-recall configuration. The drained distinct
     // pair set must equal batch lshNeighborPairs — and therefore the
     // DuckDB brute-force all-pairs cosine oracle.
-    "q_stream_ann_pairs" -> ((s, dir) => {
-      val name = s"stream_ann_${runCounter.incrementAndGet()}"
-      val q = graft.streaming.DocStreams.runStreamingEmbeddingDedupOnce(
-        s, dir, name)
-      drained(q)
-      s.table(name)
+    "q_stream_ann_pairs" -> ((s, dir) =>
+      drainTable(s, "stream_ann")(
+          DocStreams.runStreamingEmbeddingDedupOnce(s, dir, _))
         .select(col("a"), col("b"), col("cosine")).distinct()
-        .orderBy("a", "b")
-    }),
+        .orderBy("a", "b")),
 
     // Streaming LM-perplexity scoring: a static char-trigram LM asset
     // broadcast into a streaming aggregation. Drained scores must
     // hash-match the batch operator's DuckDB relational replay.
-    "q_stream_perplexity" -> ((s, dir) => {
-      val name = s"stream_ppl_${runCounter.incrementAndGet()}"
-      val q = graft.streaming.DocStreams.runStreamingPerplexityOnce(
-        s, dir, name)
-      drained(q)
-      s.table(name)
+    "q_stream_perplexity" -> ((s, dir) =>
+      drainTable(s, "stream_ppl")(DocStreams.runStreamingPerplexityOnce(s, dir, _))
         .select(col("doc_id"), col("n_grams"), col("avg_neg_logp"),
           col("ppl"))
-        .orderBy("doc_id")
-    }),
+        .orderBy("doc_id")),
 
     // Sessionization via the NATIVE session_window streaming
     // aggregation: the drained session table must equal the SAME
     // relational oracle as q_sessionize — closing the custom-kernel /
     // native-operator / relational-replay triangle.
-    "q_stream_session_window" -> ((s, dir) => {
-      val name = s"stream_sesswin_${runCounter.incrementAndGet()}"
-      val q = EventStreams.runSessionWindowOnce(s, dir, name)
-      drained(q)
-      s.table(name)
+    "q_stream_session_window" -> ((s, dir) =>
+      drainTable(s, "stream_sesswin")(EventStreams.runSessionWindowOnce(s, dir, _))
         .select(col("user_id"), col("start_us"), col("end_us"), col("n"))
-        .orderBy("user_id", "start_us")
-    }),
+        .orderBy("user_id", "start_us")),
 
     // The custom stateful sessionization kernel (splitSessions, shared
     // with the streaming flatMapGroupsWithState path) cross-checked

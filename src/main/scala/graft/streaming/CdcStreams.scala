@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StreamingQuery, Trigger}
+  OutputMode, StreamingQuery}
 
 /** Continuous CDC merge: the streaming face of
   * `operators/Merge.mergeLatest`. A change stream (upserts + deletes,
@@ -59,43 +59,31 @@ object CdcStreams {
     * doesn't need 32) — at real scale the knob goes UP with state
     * volume instead. */
   def runStreamingMergeOnce(parent: SparkSession, sfDir: String,
-      queryName: String): StreamingQuery = {
-    // isolated session (the package invariant): sources AND the query
-    // live on a private newSession with the shuffle pin applied there —
-    // mutating the SHARED session's shuffle-partition conf, even
-    // try/finally-restored, races every concurrent batch plan and
-    // stream start in the window
-    val spark = StreamConf.isolated(parent)
-    import spark.implicits._
-    val fileSchema = spark.read.parquet(s"$sfDir/orders.parquet").schema
-    def ordersStream: DataFrame = spark.readStream.schema(fileSchema)
-      .option("pathGlobFilter", "orders.parquet")
-      .parquet(sfDir)
-      .select(col("o_orderkey"),
-        col("o_orderstatus").as("status"),
-        round(col("o_totalprice") * 100).cast("long").as("price_c"))
-    val snap = ordersStream
-      .select(col("o_orderkey"), col("status"), col("price_c"),
-        lit(0L).as("version"), lit("U").as("op"))
-    val del = ordersStream.filter(col("o_orderkey") % 7 === 0)
-      .select(col("o_orderkey"), col("status"), col("price_c"),
-        lit(1L).as("version"), lit("D").as("op"))
-    val upd = ordersStream
-      .filter(col("o_orderkey") % 7 =!= 0 && col("o_orderkey") % 5 === 0)
-      .select(col("o_orderkey"), lit("UPD").as("status"),
-        (col("price_c") + 110).as("price_c"),
-        lit(1L).as("version"), lit("U").as("op"))
-    val ins = ordersStream.filter(col("o_orderkey") % 11 === 0)
-      .select((col("o_orderkey") + 3000000L).as("o_orderkey"),
-        lit("NEW").as("status"), (col("price_c") + 100).as("price_c"),
-        lit(1L).as("version"), lit("U").as("op"))
-    val feed = snap.unionByName(del).unionByName(upd).unionByName(ins)
-      .as[OrderChange]
-    StreamConf.publish(parent, spark, queryName,
-      latestPerKey[OrderChange](feed, _.o_orderkey, _.version)
-        .writeStream.outputMode(OutputMode.Update)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start())
-  }
+      queryName: String): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Update) { spark =>
+      import spark.implicits._
+      val orders = graft.Tables.streamReader(spark, sfDir, "orders")
+      def ordersStream: DataFrame = orders()
+        .select(col("o_orderkey"),
+          col("o_orderstatus").as("status"),
+          round(col("o_totalprice") * 100).cast("long").as("price_c"))
+      val snap = ordersStream
+        .select(col("o_orderkey"), col("status"), col("price_c"),
+          lit(0L).as("version"), lit("U").as("op"))
+      val del = ordersStream.filter(col("o_orderkey") % 7 === 0)
+        .select(col("o_orderkey"), col("status"), col("price_c"),
+          lit(1L).as("version"), lit("D").as("op"))
+      val upd = ordersStream
+        .filter(col("o_orderkey") % 7 =!= 0 && col("o_orderkey") % 5 === 0)
+        .select(col("o_orderkey"), lit("UPD").as("status"),
+          (col("price_c") + 110).as("price_c"),
+          lit(1L).as("version"), lit("U").as("op"))
+      val ins = ordersStream.filter(col("o_orderkey") % 11 === 0)
+        .select((col("o_orderkey") + 3000000L).as("o_orderkey"),
+          lit("NEW").as("status"), (col("price_c") + 100).as("price_c"),
+          lit(1L).as("version"), lit("U").as("op"))
+      val feed = snap.unionByName(del).unionByName(upd).unionByName(ins)
+        .as[OrderChange]
+      latestPerKey[OrderChange](feed, _.o_orderkey, _.version).toDF()
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.pipeline.Dedup
 
@@ -189,31 +189,22 @@ object DocStreams {
     * drained pair set must equal the batch `lshNeighborPairs` answer —
     * and therefore DuckDB's brute-force all-pairs cosine join. */
   def runStreamingEmbeddingDedupOnce(parent: SparkSession, sfDir: String,
-      queryName: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    val schema = spark.read.parquet(s"$sfDir/embeddings.parquet").schema
-    val base = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(sfDir)
-      .select(col("vec_id"), col("embedding"))
-      // stream-side fanOut: the per-vector sketch projection is
-      // task-serial on the single-file source's 1-2 partitions
-      .repartition(parent.sparkContext.defaultParallelism)
-    val planted = base.filter(col("vec_id") % 10 === 0)
-      .select((col("vec_id") + 100000).as("vec_id"),
-        transform(col("embedding"),
-          (x, i) => when(i === 7 || i === 39, lit(0.0f)).otherwise(x))
-          .as("embedding"))
-    val buckets = vecBuckets(base.unionAll(planted), "vec_id", "embedding",
-      bits = 10, probes = 20)
-    StreamConf.publish(parent, spark, queryName, {
+      queryName: String): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append) { spark =>
+      val base = graft.Tables.stream(spark, sfDir, "embeddings")
+        .select(col("vec_id"), col("embedding"))
+        // stream-side fanOut: the per-vector sketch projection is
+        // task-serial on the single-file source's 1-2 partitions
+        .repartition(parent.sparkContext.defaultParallelism)
+      val planted = base.filter(col("vec_id") % 10 === 0)
+        .select((col("vec_id") + 100000).as("vec_id"),
+          transform(col("embedding"),
+            (x, i) => when(i === 7 || i === 39, lit(0.0f)).otherwise(x))
+            .as("embedding"))
+      val buckets = vecBuckets(base.unionAll(planted), "vec_id", "embedding",
+        bits = 10, probes = 20)
       embeddingMatcher(buckets, minCosine = 0.9).toDF()
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+    }
 
   /** Streaming LM-perplexity scoring: documents arrive as a stream and
     * are scored under a STATIC char-trigram LM (trained batch-side on
@@ -223,31 +214,22 @@ object DocStreams {
     * hash-match the batch operator — and therefore the same DuckDB
     * relational replay that gates q_doc_perplexity. */
   def runStreamingPerplexityOnce(parent: SparkSession, sfDir: String,
-      queryName: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    val batchDocs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val lm = graft.pipeline.TextAnalysis.charNgramLm(
-      batchDocs.filter(col("doc_id") % 2 === 0), "doc_id", "text")
-      .localCheckpoint(true)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
-      .select(col("doc_id"), col("text"))
-      .filter(col("doc_id") % 2 === 1)
-      // stream-side fanOut: the char-trigram explosion is task-serial
-      // on the single-file source's 1-2 partitions
-      .repartition(parent.sparkContext.defaultParallelism)
-    StreamConf.publish(parent, spark, queryName, {
+      queryName: String): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Complete) { spark =>
+      val batchDocs = spark.read.parquet(s"$sfDir/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      val lm = graft.pipeline.TextAnalysis.charNgramLm(
+        batchDocs.filter(col("doc_id") % 2 === 0), "doc_id", "text")
+        .localCheckpoint(true)
+      val stream = graft.Tables.stream(spark, sfDir, "documents")
+        .select(col("doc_id"), col("text"))
+        .filter(col("doc_id") % 2 === 1)
+        // stream-side fanOut: the char-trigram explosion is task-serial
+        // on the single-file source's 1-2 partitions
+        .repartition(parent.sparkContext.defaultParallelism)
       graft.pipeline.TextAnalysis.perplexityScores(
-          stream, lm, "doc_id", "text")
-        .writeStream.outputMode(OutputMode.Complete)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+        stream, lm, "doc_id", "text")
+    }
 
   /** Streaming exact ingest dedup against a STATIC corpus — the
     * streaming face of `Dedup.exactDedupWithBloom`, and the shape a
@@ -265,38 +247,29 @@ object DocStreams {
     * fresh — no within-batch duplicate groups, keeping the streaming
     * result a pure set with no keep-first ordering dependence). */
   def runStreamingBloomDedupOnce(parent: SparkSession, sfDir: String,
-      queryName: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val bloomBytes = Dedup.buildCorpusBloom(corpus, "text")
-    val hashes = corpus.select(md5(col("text").cast("binary")).as("h"))
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val base = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
-      .select(col("doc_id"), col("text"))
-    val batch = base.filter(col("doc_id") % 30 === 0)
-      .select((col("doc_id") + 200000).as("doc_id"), col("text"))
-      .unionAll(base.filter(col("doc_id") % 30 === 7)
-        .select((col("doc_id") + 300000).as("doc_id"),
-          col("text").substr(lit(1),
-            greatest(length(col("text")) - 30, lit(10))).as("text")))
-    val hashed = batch.select(col("doc_id"),
-      md5(col("text").cast("binary")).as("h"),
-      graft.functions.Bloom.might_contain_long(bloomBytes,
-        xxhash64(col("text"))).as("__maybe"))
-    val suspects = hashed.filter(col("__maybe"))
-      .join(hashes, Seq("h"), "left_anti")
-    val fresh = hashed.filter(!col("__maybe"))
-    StreamConf.publish(parent, spark, queryName, {
+      queryName: String): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append) { spark =>
+      val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      val bloomBytes = Dedup.buildCorpusBloom(corpus, "text")
+      val hashes = corpus.select(md5(col("text").cast("binary")).as("h"))
+      val base = graft.Tables.stream(spark, sfDir, "documents")
+        .select(col("doc_id"), col("text"))
+      val batch = base.filter(col("doc_id") % 30 === 0)
+        .select((col("doc_id") + 200000).as("doc_id"), col("text"))
+        .unionAll(base.filter(col("doc_id") % 30 === 7)
+          .select((col("doc_id") + 300000).as("doc_id"),
+            col("text").substr(lit(1),
+              greatest(length(col("text")) - 30, lit(10))).as("text")))
+      val hashed = batch.select(col("doc_id"),
+        md5(col("text").cast("binary")).as("h"),
+        graft.functions.Bloom.might_contain_long(bloomBytes,
+          xxhash64(col("text"))).as("__maybe"))
+      val suspects = hashed.filter(col("__maybe"))
+        .join(hashes, Seq("h"), "left_anti")
+      val fresh = hashed.filter(!col("__maybe"))
       suspects.unionByName(fresh).select(col("doc_id"))
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+    }
 
   /** Drain-once runner: stream the documents table (with the same
     * planted near-duplicates the batch gate uses), match, and land hits
@@ -310,42 +283,25 @@ object DocStreams {
     * 8 x 8-bit chunks), and the default distance is the batch
     * operator's 3 — r5's streaming-only best-effort 6 is gone. */
   def runStreamingSimHashDedupOnce(parent: SparkSession, sfDir: String,
-      queryName: String, maxHamming: Int = 3): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val base = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
-      .select(col("doc_id"), col("text"))
-      // repartition within the micro-batch: the single-file source
-      // plans 1-2 input partitions and the 64-bit SimHash projection
-      // (tokenize + hash every token) is task-serial without it — the
-      // batch gate's fanOut, expressed stream-side (r12; the image
-      // runner set the pattern)
-      .repartition(parent.sparkContext.defaultParallelism)
-    val mutated = base.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 100000).as("doc_id"),
-        col("text").substr(lit(1),
-          greatest(length(col("text")) - 30, lit(10))).as("text"))
-    val chunks = simHashChunks(base.unionAll(mutated), "doc_id", "text",
-      hashFn = Dedup.md5Long, numChunks = Dedup.autoNumChunks(maxHamming))
-    StreamConf.publish(parent, spark, queryName, {
+      queryName: String, maxHamming: Int = 3): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append) { spark =>
+      val base = graft.Tables.stream(spark, sfDir, "documents")
+        .select(col("doc_id"), col("text"))
+        // repartition within the micro-batch: the single-file source
+        // plans 1-2 input partitions and the 64-bit SimHash projection
+        // (tokenize + hash every token) is task-serial without it — the
+        // batch gate's fanOut, expressed stream-side (r12; the image
+        // runner set the pattern)
+        .repartition(parent.sparkContext.defaultParallelism)
+      val mutated = base.filter(col("doc_id") % 10 === 0)
+        .select((col("doc_id") + 100000).as("doc_id"),
+          col("text").substr(lit(1),
+            greatest(length(col("text")) - 30, lit(10))).as("text"))
+      val chunks = simHashChunks(base.unionAll(mutated), "doc_id", "text",
+        hashFn = Dedup.md5Long, numChunks = Dedup.autoNumChunks(maxHamming))
       simHashMatcher(chunks, maxHamming).toDF()
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+    }
 
-  /** Stateless streaming mixture sampling: the deterministic
-    * hash-threshold policy of `pipeline/Sampling.mixtureSample` applied
-    * to an arriving document stream unchanged. NO state at all — the
-    * keep decision is a pure row-local filter (md5 bucket of the id vs
-    * the group's quantized weight), so the operator is scan-bound at
-    * any scale, policy redeploys need no state migration, and the
-    * emitted set equals the batch sample by construction (the property
-    * the gate's oracle checks without knowing the stream exists). */
   /** Stateless streaming multimodal fingerprinting: the SAME real
     * PNG-decode + integer aHash kernel the batch gate runs, mapped over
     * the document stream — zero state, and the drained hash set must
@@ -353,18 +309,13 @@ object DocStreams {
     * exactly. Proves the multimodal kernels compose into streaming
     * pipelines unchanged. */
   def runStreamingImageHashOnce(parent: SparkSession, sfDir: String,
-      queryName: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
-    // repartition within the micro-batch: the single-file source plans
-    // 1-2 input partitions and codec work is task-serial (the batch
-    // gate's fanOut, expressed stream-side)
-    StreamConf.publish(parent, spark, queryName, {
-      stream.select(col("doc_id"))
+      queryName: String): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append) { spark =>
+      import spark.implicits._
+      // repartition within the micro-batch: the single-file source plans
+      // 1-2 input partitions and codec work is task-serial (the batch
+      // gate's fanOut, expressed stream-side)
+      graft.Tables.stream(spark, sfDir, "documents").select(col("doc_id"))
         .repartition(spark.sparkContext.defaultParallelism).as[Long]
         .map { id =>
           val w = (8 + id % 16).toInt
@@ -375,12 +326,8 @@ object DocStreams {
             graft.pipeline.Multimodal.decodeImage(
               graft.pipeline.Multimodal.encodePng(img)).get)
         }
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+        .toDF()
+    }
 
   /** Streaming token accounting under a LEARNED BPE model: the merge
     * table compiles into pure column algebra — each token is wrapped
@@ -392,24 +339,19 @@ object DocStreams {
     * restart, not a state migration. Drained rows must hash-match the
     * batch `Bpe.tokenCounts` oracle. */
   def runStreamingBpeCountsOnce(parent: SparkSession, sfDir: String,
-      queryName: String, merges: Seq[(String, String)]): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    val S = graft.pipeline.Bpe.S
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
-    def nSyms(tok: org.apache.spark.sql.Column) = {
-      val wrapped = merges.foldLeft(
-        regexp_replace(tok, "(.)", S + "$1" + S)) { case (w, (l, r)) =>
-        replace(w, lit(S + l + S + S + r + S), lit(S + l + r + S))
+      queryName: String, merges: Seq[(String, String)]): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append) { spark =>
+      val S = graft.pipeline.Bpe.S
+      def nSyms(tok: org.apache.spark.sql.Column) = {
+        val wrapped = merges.foldLeft(
+          regexp_replace(tok, "(.)", S + "$1" + S)) { case (w, (l, r)) =>
+          replace(w, lit(S + l + S + S + r + S), lit(S + l + r + S))
+        }
+        size(split(trim(wrapped, S), S + S)).cast("long")
       }
-      size(split(trim(wrapped, S), S + S)).cast("long")
-    }
-    val toks = filter(Dedup.tokens(col("text")),
-      t => t.rlike("^[a-z0-9]+$"))
-    StreamConf.publish(parent, spark, queryName, {
-      stream
+      val toks = filter(Dedup.tokens(col("text")),
+        t => t.rlike("^[a-z0-9]+$"))
+      graft.Tables.stream(spark, sfDir, "documents")
         .select(col("doc_id"), toks.as("__toks"))
         .filter(size(col("__toks")) > 0) // batch inner-join semantics
         // stream-side fanOut: the per-token merge-fold (k nested replaces
@@ -419,29 +361,23 @@ object DocStreams {
           size(col("__toks")).cast("long").as("n_words"),
           aggregate(transform(col("__toks"), t => nSyms(t)), lit(0L),
             (acc, n) => acc + n).as("n_bpe_tokens"))
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+    }
 
+  /** Stateless streaming mixture sampling: the deterministic
+    * hash-threshold policy of `pipeline/Sampling.mixtureSample` applied
+    * to an arriving document stream unchanged. NO state at all — the
+    * keep decision is a pure row-local filter (md5 bucket of the id vs
+    * the group's quantized weight), so the operator is scan-bound at
+    * any scale, policy redeploys need no state migration, and the
+    * emitted set equals the batch sample by construction (the property
+    * the gate's oracle checks without knowing the stream exists). */
   def runStreamingMixtureOnce(parent: SparkSession, sfDir: String,
       queryName: String, weights: Map[String, Double],
-      defaultWeight: Double): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
-    StreamConf.publish(parent, spark, queryName, {
-      graft.pipeline.Sampling.mixtureSample(stream, "source", "doc_id",
+      defaultWeight: Double): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append) { spark =>
+      graft.pipeline.Sampling.mixtureSample(
+          graft.Tables.stream(spark, sfDir, "documents"), "source", "doc_id",
           weights, defaultWeight)
         .select(col("doc_id"), col("source"), col("n_chars"))
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+    }
 }

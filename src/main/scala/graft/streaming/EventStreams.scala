@@ -133,28 +133,12 @@ object EventStreams {
   /** Run a streaming windowed-count job over parquet files and drain it
     * into an in-memory table (AvailableNow = process everything, stop). */
   def runWindowedCountsOnce(parent: SparkSession, eventsDir: String,
-      queryName: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    // the file stream source requires a directory: point it at the sf dir
-    // and glob-filter to the events file; normalize whichever timestamp
-    // flavor (nanos-long / NTZ / UTC micros) the file carries — the
-    // watermark below requires TimestampType
-    val withTs = graft.Tables.normalizeEventTime(
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(eventsDir), "ts")
+      queryName: String): StreamingQuery =
     // Complete mode: append would withhold windows newer than the final
     // watermark; this job drains everything available and stops.
-    StreamConf.publish(parent, spark, queryName, {
-      windowedCounts(withTs)
-        .writeStream.outputMode(OutputMode.Complete)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+    StreamConf.drainOnce(parent, queryName, OutputMode.Complete) { spark =>
+      windowedCounts(graft.Tables.stream(spark, eventsDir, "events"))
+    }
 
   /** Streaming OHLC resampling: [[graft.operators.EventAnalytics
     * .resampleOhlc]] runs unchanged over the stream — min_by/max_by on
@@ -162,23 +146,12 @@ object EventStreams {
     * Complete mode keeps one bar per (key, bucket) of state and the
     * drained result must equal the batch bars bitwise. */
   def runOhlcOnce(parent: SparkSession, eventsDir: String,
-      queryName: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    val ev = graft.Tables.normalizeEventTime(
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(eventsDir), "ts")
-    StreamConf.publish(parent, spark, queryName, {
-      graft.operators.EventAnalytics.resampleOhlc(ev, Seq("event_type"),
-          date_trunc("day", col("ts")), "ts", "event_id", "value")
-        .writeStream.outputMode(OutputMode.Complete)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+      queryName: String): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Complete) { spark =>
+      graft.operators.EventAnalytics.resampleOhlc(
+        graft.Tables.stream(spark, eventsDir, "events"), Seq("event_type"),
+        date_trunc("day", col("ts")), "ts", "event_id", "value")
+    }
 
   /** Continuous data-quality monitoring: the row-local rule classes of
     * [[graft.pipeline.Quality]] run unchanged over a stream, because a
@@ -188,27 +161,17 @@ object EventStreams {
     * deliberately absent: they would need per-key state, a different
     * operator (the CDC merge family covers that shape). */
   def runQualityMonitorOnce(parent: SparkSession, eventsDir: String,
-      queryName: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    val ev = spark.readStream.schema(fileSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(eventsDir)
-    StreamConf.publish(parent, spark, queryName, {
-      graft.pipeline.Quality.audit(ev, Seq(
+      queryName: String): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Complete) { spark =>
+      graft.pipeline.Quality.audit(
+        graft.Tables.stream(spark, eventsDir, "events"), Seq(
           graft.pipeline.Quality.Check("event_type_allowed",
             !col("event_type").isin("view", "click", "signup", "purchase")),
           graft.pipeline.Quality.Check("props_not_null",
             col("props").isNull),
           graft.pipeline.Quality.Check("value_in_range",
             col("value") < 0 || col("value") > 400)))
-        .writeStream.outputMode(OutputMode.Complete)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+    }
 
   /** Attribution pairs: (view, click) of the same user with the click
     * inside [view_ts, view_ts + `window`). Written as a plain
@@ -221,7 +184,13 @@ object EventStreams {
     * Column parity note: gap_us is integral microseconds, exact in any
     * engine. */
   def viewClickPairs(views: DataFrame, clicks: DataFrame,
-      window: String = "2 hours", watermark: String = "4 hours"): DataFrame = {
+      window: String = "2 hours", watermark: String = "4 hours"): DataFrame =
+    viewClickJoin(views, clicks, "inner", window, watermark)
+
+  /** The interval join behind [[viewClickPairs]] and its outer forms;
+    * an unmatched click of the full outer join takes its own user. */
+  private def viewClickJoin(views: DataFrame, clicks: DataFrame,
+      joinType: String, window: String, watermark: String): DataFrame = {
     val v = graft.Tables.normalizeEventTime(views, "ts")
       .select(col("event_id").as("view_id"), col("user_id").as("view_user"),
         col("ts").as("view_ts"))
@@ -230,11 +199,14 @@ object EventStreams {
       .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
         col("ts").as("click_ts"))
       .withWatermark("click_ts", watermark)
+    val user =
+      if (joinType == "full_outer") coalesce(col("view_user"), col("click_user"))
+      else col("view_user")
     v.join(c, expr(
       s"""view_user = click_user AND
          |click_ts >= view_ts AND
-         |click_ts < view_ts + interval $window""".stripMargin))
-      .select(col("view_user").as("user_id"),
+         |click_ts < view_ts + interval $window""".stripMargin), joinType)
+      .select(user.as("user_id"),
         col("view_id"), col("click_id"),
         (unix_micros(col("click_ts")) - unix_micros(col("view_ts")))
           .as("gap_us"))
@@ -244,26 +216,21 @@ object EventStreams {
     * read the events file as independent streams, join with watermarks,
     * land pairs in a memory table. */
   def runStreamStreamJoinOnce(parent: SparkSession, eventsDir: String,
-      queryName: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    def side(eventType: String): DataFrame =
-      graft.Tables.normalizeEventTime(
-          spark.readStream.schema(fileSchema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(eventsDir), "ts")
-        .filter(col("event_type") === eventType)
+      queryName: String): StreamingQuery =
     // A stream-stream join keeps FOUR state stores per shuffle
     // partition; per-batch commit cost is per-store, not per-row, so 32
     // partitions cost ~128 store commits a micro-batch — see StreamConf.
-    StreamConf.publish(parent, spark, queryName, {
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append) { spark =>
+      val side = eventSides(spark, eventsDir)
       viewClickPairs(side("view"), side("click"))
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
+    }
+
+  /** The two sides of a view/click join: independent streams over the
+    * events file (one schema read), each filtered to one event type. */
+  private def eventSides(spark: SparkSession,
+      eventsDir: String): String => DataFrame = {
+    val events = graft.Tables.streamReader(spark, eventsDir, "events")
+    eventType => events().filter(col("event_type") === eventType)
   }
 
   /** LEFT OUTER stream-stream interval join: like [[viewClickPairs]]
@@ -275,25 +242,8 @@ object EventStreams {
     * window < watermark), so the null rows are late but exact; state
     * stays bounded exactly as in the inner join. */
   def viewClickPairsLeftOuter(views: DataFrame, clicks: DataFrame,
-      window: String = "2 hours", watermark: String = "4 hours"): DataFrame = {
-    val v = graft.Tables.normalizeEventTime(views, "ts")
-      .select(col("event_id").as("view_id"), col("user_id").as("view_user"),
-        col("ts").as("view_ts"))
-      .withWatermark("view_ts", watermark)
-    val c = graft.Tables.normalizeEventTime(clicks, "ts")
-      .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", watermark)
-    v.join(c, expr(
-      s"""view_user = click_user AND
-         |click_ts >= view_ts AND
-         |click_ts < view_ts + interval $window""".stripMargin),
-      "left_outer")
-      .select(col("view_user").as("user_id"),
-        col("view_id"), col("click_id"),
-        (unix_micros(col("click_ts")) - unix_micros(col("view_ts")))
-          .as("gap_us"))
-  }
+      window: String = "2 hours", watermark: String = "4 hours"): DataFrame =
+    viewClickJoin(views, clicks, "left_outer", window, watermark)
 
   /** FULL OUTER stream-stream interval join: both the views that never
     * converted AND the clicks no view preceded surface with nulls on
@@ -303,67 +253,24 @@ object EventStreams {
     * (click_ts − window, click_ts], so the click is provably unmatched
     * once the watermark passes click_ts). */
   def viewClickPairsFullOuter(views: DataFrame, clicks: DataFrame,
-      window: String = "2 hours", watermark: String = "4 hours"): DataFrame = {
-    val v = graft.Tables.normalizeEventTime(views, "ts")
-      .select(col("event_id").as("view_id"), col("user_id").as("view_user"),
-        col("ts").as("view_ts"))
-      .withWatermark("view_ts", watermark)
-    val c = graft.Tables.normalizeEventTime(clicks, "ts")
-      .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", watermark)
-    v.join(c, expr(
-      s"""view_user = click_user AND
-         |click_ts >= view_ts AND
-         |click_ts < view_ts + interval $window""".stripMargin),
-      "full_outer")
-      .select(coalesce(col("view_user"), col("click_user")).as("user_id"),
-        col("view_id"), col("click_id"),
-        (unix_micros(col("click_ts")) - unix_micros(col("view_ts")))
-          .as("gap_us"))
-  }
+      window: String = "2 hours", watermark: String = "4 hours"): DataFrame =
+    viewClickJoin(views, clicks, "full_outer", window, watermark)
 
   /** Drain-once runner for the FULL OUTER stream-stream join. */
   def runStreamStreamFullJoinOnce(parent: SparkSession, eventsDir: String,
-      queryName: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    def side(eventType: String): DataFrame =
-      graft.Tables.normalizeEventTime(
-          spark.readStream.schema(fileSchema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(eventsDir), "ts")
-        .filter(col("event_type") === eventType)
-    StreamConf.publish(parent, spark, queryName, {
+      queryName: String): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append) { spark =>
+      val side = eventSides(spark, eventsDir)
       viewClickPairsFullOuter(side("view"), side("click"))
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+    }
 
   /** Drain-once runner for the LEFT OUTER stream-stream join. */
   def runStreamStreamLeftJoinOnce(parent: SparkSession, eventsDir: String,
-      queryName: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    def side(eventType: String): DataFrame =
-      graft.Tables.normalizeEventTime(
-          spark.readStream.schema(fileSchema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(eventsDir), "ts")
-        .filter(col("event_type") === eventType)
-    StreamConf.publish(parent, spark, queryName, {
+      queryName: String): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append) { spark =>
+      val side = eventSides(spark, eventsDir)
       viewClickPairsLeftOuter(side("view"), side("click"))
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+    }
 
   /** Drain-once runner for the STREAM-STATIC join: the event stream
     * enriched against the static customer dimension (user_id+1 keys
@@ -372,26 +279,16 @@ object EventStreams {
     * stateless streaming analog of the dimension joins every 100 TB
     * event pipeline runs; no state store involved at all. */
   def runStreamStaticJoinOnce(parent: SparkSession, sfDir: String,
-      queryName: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val customers = spark.read.parquet(s"$sfDir/customer.parquet")
-      .select(col("c_custkey"), col("c_mktsegment"))
-    StreamConf.publish(parent, spark, queryName, {
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sfDir)
+      queryName: String): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append) { spark =>
+      val customers = spark.read.parquet(s"$sfDir/customer.parquet")
+        .select(col("c_custkey"), col("c_mktsegment"))
+      graft.Tables.stream(spark, sfDir, "events")
         .select(col("event_id"), col("user_id"))
         .join(broadcast(customers),
           col("user_id") + 1 === col("c_custkey"))
         .select(col("event_id"), col("user_id"), col("c_mktsegment"))
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+    }
 
   /** CHAINED stateful aggregation — two windowed aggregations in ONE
     * streaming query (hourly counts per event type, then daily
@@ -403,16 +300,9 @@ object EventStreams {
     * why Append is the only legal mode and why the oracle filters to
     * days whose end the final watermark passed. */
   def runChainedAggOnce(parent: SparkSession, eventsDir: String,
-      queryName: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    val stream = graft.Tables.normalizeEventTime(
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(eventsDir), "ts")
-    StreamConf.publish(parent, spark, queryName, {
-      stream
+      queryName: String): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append) { spark =>
+      graft.Tables.stream(spark, eventsDir, "events")
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
@@ -422,12 +312,7 @@ object EventStreams {
           count(lit(1)).as("n_hours"))
         .select(col("window.start").as("day_start"), col("event_type"),
           col("max_hourly"), col("sum_n"), col("n_hours"))
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+    }
 
   /** Drain-once runner for the foreachBatch PRODUCTION sink path: the
     * stream lands in parquet via `foreachBatch` (the sink every real
@@ -437,13 +322,8 @@ object EventStreams {
     * is delivered exactly once, so the landed rows equal the source
     * (asserted by the gate's batch oracle over the landed files). */
   def runForeachBatchSinkOnce(parent: SparkSession, eventsDir: String,
-      dataDir: String, checkpointDir: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    spark.readStream.schema(fileSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(eventsDir)
+      dataDir: String, checkpointDir: String): StreamingQuery =
+    graft.Tables.stream(StreamConf.isolated(parent), eventsDir, "events")
       .select(col("user_id"), col("event_type"), col("value"))
       .writeStream
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -452,7 +332,6 @@ object EventStreams {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
-  }
 
   /** Streaming ingest dedup: emit each (user_id, event_type) key the
     * first time it is seen — the stateful exact-dedup stage of a
@@ -466,22 +345,13 @@ object EventStreams {
     * session conf; `None` defers to the parent's conf opt-in. */
   def runStreamingDedupOnce(parent: SparkSession, eventsDir: String,
       queryName: String,
-      stateStore: Option[String] = None): StreamingQuery = {
-    val spark = StreamConf.isolated(parent, stateStore = stateStore)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    StreamConf.publish(parent, spark, queryName, {
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(eventsDir)
+      stateStore: Option[String] = None): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append,
+        stateStore = stateStore) { spark =>
+      graft.Tables.stream(spark, eventsDir, "events")
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+    }
 
   /** Bounded-state streaming dedup: each key's state lives only until
     * the event-time watermark passes the key's first-seen timestamp plus
@@ -505,26 +375,14 @@ object EventStreams {
     * still exercising the bounded-state operator. */
   def runStreamingDedupBoundedOnce(parent: SparkSession, eventsDir: String,
       queryName: String, watermark: String = "2 hours",
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    val withTs = graft.Tables.normalizeEventTime(
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(eventsDir), "ts")
-    StreamConf.publish(parent, spark, queryName, {
-      val w = dedupWithinWatermark(
-          withTs.select(col("ts"), col("user_id"), col("event_type")),
+      checkpointDir: Option[String] = None): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append,
+        checkpointDir = checkpointDir) { spark =>
+      dedupWithinWatermark(graft.Tables.stream(spark, eventsDir, "events")
+          .select(col("ts"), col("user_id"), col("event_type")),
           watermark, Seq("user_id", "event_type"))
         .select(col("user_id"), col("event_type"))
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-      checkpointDir.fold(w)(d => w.option("checkpointLocation", d))
-        .start()
-    })
-  }
+    }
 
   /** Drain-once runner for sessionization via the NATIVE
     * `session_window` streaming aggregation — the same session
@@ -546,16 +404,9 @@ object EventStreams {
     * exactly like the batch kernel — Append would withhold sessions
     * newer than the final watermark. */
   def runSessionWindowOnce(parent: SparkSession, eventsDir: String,
-      queryName: String, gapUs: Long = 30 * 60 * 1000000L): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    val stream = graft.Tables.normalizeEventTime(
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(eventsDir), "ts")
-    StreamConf.publish(parent, spark, queryName, {
-      stream
+      queryName: String, gapUs: Long = 30 * 60 * 1000000L): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Complete) { spark =>
+      graft.Tables.stream(spark, eventsDir, "events")
         .withWatermark("ts", "2 hours")
         .groupBy(session_window(col("ts"), s"$gapUs microseconds"),
           col("user_id"))
@@ -564,12 +415,7 @@ object EventStreams {
           unix_micros(col("session_window.start")).as("start_us"),
           (unix_micros(col("session_window.end")) - gapUs).as("end_us"),
           col("n"))
-        .writeStream.outputMode(OutputMode.Complete)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+    }
 
   final case class FunnelEvent(user_id: Long, ts_us: Long, step: Int)
   final case class FunnelReach(user_id: Long, reach: Int)
@@ -614,30 +460,18 @@ object EventStreams {
     * that touched the funnel). */
   def runStreamingFunnelOnce(parent: SparkSession, eventsDir: String,
       queryName: String,
-      steps: Seq[String] = Seq("signup", "click", "purchase")): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    val stream = graft.Tables.normalizeEventTime(
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(eventsDir), "ts")
-    val stepIdx = steps.zipWithIndex
-      .foldLeft(lit(-1)) { case (acc, (s, i)) =>
-        when(col("event_type") === s, lit(i)).otherwise(acc)
-      }
-    StreamConf.publish(parent, spark, queryName, {
-      streamingFunnel(
-          stream.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+      steps: Seq[String] = Seq("signup", "click", "purchase")): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Update) { spark =>
+      import spark.implicits._
+      val stepIdx = steps.zipWithIndex
+        .foldLeft(lit(-1)) { case (acc, (s, i)) =>
+          when(col("event_type") === s, lit(i)).otherwise(acc)
+        }
+      streamingFunnel(graft.Tables.stream(spark, eventsDir, "events")
+          .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
             stepIdx.as("step"))
-            .filter(col("step") >= 0).as[FunnelEvent])
-        .writeStream.outputMode(OutputMode.Update)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+          .filter(col("step") >= 0).as[FunnelEvent]).toDF()
+    }
 
   final case class MetricEvent(user_id: Long, ts_us: Long, event_id: Long,
       value: Double)
@@ -715,77 +549,47 @@ object EventStreams {
     * session's [[StreamConf.StateStoreKey]] opt-in), so no shared
     * session conf is touched and nothing needs restoring. */
   def runStreamingEwmaTwsOnce(parent: SparkSession, eventsDir: String,
-      queryName: String, alpha: Double = 0.25): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    val stream = graft.Tables.normalizeEventTime(
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(eventsDir), "ts")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    StreamConf.publish(parent, spark, queryName, {
-      stream.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("event_id"), col("value")).as[MetricEvent]
+      queryName: String, alpha: Double = 0.25): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Update,
+        stateStore = Some("rocksdb")) { spark =>
+      import spark.implicits._
+      metricEvents(spark, eventsDir)
         .groupByKey(_.user_id)
         .transformWithState(new EwmaTwsProcessor(alpha),
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
-        .writeStream.outputMode(OutputMode.Update)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
+        .toDF()
+    }
+
+  /** The events file as a [[MetricEvent]] stream: event time as exact
+    * integral micros, the key every per-key fold sorts by. */
+  private def metricEvents(spark: SparkSession,
+      eventsDir: String): Dataset[MetricEvent] = {
+    import spark.implicits._
+    graft.Tables.stream(spark, eventsDir, "events")
+      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+        col("event_id"), col("value")).as[MetricEvent]
   }
 
   /** Drain-once runner for [[streamingEwma]] over the events parquet
     * (Update mode, memory sink; ns timestamps normalized to the same
     * microsecond precision the batch operator folds in). */
   def runStreamingEwmaOnce(parent: SparkSession, eventsDir: String,
-      queryName: String, alpha: Double = 0.25): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    // normalize first (nanos-long / NTZ / UTC micros all become
-    // TimestampType), then take exact integral micros for the fold key
-    val stream = graft.Tables.normalizeEventTime(
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(eventsDir), "ts")
-    StreamConf.publish(parent, spark, queryName, {
-      streamingEwma(
-          stream.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-            col("event_id"), col("value")).as[MetricEvent], alpha)
-        .writeStream.outputMode(OutputMode.Update)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+      queryName: String, alpha: Double = 0.25): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Update) { spark =>
+      streamingEwma(metricEvents(spark, eventsDir), alpha).toDF()
+    }
 
   /** Streaming HLL++ distinct estimate per group (Complete mode, one
     * fixed-size register set per group — the distinct sibling of the
     * percentile sketch below). */
   def runApproxDistinctOnce(parent: SparkSession, eventsDir: String,
-      queryName: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    val ev = spark.readStream.schema(fileSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(eventsDir)
-    StreamConf.publish(parent, spark, queryName, {
-      ev.groupBy(col("event_type"))
+      queryName: String): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Complete) { spark =>
+      graft.Tables.stream(spark, eventsDir, "events")
+        .groupBy(col("event_type"))
         .agg(approx_count_distinct(col("user_id"), 0.02).as("__est"))
-        .writeStream.outputMode(OutputMode.Complete)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+    }
 
   /** Streaming percentile sketch: approx_percentile is a mergeable
     * TypedImperativeAggregate, so Complete mode carries ONE bounded
@@ -793,23 +597,13 @@ object EventStreams {
     * member of the approx-aggregate family (HLL gate q_approx_distinct,
     * batch sketch gate q_approx_quantiles). */
   def runApproxQuantilesOnce(parent: SparkSession, eventsDir: String,
-      queryName: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    val ev = spark.readStream.schema(fileSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(eventsDir)
-    StreamConf.publish(parent, spark, queryName, {
-      ev.groupBy(col("event_type"))
+      queryName: String): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Complete) { spark =>
+      graft.Tables.stream(spark, eventsDir, "events")
+        .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           expr("approx_percentile(value, 0.5, 10000)").as("apx"))
-        .writeStream.outputMode(OutputMode.Complete)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+    }
 
   final case class HoltState(n: Long, l: Double, b: Double)
   final case class HoltOut(user_id: Long, n_events: Long, level: Double,
@@ -852,25 +646,10 @@ object EventStreams {
 
   /** Drain-once runner for [[streamingHolt]]. */
   def runStreamingHoltOnce(parent: SparkSession, eventsDir: String,
-      queryName: String, alpha: Double = 0.25, beta: Double = 0.1): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    val stream = graft.Tables.normalizeEventTime(
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(eventsDir), "ts")
-    StreamConf.publish(parent, spark, queryName, {
-      streamingHolt(
-          stream.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-            col("event_id"), col("value")).as[MetricEvent], alpha, beta)
-        .writeStream.outputMode(OutputMode.Update)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+      queryName: String, alpha: Double = 0.25, beta: Double = 0.1): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Update) { spark =>
+      streamingHolt(metricEvents(spark, eventsDir), alpha, beta).toDF()
+    }
 
   final case class BalanceState(n: Long, b: Double)
   final case class BalanceOut(user_id: Long, n_events: Long, balance: Double)
@@ -898,25 +677,10 @@ object EventStreams {
 
   /** Drain-once runner for [[streamingClampedBalance]]. */
   def runClampedBalanceOnce(parent: SparkSession, eventsDir: String,
-      queryName: String, offset: Double = 25.0): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    val stream = graft.Tables.normalizeEventTime(
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(eventsDir), "ts")
-    StreamConf.publish(parent, spark, queryName, {
-      streamingClampedBalance(
-          stream.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-            col("event_id"), col("value")).as[MetricEvent], offset)
-        .writeStream.outputMode(OutputMode.Update)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+      queryName: String, offset: Double = 25.0): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Update) { spark =>
+      streamingClampedBalance(metricEvents(spark, eventsDir), offset).toDF()
+    }
 
   final case class TransitionEvent(user_id: Long, ts_us: Long,
       event_id: Long, event_type: String)
@@ -948,25 +712,13 @@ object EventStreams {
 
   /** Drain-once runner for [[streamingTransitions]]. */
   def runStreamingTransitionsOnce(parent: SparkSession, eventsDir: String,
-      queryName: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    val stream = graft.Tables.normalizeEventTime(
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(eventsDir), "ts")
-    StreamConf.publish(parent, spark, queryName, {
-      streamingTransitions(
-          stream.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-            col("event_id"), col("event_type")).as[TransitionEvent])
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+      queryName: String): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append) { spark =>
+      import spark.implicits._
+      streamingTransitions(graft.Tables.stream(spark, eventsDir, "events")
+          .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+            col("event_id"), col("event_type")).as[TransitionEvent]).toDF()
+    }
 
   final case class WelfordState(n: Long, mean: Double, m2: Double)
   final case class WelfordOut(user_id: Long, n: Long, mean: Double,
@@ -1005,25 +757,10 @@ object EventStreams {
 
   /** Drain-once runner for [[streamingWelford]]. */
   def runStreamingWelfordOnce(parent: SparkSession, eventsDir: String,
-      queryName: String): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    val stream = graft.Tables.normalizeEventTime(
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(eventsDir), "ts")
-    StreamConf.publish(parent, spark, queryName, {
-      streamingWelford(
-          stream.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-            col("event_id"), col("value")).as[MetricEvent])
-        .writeStream.outputMode(OutputMode.Update)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+      queryName: String): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Update) { spark =>
+      streamingWelford(metricEvents(spark, eventsDir)).toDF()
+    }
 
   final case class BurstEvent(user_id: Long, event_type: String,
       ts_us: Long, event_id: Long)
@@ -1058,26 +795,14 @@ object EventStreams {
 
   /** Drain-once runner for [[streamingBurstCollapse]] (5 s gap). */
   def runBurstCollapseOnce(parent: SparkSession, eventsDir: String,
-      queryName: String, gapUs: Long = 5000000L): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    val stream = graft.Tables.normalizeEventTime(
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(eventsDir), "ts")
-    StreamConf.publish(parent, spark, queryName, {
-      streamingBurstCollapse(
-          stream.select(col("user_id"), col("event_type"),
+      queryName: String, gapUs: Long = 5000000L): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append) { spark =>
+      import spark.implicits._
+      streamingBurstCollapse(graft.Tables.stream(spark, eventsDir, "events")
+          .select(col("user_id"), col("event_type"),
             unix_micros(col("ts")).as("ts_us"), col("event_id"))
-            .as[BurstEvent], gapUs)
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+          .as[BurstEvent], gapUs).toDF()
+    }
 
   final case class RateKey(user_id: Long, bucket: Long)
   final case class KeptEvent(user_id: Long, bucket: Long, event_id: Long,
@@ -1122,24 +847,9 @@ object EventStreams {
     * DuckDB oracle. */
   def runRateLimitOnce(parent: SparkSession, eventsDir: String,
       queryName: String, windowUs: Long = 86400L * 1000000L,
-      maxPerWindow: Int = 3): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$eventsDir/events.parquet").schema
-    val stream = graft.Tables.normalizeEventTime(
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(eventsDir), "ts")
-    StreamConf.publish(parent, spark, queryName, {
-      streamingRateLimit(
-          stream.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-            col("event_id"), col("value")).as[MetricEvent],
-          windowUs, maxPerWindow)
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+      maxPerWindow: Int = 3): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append) { spark =>
+      streamingRateLimit(metricEvents(spark, eventsDir), windowUs,
+        maxPerWindow).toDF()
+    }
 }

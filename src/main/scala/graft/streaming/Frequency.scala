@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming heavy hitters: a sharded SpaceSaving sketch
   * (Metwally et al. 2005) as a stateful operator. Keys hash-partition
@@ -87,21 +87,11 @@ object Frequency {
     * and takes the exact top-k. */
   def runStreamingTopUsersOnce(parent: SparkSession, sfDir: String,
       queryName: String, shards: Int = 32,
-      capacity: Int = 4096): StreamingQuery = {
-    val spark = StreamConf.isolated(parent)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    import spark.implicits._
-    val users = spark.readStream.schema(fileSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .select(col("user_id")).as[Long]
-    StreamConf.publish(parent, spark, queryName, {
+      capacity: Int = 4096): StreamingQuery =
+    StreamConf.drainOnce(parent, queryName, OutputMode.Append) { spark =>
+      import spark.implicits._
+      val users = graft.Tables.stream(spark, sfDir, "events")
+        .select(col("user_id")).as[Long]
       spaceSavingSketch(users, shards, capacity).toDF()
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    })
-  }
+    }
 }

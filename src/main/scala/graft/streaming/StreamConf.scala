@@ -1,11 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery,
+  StreamingQueryException, Trigger}
 
-/** Session isolation, shuffle-partition pinning and checkpoint placement
-  * for the drain-once streaming runners (the stateless ones too: their
-  * offset and commit logs are checkpoint files all the same).
+/** The one drain-once path of the streaming runners ([[drainOnce]]) and
+  * the session isolation, shuffle-partition pinning and checkpoint
+  * placement behind it (the stateless runners use it too: their offset
+  * and commit logs are checkpoint files all the same).
   *
   * What a commit costs. Every micro-batch commits as small atomic file
   * writes: an offset-log and a commit-log entry on the driver, and on the
@@ -16,10 +18,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * batch multiplies:
   *  - Stores: the batch session's 32 shuffle partitions are right for
   *    batch shuffles, but a drain-once stream over one input file carries
-  *    tiny per-partition state, so the runners pin 8 (q_stream_join:
-  *    14.2 → 2.8 s when this was introduced). At real scale state VOLUME
-  *    grows and more partitions become right, so `n` is per query, not a
-  *    session default.
+  *    tiny per-partition state, so the isolated session pins
+  *    [[ShufflePartitions]] = 8 for every runner (q_stream_join:
+  *    14.2 → 2.8 s when this was introduced). The parent session's own
+  *    setting is never changed. At real scale state VOLUME grows and
+  *    more partitions become right: a larger constant, since no runner
+  *    needs a count of its own.
   *  - Files: Spark's default manager writes through Hadoop's local
   *    filesystem, which, without libhadoop, starts a `chmod` process per
   *    created file and, through FileContext, a `readlink` process per
@@ -43,7 +47,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * cannot leak a setting outside the allowlist into a stream starting
   * in that window (a full `getAll` snapshot could).
   * Because memory-sink tables are registered in the session that
-  * starts the stream (the clone), [[publish]] drains the query and
+  * starts the stream (the clone), [[drainOnce]] drains the query and
   * re-registers the result under the same name in the parent session;
   * a drained memory-sink table is driver-resident by construction, so
   * the copy moves no data an executor ever held.
@@ -62,6 +66,13 @@ object StreamConf {
     * stays heap because at drain-once fixture scale RocksDB's
     * per-store open/compaction overhead only costs time. */
   val StateStoreKey = "spark.graft.streaming.stateStore"
+
+  /** Shuffle partitions, and so state stores per stateful operator, of
+    * every isolated session. */
+  val ShufflePartitions = 8
+
+  /** How long a drain may take before it is stopped and reported. */
+  val DrainTimeoutMs = 300000L
 
   private val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -127,15 +138,15 @@ object StreamConf {
     * mode, state-store opt-in) is copied from the parent — an
     * allowlist, NOT a `getAll` snapshot, so nothing a concurrent
     * thread transiently set on the shared session can ride along.
-    * Then the shuffle pin and state-store provider are applied on the
-    * new session only, and, unless the deployment names its own, the
-    * checkpoint file manager is [[LocalCheckpointFileManager]].
+    * Then [[ShufflePartitions]] and the state-store provider are applied
+    * on the new session only, and, unless the deployment names its own,
+    * the checkpoint file manager is [[LocalCheckpointFileManager]].
     * `stateStore` is the explicit backend choice
     * (`Some("rocksdb")` → RocksDB); when absent, the parent's
     * `StateStoreKey` conf opt-in still applies (the library-level
-    * switch). Runners set any source-reading conf they need (e.g.
-    * nanos-as-long) on the returned session themselves. */
-  def isolated(parent: SparkSession, n: Int = 8,
+    * switch). Source-reading conf (nanos-as-long for `events`) is set
+    * by `graft.Tables.stream` on the session it reads with. */
+  def isolated(parent: SparkSession,
       stateStore: Option[String] = None): SparkSession = {
     val s = parent.newSession()
     InheritedConf.foreach { k =>
@@ -143,7 +154,7 @@ object StreamConf {
         if (s.conf.getOption(k) != Some(v)) s.conf.set(k, v)
       }
     }
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
+    s.conf.set("spark.sql.shuffle.partitions", ShufflePartitions.toString)
     // drain-once checkpoints are ephemeral: default them to tmpfs (per
     // isolated session; each query checkpoints under <root>/<queryName>)
     if (s.conf.getOption("spark.sql.streaming.checkpointLocation").isEmpty)
@@ -160,36 +171,49 @@ object StreamConf {
     s
   }
 
-  /** Await an AvailableNow drain of `q` (started on `child`) and FAIL
-    * LOUDLY if it died or hung, then re-register the child's
-    * memory-sink table `queryName` as a parent-session temp view so
-    * gates read it from the session they hold. However the query ends,
-    * the state stores it loaded are unloaded here
-    * ([[org.apache.spark.sql.GraftStateStoreBridge]]) rather than left
-    * to Spark's maintenance task a minute later: each kept its checkpoint
-    * file manager and thread pool (128 threads per q_stream_join run)
-    * and the heap behind them. Returns the terminated query (callers'
-    * `drained(q)` re-check is a no-op). */
-  def publish(parent: SparkSession, child: SparkSession,
-      queryName: String, q: StreamingQuery,
-      timeoutMs: Long = 300000): StreamingQuery = {
-    try awaitDrain(q, timeoutMs)
+  /** Drain one query into the memory table `queryName` of `parent`.
+    * `build` makes the query's frame on a fresh [[isolated]] session
+    * (`stateStore` as there); its rows land in a memory sink under
+    * `mode` with an AvailableNow trigger. The drain is awaited and FAILS
+    * LOUDLY if the query died or hung ([[awaitDrain]]); however it ends,
+    * the state stores the query loaded are unloaded here
+    * ([[org.apache.spark.sql.GraftStateStoreBridge]]) rather than left to
+    * Spark's maintenance task a minute later: each kept its checkpoint
+    * file manager and thread pool (128 threads per q_stream_join run) and
+    * the heap behind them. Then the sink table is re-registered as a
+    * temp view of `parent`, so gates read it from the session they hold.
+    * `checkpointDir` pins the query's checkpoint for a caller that reads
+    * it back; by default it goes under the session's ephemeral root.
+    * Returns the terminated query. */
+  def drainOnce(parent: SparkSession, queryName: String, mode: OutputMode,
+      stateStore: Option[String] = None,
+      checkpointDir: Option[String] = None)(
+      build: SparkSession => DataFrame): StreamingQuery = {
+    val child = isolated(parent, stateStore)
+    val writer = build(child).writeStream.outputMode(mode)
+      .format("memory").queryName(queryName)
+      .trigger(Trigger.AvailableNow())
+    val q = checkpointDir.fold(writer)(d =>
+      writer.option("checkpointLocation", d)).start()
+    try awaitDrain(q)
     finally org.apache.spark.sql.GraftStateStoreBridge.unloadStores(q)
     // re-bind the sink's (driver-resident) plan to the parent session
     // instead of collectAsList + createDataFrame: same rows, same
     // driver residency, but no O(rows) Row copy + re-encode on the
     // gate's clock (q_stream_merge drains 142k rows at sf0.1)
-    val out = child.table(queryName)
     org.apache.spark.sql.GraftExpressionBridge
-      .ofLogical(parent, out.queryExecution.analyzed)
+      .ofLogical(parent, child.table(queryName).queryExecution.analyzed)
       .createOrReplaceTempView(queryName)
     q
   }
 
   /** Await an AvailableNow drain of `q`; throw if it failed, or stop it
     * and throw if it did not finish within `timeoutMs`. */
-  def awaitDrain(q: StreamingQuery, timeoutMs: Long): Unit = {
-    val done = q.awaitTermination(timeoutMs)
+  def awaitDrain(q: StreamingQuery, timeoutMs: Long = DrainTimeoutMs): Unit = {
+    // awaitTermination rethrows a failed query's exception; the failure
+    // is reported below with the query's name
+    val done = try q.awaitTermination(timeoutMs)
+      catch { case _: StreamingQueryException => true }
     q.exception.foreach { e =>
       throw new IllegalStateException(
         s"streaming query '${q.name}' failed: ${e.message}", e)

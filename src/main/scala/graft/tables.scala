@@ -90,26 +90,52 @@ object Tables {
 
   private def loadUncached(spark: SparkSession, dir: String,
       name: String): DataFrame = {
-    // events.ts has shipped in THREE parquet flavors across testdata
-    // generations: TIMESTAMP(NANOS) (vanilla Spark rejects it — read
-    // nanos as long and truncate to micros, the same truncation DuckDB
-    // applies), TIMESTAMP(MICROS) isAdjustedToUTC=false (Spark reads
-    // TIMESTAMP_NTZ, which watermarks and unix_micros reject), and plain
-    // UTC-adjusted micros. A 100 TB lake contains all three, so the
-    // loader normalizes every flavor to TimestampType here — under the
-    // engine's session-UTC convention the NTZ cast is lossless.
-    // The nanos flag has no per-read option, so it must be a session
-    // conf; set it only for the one table that needs it (consulted at
-    // scan time too, so it cannot be unset after planning) — loading any
-    // other table leaves session state untouched.
+    setReadConf(spark, name)
+    normalize(name, spark.read.parquet(s"$dir/$name.parquet"))
+  }
+
+  /** The streaming twin of [[load]]: `name` read from `dir` as a file
+    * stream, with the same session conf and the same normalization, so
+    * the batch and streaming reads of a table have one schema. The file
+    * stream source needs a directory, so it reads `dir` glob-filtered to
+    * the table's file. Reads the file schema once per call; see
+    * [[streamReader]] for several sources over one table. */
+  def stream(spark: SparkSession, dir: String, name: String): DataFrame =
+    streamReader(spark, dir, name)()
+
+  /** [[stream]] for a query that reads one table as several independent
+    * sources (the two sides of a stream-stream join, the branches of a
+    * change feed): the file schema is read once, here, and every call of
+    * the returned function starts a new source over it. */
+  def streamReader(spark: SparkSession, dir: String,
+      name: String): () => DataFrame = {
+    setReadConf(spark, name)
+    val schema = spark.read.parquet(s"$dir/$name.parquet").schema
+    () => normalize(name, spark.readStream.schema(schema)
+      .option("pathGlobFilter", s"$name.parquet").parquet(dir))
+  }
+
+  // events.ts has shipped in THREE parquet flavors across testdata
+  // generations: TIMESTAMP(NANOS) (vanilla Spark rejects it — read
+  // nanos as long and truncate to micros, the same truncation DuckDB
+  // applies), TIMESTAMP(MICROS) isAdjustedToUTC=false (Spark reads
+  // TIMESTAMP_NTZ, which watermarks and unix_micros reject), and plain
+  // UTC-adjusted micros. A 100 TB lake contains all three, so the
+  // loaders normalize every flavor to TimestampType — under the
+  // engine's session-UTC convention the NTZ cast is lossless.
+  // The nanos flag has no per-read option, so it must be a session
+  // conf; set it only for the one table that needs it (consulted at
+  // scan time too, so it cannot be unset after planning) — reading any
+  // other table leaves session state untouched.
+  private def setReadConf(spark: SparkSession, name: String): Unit =
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+
+  private def normalize(name: String, df: DataFrame): DataFrame =
     if (name == "events" && df.schema("ts").dataType == LongType)
       // integral `div`, not `/`: nano ticks exceed double's 53-bit mantissa
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else normalizeNtz(df)
-  }
 
   /** Cast every TIMESTAMP_NTZ column to TimestampType — lossless under
     * the session-UTC convention every graft session sets, and required
@@ -121,9 +147,9 @@ object Tables {
     ntz.foldLeft(df)((d, c) => d.withColumn(c, col(c).cast(TimestampType)))
   }
 
-  /** Normalize an event-time column read straight from parquet (the
-    * streaming runners build their own readStream scans, so they cannot
-    * go through [[load]]): legacy nanos-as-long → micros timestamps; NTZ
+  /** Normalize an event-time column of a frame that did not come from
+    * [[load]] or [[stream]] (the event-time operators accept any
+    * parquet flavor): legacy nanos-as-long → micros timestamps; NTZ
     * → session-zone timestamps; UTC-adjusted micros pass through. */
   def normalizeEventTime(df: DataFrame, c: String): DataFrame =
     df.schema(c).dataType match {

@@ -48,8 +48,10 @@ object QueryProfile {
     if (jobTrace) spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          // Spark 4.1 puts no call site in the job properties; the final
+          // stage carries it ("count at Foo.scala:12")
           jobTimes.put(js.jobId, (System.nanoTime(),
-            Option(js.properties).map(_.getProperty("callSite.short", "?")).getOrElse("?")))
+            js.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?")))
         override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
           val st = jobTimes.remove(je.jobId)
           if (st != null) println(f"[job] ${je.jobId}%4d ${(System.nanoTime() - st._1) / 1e9}%6.2f s  ${st._2}")

@@ -34,6 +34,20 @@ class EventStreamsSpec extends AnyFunSuite {
   }
 
   for (flavor <- Seq("ltz", "ntz"))
+  test(s"[$flavor] the streaming read of events has the batch read's schema") {
+    val dir = flavorDirs(flavor)
+    val streamed = graft.Tables.stream(spark, dir, "events")
+    assert(streamed.isStreaming)
+    assert(streamed.schema == graft.Tables.load(spark, dir, "events").schema)
+  }
+
+  test("the streaming read of documents has the batch read's schema") {
+    val dir = "perfbench/data/sf0.01"
+    assert(graft.Tables.stream(spark, dir, "documents").schema ==
+      graft.Tables.load(spark, dir, "documents").schema)
+  }
+
+  for (flavor <- Seq("ltz", "ntz"))
   test(s"[$flavor] streaming windowed counts match the batch equivalent") {
     import org.apache.spark.sql.functions._
     val dir = flavorDirs(flavor)
@@ -280,7 +294,7 @@ class EventStreamsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val dir = flavorDirs(flavor)
     val q = EventStreams.runStreamStreamJoinOnce(spark, dir, s"ssj_spec_$flavor")
-    graft.queries.StreamingQueries.drained(q, timeoutMs = 120000)
+    StreamConf.awaitDrain(q, timeoutMs = 120000)
     val streamed = spark.table(s"ssj_spec_$flavor")
       .select("user_id", "view_id", "click_id", "gap_us")
     val ev = graft.Tables.load(spark, dir, "events")
@@ -298,7 +312,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val dir = flavorDirs(flavor)
     val q = EventStreams.runStreamStreamLeftJoinOnce(spark, dir,
       s"oj_$flavor")
-    graft.queries.StreamingQueries.drained(q, timeoutMs = 180000)
+    StreamConf.awaitDrain(q, timeoutMs = 180000)
     val streamed = spark.table(s"oj_$flavor")
       .select("user_id", "view_id", "click_id", "gap_us")
 
@@ -334,7 +348,7 @@ class EventStreamsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val dir = flavorDirs(flavor)
     val q = EventStreams.runChainedAggOnce(spark, dir, s"chained_$flavor")
-    graft.queries.StreamingQueries.drained(q, timeoutMs = 180000)
+    StreamConf.awaitDrain(q, timeoutMs = 180000)
     val streamed = spark.table(s"chained_$flavor")
       .select("day_start", "event_type", "max_hourly", "sum_n", "n_hours")
     val ev = graft.Tables.normalizeEventTime(
@@ -363,12 +377,12 @@ class EventStreamsSpec extends AnyFunSuite {
     val data = new java.io.File(root, "data").getAbsolutePath
     val chk = new java.io.File(root, "chk").getAbsolutePath
     val q1 = EventStreams.runForeachBatchSinkOnce(spark, dir, data, chk)
-    graft.queries.StreamingQueries.drained(q1, timeoutMs = 180000)
+    StreamConf.awaitDrain(q1, timeoutMs = 180000)
     val after1 = spark.read.parquet(data).count()
     // same checkpoint, same source: the batch ids are already committed,
     // so the re-run must land NOTHING new
     val q2 = EventStreams.runForeachBatchSinkOnce(spark, dir, data, chk)
-    graft.queries.StreamingQueries.drained(q2, timeoutMs = 180000)
+    StreamConf.awaitDrain(q2, timeoutMs = 180000)
     val after2 = spark.read.parquet(data).count()
     assert(after1 > 0 && after2 == after1,
       s"checkpointed re-run re-emitted rows: $after1 -> $after2")
@@ -426,7 +440,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val dir = flavorDirs(flavor)
     val q = EventStreams.runStreamingFunnelOnce(spark, dir,
       s"funnel_drain_$flavor")
-    graft.queries.StreamingQueries.drained(q, timeoutMs = 120000)
+    StreamConf.awaitDrain(q, timeoutMs = 120000)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("reach").desc)
     val streamed = spark.table(s"funnel_drain_$flavor")
@@ -451,7 +465,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val dir = flavorDirs(flavor)
     val q = EventStreams.runSessionWindowOnce(spark, dir,
       s"sesswin_$flavor")
-    graft.queries.StreamingQueries.drained(q, timeoutMs = 120000)
+    StreamConf.awaitDrain(q, timeoutMs = 120000)
     val streamed = spark.table(s"sesswin_$flavor")
       .select("user_id", "start_us", "end_us", "n")
     import spark.implicits._
@@ -491,7 +505,7 @@ class EventStreamsSpec extends AnyFunSuite {
 
     val q = EventStreams.runSessionWindowOnce(spark, dir.getAbsolutePath,
       "sesswin_boundary", gapUs = gapUs)
-    graft.queries.StreamingQueries.drained(q, timeoutMs = 120000)
+    StreamConf.awaitDrain(q, timeoutMs = 120000)
     val got = spark.table("sesswin_boundary")
       .select("user_id", "start_us", "end_us", "n")
       .as[(Long, Long, Long, Long)].collect().toSet
@@ -514,7 +528,7 @@ class EventStreamsSpec extends AnyFunSuite {
       val dir = flavorDirs("ltz")
       val q = EventStreams.runStreamingDedupBoundedOnce(spark, dir,
         "rocksdb_dedup_spec")
-      graft.queries.StreamingQueries.drained(q, timeoutMs = 120000)
+      StreamConf.awaitDrain(q, timeoutMs = 120000)
       // prove RocksDB actually carried the state: its progress reports
       // rocksdb-specific custom metrics the heap store never emits
       val metrics = q.recentProgress.flatMap(_.stateOperators)
@@ -567,9 +581,9 @@ class EventStreamsSpec extends AnyFunSuite {
   }
 
   test("gate drain helper fails loudly on a stream that does not terminate") {
-    // a rate source on a ProcessingTime trigger never drains; the gate
-    // helper must throw (and stop the query) instead of letting a caller
-    // read a stale sink table
+    // a rate source on a ProcessingTime trigger never drains; the drain
+    // check every runner ends with must throw (and stop the query)
+    // instead of letting a caller read a stale sink table
     val q = spark.readStream.format("rate")
       .option("rowsPerSecond", "1").load()
       .writeStream.format("memory").queryName("hung_fixture")
@@ -577,7 +591,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .start()
     try {
       val e = intercept[IllegalStateException] {
-        graft.queries.StreamingQueries.drained(q, timeoutMs = 2000)
+        StreamConf.awaitDrain(q, timeoutMs = 2000)
       }
       assert(e.getMessage.contains("did not drain"), e.getMessage)
       assert(!q.isActive, "helper must stop the hung query")

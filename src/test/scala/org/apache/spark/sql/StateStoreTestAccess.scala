@@ -8,4 +8,8 @@ object StateStoreTestAccess {
   /** How many of `q`'s state stores are loaded in this JVM. */
   def loadedStores(q: StreamingQuery): Int =
     GraftStateStoreBridge.storeIds(q).count(StateStore.isLoaded)
+
+  /** How many state stores `q`'s stateful operators can have loaded. */
+  def knownStores(q: StreamingQuery): Int =
+    GraftStateStoreBridge.storeIds(q).size
 }
